@@ -63,6 +63,17 @@ _SCHEMA_FILE = "_schema.json"
 _META_FILE = "_meta.json"
 _MANIFEST_FILE = "_manifest.json"
 DEFAULT_NUM_BUCKETS = 16
+# posting artifact columns; term_bucket is the partition directory
+_POSTINGS_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.StringType()),
+        T.StructField("term", T.StringType()),
+        T.StructField("tf", T.LongType()),
+        T.StructField("doc_len", T.IntegerType()),
+        T.StructField("df", T.LongType()),
+        T.StructField("term_bucket", T.IntegerType()),
+    ]
+)
 
 
 class DuplicatePointError(ValueError):
@@ -408,49 +419,76 @@ class Collection:
 
         The index is version-pinned: a later insert/update/delete writes a
         new snapshot and search falls back to ad-hoc scoring until the index
-        is rebuilt (batch-first index maintenance, SURVEY.md §2.2 W6)."""
-        from .operators.text_search import build_text_index as _build
+        is rebuilt or rolled forward (:meth:`refresh_text_index`)."""
+        from .operators.text_search import doc_term_freqs
 
         props = (
             [prop] if prop else [p for p, v in self.schema.items() if v.type == "text"]
         )
-        from .functions.hashing import md5_hash64
-        from .operators.text_search import TERM_BUCKETS
-
         stats: dict[str, int] = {}
         for p in props:
             if self.schema[p].type != "text":
                 raise ValueError(f"property {p} is not a text index")
-            path = self._index_path(p)
-            # term-hash partitioned layout: a query's isin(term) filter
-            # prunes to <= |query terms| of the TERM_BUCKETS directories
-            (
-                _build(self.df(), p)
-                .withColumn(
-                    "term_bucket",
-                    F.pmod(md5_hash64(F.col("term")), F.lit(TERM_BUCKETS)),
-                )
-                .repartition("term_bucket")
-                # lead with the partition column: partitionBy's writer
-                # re-sorts by its partition columns with an unstable sort,
-                # which would destroy a term-only ordering; sorted this way
-                # the writer's sort is a no-op and term row-group stats
-                # survive to prune isin(term) scans
-                .sortWithinPartitions("term_bucket", "term")
-                .write.mode("overwrite")
-                # small row groups: single-query serving decodes whole row
-                # groups, so group size IS the per-term read cost
-                .option("parquet.block.size", 1024 * 1024)
-                .partitionBy("term_bucket")
-                .parquet(path)
+            stats[p], _ = self._write_postings(
+                doc_term_freqs(self.df(), p), self._index_path(p)
             )
-            n = self.spark.read.parquet(path).select("id").distinct().count()
-            # leading underscore: ignored by parquet directory listings
-            with open(os.path.join(path, "_num_docs.json"), "w") as f:
-                json.dump({"num_docs": n}, f)
-            stats[p] = n
         self._invalidate_engine()
         return stats
+
+    def _write_postings(
+        self, doc_terms: DataFrame, path: str, marked: Column | None = None
+    ) -> tuple[int, int]:
+        """The one postings writer behind :meth:`build_text_index` and
+        :meth:`refresh_text_index`: ``doc_terms(id, term, tf, doc_len)`` ->
+        the term-hash partitioned artifact at ``path`` with the corpus
+        ``df`` denormalized onto every row, plus ``_num_docs.json``.
+        Returns ``(num_docs, rows matching marked)``.
+
+        One shuffle: the rows are hash-partitioned on ``term_bucket``, which
+        already satisfies the ``df`` window over (term_bucket, term), and the
+        window's sort leaves each bucket term-ordered for the writer. A
+        query's isin(term) filter then prunes to <= |query terms| of the
+        TERM_BUCKETS directories, and term row-group statistics prune inside
+        each file."""
+        from pyspark.sql import Window
+
+        from .functions.hashing import md5_hash64
+        from .operators.text_search import TERM_BUCKETS
+
+        (
+            doc_terms.withColumn(
+                "term_bucket",
+                F.pmod(md5_hash64(F.col("term")), F.lit(TERM_BUCKETS)).cast("int"),
+            )
+            .repartition("term_bucket")
+            .withColumn(
+                "df", F.count("*").over(Window.partitionBy("term_bucket", "term"))
+            )
+            .select(*_POSTINGS_SCHEMA.names)
+            # lead with the partition column: partitionBy's writer re-sorts
+            # by its partition columns with an unstable sort, which would
+            # destroy a term-only ordering; sorted this way the writer's
+            # sort is a no-op and term row-group stats survive
+            .sortWithinPartitions("term_bucket", "term")
+            .write.mode("overwrite")
+            # small row groups: single-query serving decodes whole row
+            # groups, so group size IS the per-term read cost
+            .option("parquet.block.size", 1024 * 1024)
+            .partitionBy("term_bucket")
+            .parquet(path)
+        )
+        marked = F.lit(False) if marked is None else marked
+        row = (
+            self.spark.read.schema(_POSTINGS_SCHEMA)
+            .parquet(path)
+            .agg(F.count_distinct("id"), F.count_if(marked))
+            .first()
+        )
+        num_docs, n_marked = int(row[0]), int(row[1])
+        # leading underscore: ignored by parquet directory listings
+        with open(os.path.join(path, "_num_docs.json"), "w") as f:
+            json.dump({"num_docs": num_docs}, f)
+        return num_docs, n_marked
 
     def open_text_pool(self, prop: str, workers: int = 8):
         """Open a process-parallel serving pool over this collection's
@@ -479,28 +517,24 @@ class Collection:
 
     def refresh_text_index(self, prop: str) -> int:
         """W6 incremental maintenance: roll the latest text index forward to
-        the current snapshot WITHOUT re-tokenizing the corpus (the reference
-        maintains posting sets transactionally on every write,
-        shard/index/dispatch.go:33-110 + text.go:151-258; batch-first here).
+        the current snapshot, re-tokenizing only the documents that changed
+        (the reference maintains posting sets transactionally on every
+        write, shard/index/dispatch.go:33-110 + text.go:151-258; batch-first
+        here).
 
-        The bucket manifests name exactly the data that changed since the
-        index's snapshot: only dirty-bucket documents are re-tokenized.
-        Clean postings keep their (tf, doc_len); the denormalized per-term
-        ``df`` column shifts only for terms present in the dirty documents'
-        OLD or NEW postings — that delta set is bounded by the dirty batch's
-        vocabulary (DML batches are <=100 points in the reference), so the
-        df fix-up is a broadcast map-side join, never a corpus shuffle.
-        Deleted docs fall out naturally: a dirty bucket's postings are
-        replaced wholesale by the current snapshot's content, and their
-        terms' df decrements ride the same delta. The artifact is rewritten
-        (O(index) map-side IO, O(dirty + affected-term postings) compute);
-        rewriting only the affected term_bucket partitions via dynamic
-        partition overwrite is the next step at 100 TB. Returns the number
-        of fresh posting rows."""
+        The bucket manifests name exactly the data buckets that changed
+        since the index's snapshot. The old postings of the clean buckets
+        keep their (tf, doc_len); the dirty buckets' documents are
+        re-tokenized from the current snapshot, so updates and deletes fall
+        out naturally. Both halves go through the same postings writer as
+        :meth:`build_text_index`: one shuffle of the postings recomputes
+        every term's ``df``, and the artifact has the build's layout
+        (term-sorted buckets, 1 MB row groups) and equals a from-scratch
+        rebuild row for row. Returns the number of re-tokenized posting
+        rows."""
         import re
 
-        from .functions.hashing import md5_hash64
-        from .operators.text_search import TERM_BUCKETS, doc_term_freqs
+        from .operators.text_search import doc_term_freqs
 
         if self.schema[prop].type != "text":
             raise ValueError(f"property {prop} is not a text index")
@@ -519,10 +553,6 @@ class Collection:
             raise ValueError(f"no text index found for property {prop}; build first")
         if indexed_v == cur:
             return 0
-        old_path = self._index_path(prop, indexed_v)
-        old = self.spark.read.parquet(old_path).drop("term_bucket")
-        with open(os.path.join(old_path, "_num_docs.json")) as f:
-            old_n = json.load(f)["num_docs"]
         old_manifest = self._manifest(indexed_v)
         cur_manifest = self._manifest(cur)
         dirty = sorted(
@@ -530,60 +560,17 @@ class Collection:
             for b in set(old_manifest) | set(cur_manifest)
             if old_manifest.get(b) != cur_manifest.get(b)
         )
-        if not dirty:
-            merged, n_fresh, removed, added = old, 0, 0, 0
-        else:
-            is_dirty = self._bucket_expr(F.col("id")).isin(dirty)
-            old_clean = old.filter(~is_dirty)
-            old_dirty = old.filter(is_dirty)
-            fresh = doc_term_freqs(
-                self._read_buckets(dirty).select(F.col("_id"), F.col(prop)),
-                prop,
-                "_id",
-            )
-            # per-term df delta over the affected vocabulary only
-            neg = old_dirty.groupBy("term").agg((-F.count("*")).alias("d"))
-            pos = fresh.groupBy("term").agg(F.count("*").alias("d"))
-            delta = pos.unionByName(neg).groupBy("term").agg(F.sum("d").alias("delta"))
-            old_term_df = (
-                old.join(F.broadcast(delta.select("term")), "term", "left_semi")
-                .groupBy("term")
-                .agg(F.first("df").alias("old_df"))
-            )
-            term_df = F.broadcast(
-                delta.join(old_term_df, "term", "left").select(
-                    "term",
-                    (F.coalesce(F.col("old_df"), F.lit(0)) + F.col("delta")).alias(
-                        "new_df"
-                    ),
-                )
-            )
-            cols = ["id", "term", "tf", "doc_len", "df"]
-            clean_adj = (
-                old_clean.join(term_df, "term", "left")
-                .withColumn("df", F.coalesce("new_df", "df"))
-                .select(*cols)
-            )
-            fresh_adj = (
-                fresh.join(term_df, "term", "left")
-                .withColumn("df", F.coalesce("new_df", F.lit(1)))
-                .select(*cols)
-            )
-            merged = clean_adj.unionByName(fresh_adj)
-            n_fresh = fresh.count()
-            removed = old_dirty.select("id").distinct().count()
-            added = fresh.select("id").distinct().count()
-        new_path = self._index_path(prop, cur)
-        (
-            merged.withColumn(
-                "term_bucket", F.pmod(md5_hash64(F.col("term")), F.lit(TERM_BUCKETS))
-            )
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(new_path)
+        is_dirty = self._bucket_expr(F.col("id")).isin(dirty)
+        clean = (
+            self.spark.read.schema(_POSTINGS_SCHEMA)
+            .parquet(self._index_path(prop, indexed_v))
+            .filter(~is_dirty)
+            .select("id", "term", "tf", "doc_len")
         )
-        with open(os.path.join(new_path, "_num_docs.json"), "w") as f:
-            json.dump({"num_docs": old_n - removed + added}, f)
+        fresh = doc_term_freqs(self._read_buckets(dirty), prop)
+        _, n_fresh = self._write_postings(
+            clean.unionByName(fresh), self._index_path(prop, cur), marked=is_dirty
+        )
         self._invalidate_engine()
         return n_fresh
 
@@ -1716,7 +1703,7 @@ class Collection:
                 continue
             path = self._index_path(p)
             if os.path.exists(os.path.join(path, "_SUCCESS")):
-                idxs[p] = self.spark.read.parquet(path)
+                idxs[p] = self.spark.read.schema(_POSTINGS_SCHEMA).parquet(path)
                 with open(os.path.join(path, "_num_docs.json")) as f:
                     stats[p] = json.load(f)["num_docs"]
         return idxs, stats

@@ -1,14 +1,64 @@
-"""Shared plumbing for the process-parallel point-read serving pools.
+"""Shared plumbing for the point-read serving tiers and their process pools.
 
 Both serving pools (:class:`~semadb_spark.operators.text_search.TextServePool`
 and :class:`~semadb_spark.operators.vamana.VectorServePool`) deploy the same
 shape: N worker processes point-reading one IMMUTABLE on-disk artifact, the
 Python twin of the reference's one-goroutine-per-request serving over shared
 shard state (shard/shard.go:329-472). The start-method policy and executor
-construction live here so the two pools cannot drift.
+construction live here so the two pools cannot drift, as does the artifact
+fingerprint cache both driver-local tiers key their handle caches on.
 """
 
 from __future__ import annotations
+
+import threading
+import time
+
+_FP_LOCK = threading.Lock()
+_FP_REFRESHING: set[str] = set()
+
+
+def cached_fingerprint(cache: dict, path: str, ttl: float, walk) -> int:
+    """Stale-while-revalidate artifact fingerprint. ``cache`` maps
+    ``path -> (monotonic time, fingerprint)`` and ``walk(path)`` computes a
+    fresh one (a listing walk, ~5 ms on a 64-bucket text index, ~100 ms on a
+    3000-file packed vector artifact).
+
+    Only the first call for a path walks synchronously. Within ``ttl`` the
+    cached value is returned as is; once it lapses the caller still gets the
+    last value at once and one daemon thread re-walks the listing, so the
+    walk never lands in a request's latency (at a 1 s TTL it was the p99
+    tail). The check-and-start runs under a lock, so concurrent callers on a
+    lapsed entry start exactly one refresh; a thread that fails to start
+    leaves the path free for the next caller to retry."""
+    hit = cache.get(path)
+    if hit is None:
+        fp = walk(path)
+        cache[path] = (time.monotonic(), fp)
+        return fp
+    if time.monotonic() - hit[0] < ttl:
+        return hit[1]
+    with _FP_LOCK:
+        if path in _FP_REFRESHING:
+            return hit[1]
+        _FP_REFRESHING.add(path)
+
+    def _refresh() -> None:
+        try:
+            cache[path] = (time.monotonic(), walk(path))
+        finally:
+            with _FP_LOCK:
+                _FP_REFRESHING.discard(path)
+
+    try:
+        threading.Thread(
+            target=_refresh, daemon=True, name=f"fp-refresh:{path}"
+        ).start()
+    except BaseException:
+        with _FP_LOCK:
+            _FP_REFRESHING.discard(path)
+        raise
+    return hit[1]
 
 
 def choose_start_method() -> str:

@@ -271,49 +271,7 @@ def text_serve(
 _LOCAL_DATASET_CACHE: dict[str, tuple[int, object]] = {}
 _LOCAL_RG_INDEX_CACHE: dict[tuple[str, int], tuple[int, object]] = {}
 _FP_AT: dict[str, tuple[float, int]] = {}
-_FP_REFRESHING: set[str] = set()
 _FP_TTL_SEC = 1.0
-
-
-def _artifact_fingerprint_cached(index_path: str, ttl: float) -> int:
-    """TTL-cached artifact fingerprint — same contract the vector tier
-    adopted in r9 (vamana._local_decoded_cents): a rebuild is picked up
-    within ~``ttl`` seconds, far inside any artifact-rotation window, and
-    the listing walk (measured ~5 ms on a 64-bucket index, paid TWICE per
-    query via the dataset + row-group caches) amortizes instead of taxing
-    every point-read.
-
-    r14 (VERDICT r13 directive #5, applied to both serving tiers): the
-    refresh is STALE-WHILE-REVALIDATE — once the TTL lapses, the query
-    thread returns the last fingerprint immediately and a daemon thread
-    re-walks the listing, so the walk never lands in a request's latency
-    (it was the p99 tail: at a 1 s TTL one query per second paid the whole
-    walk synchronously). Staleness bound is ~ttl + walk time instead of
-    ttl; only the very first query of a process walks synchronously."""
-    import threading
-    import time as _time
-
-    now = _time.monotonic()
-    hit = _FP_AT.get(index_path)
-    if hit is not None:
-        if now - hit[0] >= ttl and index_path not in _FP_REFRESHING:
-            _FP_REFRESHING.add(index_path)
-
-            def _refresh() -> None:
-                try:
-                    fp = _artifact_fingerprint(index_path)
-                    _FP_AT[index_path] = (_time.monotonic(), fp)
-                finally:
-                    _FP_REFRESHING.discard(index_path)
-
-            threading.Thread(
-                target=_refresh, daemon=True,
-                name=f"fp-refresh:{index_path}",
-            ).start()
-        return hit[1]
-    fp = _artifact_fingerprint(index_path)
-    _FP_AT[index_path] = (now, fp)
-    return fp
 
 
 def _artifact_fingerprint(index_path: str) -> int:
@@ -468,9 +426,15 @@ def text_serve_local(
     import pyarrow.dataset as pads
 
     from semadb_spark.functions.hashing import md5_hash64_py
+    from semadb_spark.operators._pool import cached_fingerprint
 
-    fp = _artifact_fingerprint_cached(
-        index_path, _FP_TTL_SEC if fp_ttl_sec is None else fp_ttl_sec
+    # TTL-cached: a rebuild is picked up within ~ttl, far inside any
+    # artifact-rotation window, while the listing walk (paid by both the
+    # dataset and the row-group caches) amortizes across point-reads
+    fp = cached_fingerprint(
+        _FP_AT, index_path,
+        _FP_TTL_SEC if fp_ttl_sec is None else fp_ttl_sec,
+        _artifact_fingerprint,
     )
     hit = _LOCAL_DATASET_CACHE.get(index_path)
     if hit is not None and hit[0] == fp:

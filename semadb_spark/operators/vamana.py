@@ -2228,7 +2228,6 @@ def vamana_serve_packed(
 
 _LOCAL_PACKED_CACHE: dict[str, tuple[tuple, dict]] = {}
 _LOCAL_PACKED_FP_AT: dict[str, tuple[float, int]] = {}
-_FP_REFRESHING: set[str] = set()
 _FP_TTL_SEC = 1.0
 
 
@@ -2272,9 +2271,9 @@ def _local_decoded_cents(path: str, cents_needed: list[int], np_dtype,
     FIFO-evicts whole cent entries past ``max_cached_cents`` (a hot
     serving node keeps its working set decoded, exactly like the
     reference's shard decode cache, cache/manager.go:39-303)."""
-    import time as _time
-
     import pyarrow.dataset as pads
+
+    from semadb_spark.operators._pool import cached_fingerprint
 
     # fingerprint with a short TTL: the listing walk costs ~100 ms on a
     # 3000-file 10M artifact — paying it per POINT-READ was 73% of the
@@ -2283,37 +2282,11 @@ def _local_decoded_cents(path: str, cents_needed: list[int], np_dtype,
     # holding the immutable-artifact contract (VectorServePool workers)
     # pass a LONG fp_ttl_sec: at the 1 s default a pool worker re-walked
     # the listing every ~55 queries — measured ~10% of mp16 throughput.
-    if fp_ttl_sec is None:
-        fp_ttl_sec = _FP_TTL_SEC
-    now = _time.monotonic()
-    cached_at = _LOCAL_PACKED_FP_AT.get(path)
-    if cached_at is not None:
-        # r14 (VERDICT r13 directive #5): stale-while-revalidate — a lapsed
-        # TTL returns the last fingerprint immediately and refreshes the
-        # ~100 ms listing walk (3000-file 10M artifact) on a daemon thread,
-        # so the walk never lands inside a point-read (it WAS the p99 tail:
-        # at the 1 s TTL one query per second paid it synchronously).
-        # Staleness bound ~ttl + walk instead of ttl; the first query of a
-        # process still walks synchronously.
-        if now - cached_at[0] >= fp_ttl_sec and path not in _FP_REFRESHING:
-            import threading
-
-            _FP_REFRESHING.add(path)
-
-            def _refresh() -> None:
-                try:
-                    new_fp = _packed_artifact_fingerprint(path)
-                    _LOCAL_PACKED_FP_AT[path] = (_time.monotonic(), new_fp)
-                finally:
-                    _FP_REFRESHING.discard(path)
-
-            threading.Thread(
-                target=_refresh, daemon=True, name=f"fp-refresh:{path}"
-            ).start()
-        fp = cached_at[1]
-    else:
-        fp = _packed_artifact_fingerprint(path)
-        _LOCAL_PACKED_FP_AT[path] = (now, fp)
+    fp = cached_fingerprint(
+        _LOCAL_PACKED_FP_AT, path,
+        _FP_TTL_SEC if fp_ttl_sec is None else fp_ttl_sec,
+        _packed_artifact_fingerprint,
+    )
     key = (fp, str(c_dtype))
     hit = _LOCAL_PACKED_CACHE.get(path)
     if hit is None or hit[0] != key:
@@ -2977,8 +2950,8 @@ class VectorServePool:
             # queries — measured ~10% of mp16 throughput)
             fp_ttl_sec=300.0,
             # throughput tier: the pool already runs one process per core,
-            # so intra-query shard threads would only oversubscribe (r14;
-            # the 1-client latency tier keeps the default auto threads)
+            # so intra-query shard threads would only oversubscribe (r14).
+            # This matches the default, which is sequential everywhere.
             shard_threads=1,
         )
         # one single-process executor per worker: dispatch must target the

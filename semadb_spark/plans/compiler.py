@@ -1056,7 +1056,7 @@ class SearchEngine:
             for p in select:
                 if "." in p:
                     roots.setdefault(p.split(".", 1)[0], []).append(p)
-                else:
+                elif p != self.id_col:  # the id always leads, once
                     cols.append(F.col(p))
             for root, paths in roots.items():
                 # re-nest dotted selects: {"nested": {"field": v}} (shard.go:431-448)

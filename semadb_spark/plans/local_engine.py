@@ -1301,7 +1301,7 @@ class LocalSearchEngine:
             for p in select:
                 if "." in p:
                     roots.setdefault(p.split(".", 1)[0], []).append(p)
-                else:
+                elif p != self.id_col:  # the id always leads, once
                     keep.append(p)
             final = out[[c for c in keep if c in out.columns]].copy()
             for root, paths in roots.items():

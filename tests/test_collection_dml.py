@@ -717,12 +717,36 @@ def test_serving_engine_cache_reuse_and_invalidation(spark, tmp_path):
     assert tcoll._engine_cache is not eng2
 
 
+def _postings(spark, path):
+    cols = ["id", "term", "tf", "doc_len", "df"]
+    return sorted(map(tuple, spark.read.parquet(path).select(*cols).collect()))
+
+
+def _num_docs(path):
+    import json
+    import os
+
+    with open(os.path.join(path, "_num_docs.json")) as f:
+        return json.load(f)["num_docs"]
+
+
+# Spark jobs one refresh_text_index runs on the test session: the write's
+# three adaptive stages (tokenize, postings shuffle, write) and the num_docs
+# read-back's three. A term-bucket listing job adds one per read once an
+# index has more than 32 term_bucket directories (not the case here).
+REFRESH_TEXT_JOBS = 6
+
+
 def test_refresh_text_index_incremental(spark, tmp_path):
     """refresh_text_index rolls the posting table forward from the bucket
-    manifests: re-tokenizes only dirty buckets, fixes the denormalized df
-    for the affected vocabulary, and lands on EXACTLY the index a
-    from-scratch rebuild produces (rows and num_docs), across insert +
-    update + delete."""
+    manifests: re-tokenizes only dirty buckets, recomputes the df of every
+    term, and lands on EXACTLY the index a from-scratch rebuild produces
+    (rows and num_docs), across insert + update + delete — including an
+    update that leaves only stopwords (the doc drops out of the index) and
+    a delete that empties a whole data bucket. The refresh runs a pinned
+    number of Spark jobs."""
+    import uuid
+
     schema = {"text": {"type": "text", "text": {"analyser": "standard"}}}
     coll = Collection.create(spark, str(tmp_path / "txcoll"), schema, num_buckets=4)
     base = [
@@ -731,31 +755,51 @@ def test_refresh_text_index_incremental(spark, tmp_path):
         ("d2", "vectors rank the corpus"),
         ("d3", "corpus quality signals"),
         ("d4", "spark spark spark"),
+        ("d7", "quality windows rank"),
+        ("d8", "merge the stream"),
+        ("d9", "signals past spark"),
     ]
     coll.insert(spark.createDataFrame([Row(_id=i, text=t) for i, t in base]))
     coll.build_text_index("text")
 
-    # DML mix: new docs, a text rewrite, a delete, and an emptied doc
+    # DML mix: new docs, a text rewrite, a delete, and a stopword-only doc
     coll.insert(spark.createDataFrame(
         [Row(_id="d5", text="fresh spark vectors"), Row(_id="d6", text="merge quality")]
     ))
-    coll.update(spark.createDataFrame([Row(_id="d1", text="stream quality rank")]))
+    coll.update(spark.createDataFrame([
+        Row(_id="d1", text="stream quality rank"),
+        Row(_id="d3", text="the and of"),
+    ]))
     coll.delete(["d2"])
+    # then delete every remaining doc of d0's data bucket
+    bucket_of = {
+        r["_id"]: r["b"]
+        for r in coll.df()
+        .select("_id", coll._bucket_expr(F.col("_id")).alias("b"))
+        .collect()
+    }
+    emptied = sorted(i for i, b in bucket_of.items() if b == bucket_of["d0"])
+    coll.delete(emptied)
+    assert str(bucket_of["d0"]) not in coll._manifest()
 
-    n_fresh = coll.refresh_text_index("text")
+    sc = spark.sparkContext
+    group = f"refresh-text-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "refresh_text_index")
+    try:
+        n_fresh = coll.refresh_text_index("text")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == REFRESH_TEXT_JOBS
     assert n_fresh > 0
 
-    refreshed = spark.read.parquet(coll._index_path("text")).drop("term_bucket")
-    from semadb_spark.operators.text_search import build_text_index
-    expected = build_text_index(coll.df(), "text")
-    cols = ["id", "term", "tf", "doc_len", "df"]
-    got = sorted(map(tuple, refreshed.select(*cols).collect()))
-    want = sorted(map(tuple, expected.select(*cols).collect()))
-    assert got == want
-
-    import json as _json, os as _os
-    with open(_os.path.join(coll._index_path("text"), "_num_docs.json")) as f:
-        assert _json.load(f)["num_docs"] == coll.df().filter(F.col("text").isNotNull()).count()
+    path = coll._index_path("text")
+    refreshed, refreshed_n = _postings(spark, path), _num_docs(path)
+    indexed = {r[0] for r in refreshed}
+    assert "d3" not in indexed and not (indexed & set(emptied))
+    assert {"d1", "d5"} <= indexed
+    coll.build_text_index("text")  # from-scratch rebuild of the same snapshot
+    assert refreshed == _postings(spark, path)
+    assert refreshed_n == _num_docs(path) == len(indexed)
 
     # served scores use the refreshed artifact (idf depends on df and N)
     res = coll.search({"query": {"property": "text", "text": {
@@ -764,6 +808,54 @@ def test_refresh_text_index_incremental(spark, tmp_path):
 
     # a second refresh with no new DML is a no-op
     assert coll.refresh_text_index("text") == 0
+
+
+def _assert_build_layout(path):
+    """Every term_bucket file is term-sorted and the local tier's row-group
+    index finds term min/max statistics on every row group."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from semadb_spark.operators.text_search import _local_rowgroup_index
+
+    files = glob.glob(os.path.join(path, "term_bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+        assert terms == sorted(terms), f"{f} is not term-sorted"
+    rg_index = _local_rowgroup_index(path)
+    assert rg_index is not None
+    stats = [s for files in rg_index.values() for _, groups in files for s in groups]
+    assert stats and all(lo is not None and hi is not None for lo, hi in stats)
+
+
+def test_refresh_text_index_keeps_build_layout(spark, tmp_path):
+    """A refreshed text index has the same layout as a built one: sorted by
+    term inside each term bucket, with term statistics on every row group,
+    so text_serve_local keeps pruning row groups after DML."""
+    import random
+
+    rnd = random.Random(5)
+    words = [f"w{i:03d}" for i in range(400)]
+    schema = {"text": {"type": "text", "text": {"analyser": "standard"}}}
+    coll = Collection.create(spark, str(tmp_path / "layout"), schema, num_buckets=4)
+    coll.insert(spark.createDataFrame([
+        Row(_id=f"d{i}", text=" ".join(rnd.choices(words, k=6))) for i in range(300)
+    ]))
+    coll.build_text_index("text")
+    _assert_build_layout(coll._index_path("text"))
+
+    coll.insert(spark.createDataFrame([
+        Row(_id=f"n{i}", text=" ".join(rnd.choices(words, k=6))) for i in range(20)
+    ]))
+    coll.update(spark.createDataFrame([
+        Row(_id=f"d{i}", text=" ".join(rnd.choices(words, k=4))) for i in range(0, 60, 3)
+    ]))
+    coll.delete([f"d{i}" for i in range(1, 60, 7)])
+    assert coll.refresh_text_index("text") > 0
+    _assert_build_layout(coll._index_path("text"))
 
 
 def test_refresh_vamana_index_incremental(spark, tmp_path):

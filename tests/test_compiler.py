@@ -797,6 +797,73 @@ def test_text_serve_local_cache_invalidated_on_rebuild(products, tmp_path):
     assert len(text_serve_local(path, "nobody", "containsAny", num_docs=n2)) > 0
 
 
+def test_fingerprint_lapsed_ttl_starts_one_refresh(monkeypatch):
+    """16 threads reading one lapsed fingerprint start exactly one
+    background refresh, and every thread gets the last fingerprint back
+    without waiting for the walk. The refreshing set's membership test
+    yields the GIL after reading, which opens any check-then-add race to
+    every thread."""
+    import threading
+    import time
+
+    from semadb_spark.operators import _pool
+
+    class YieldingSet(set):
+        def __contains__(self, item):
+            found = super().__contains__(item)
+            time.sleep(0.005)
+            return found
+
+    monkeypatch.setattr(_pool, "_FP_REFRESHING", YieldingSet())
+    walks = []
+    release = threading.Event()
+
+    def walk(path):
+        walks.append(path)
+        release.wait(5)
+        return 2
+
+    cache = {"art": (time.monotonic() - 60.0, 1)}
+    barrier = threading.Barrier(16)
+    got = []
+
+    def client():
+        barrier.wait()
+        got.append(_pool.cached_fingerprint(cache, "art", 1.0, walk))
+
+    threads = [threading.Thread(target=client) for _ in range(16)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(10)
+    release.set()
+    deadline = time.monotonic() + 5
+    while "art" in _pool._FP_REFRESHING and time.monotonic() < deadline:
+        time.sleep(0.01)
+    assert got == [1] * 16
+    assert walks == ["art"]
+    assert cache["art"][1] == 2 and "art" not in _pool._FP_REFRESHING
+
+
+def test_fingerprint_refresh_thread_start_failure_frees_path(monkeypatch):
+    """A refresh thread that fails to start must not leave its path marked
+    as refreshing, or that artifact would never be re-walked again."""
+    import threading
+    import time
+
+    from semadb_spark.operators import _pool
+
+    def fail(self):
+        raise RuntimeError("can't start new thread")
+
+    cache = {"art": (time.monotonic() - 60.0, 1)}
+    monkeypatch.setattr(threading.Thread, "start", fail)
+    with pytest.raises(RuntimeError):
+        _pool.cached_fingerprint(cache, "art", 1.0, lambda p: 2)
+    monkeypatch.undo()
+    assert "art" not in _pool._FP_REFRESHING
+
+
 def test_text_search_batch_candidate_filter_parity(products):
     """Batched pre-filtered text search must equal the per-query path with
     the same candidate set (R4 semantics: intersect before scoring,

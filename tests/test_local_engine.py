@@ -216,6 +216,19 @@ def test_select_renest_parity(coll):
         "select": ["name", "nested.lab", "n"]})
 
 
+@pytest.mark.parametrize("select", [["_id"], ["_id", "name"], ["name", "_id"]])
+def test_select_id_returned_once_parity(coll, select):
+    """Naming the id in ``select`` returns it once, leading, on both
+    engines."""
+    req = {"query": {"property": "nested.lab", "string": {
+        "operator": "equals", "value": "cold"}}, "limit": 6, "select": select}
+    want = coll.search(req).columns
+    got = list(assert_parity(coll, req).columns)
+    lead = ["_id"] + [c for c in select if c != "_id"]
+    assert want[:len(lead)] == lead and want.count("_id") == 1
+    assert got == want
+
+
 def test_unsupported_shapes_raise(coll, spark, tmp_path):
     with pytest.raises(LocalServeUnsupported, match="sort property"):
         coll.search_local({"query": F_SHAPES[0], "limit": 5,
