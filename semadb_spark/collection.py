@@ -1838,9 +1838,9 @@ class Collection:
         ``preload=True`` decodes every graph artifact ONCE in the parent
         into POSIX shared memory; workers attach zero-copy views — steady
         state from the first request at ONE resident artifact copy for
-        the whole pool (vamana.export_packed_shared). ``preload="worker"``
-        keeps the r12 per-worker private decode; oversized artifacts (past
-        the serve-cache cap) stay lazy either way."""
+        the whole pool (vamana.export_packed_shared). If the export fails,
+        each worker decodes a private copy instead; oversized artifacts
+        (past the serve-cache cap) stay lazy either way."""
         from .plans.local_engine import HybridServePool
 
         return HybridServePool(

@@ -25,10 +25,17 @@ persist it partitioned/bucketed by term.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from semadb_spark.functions.analyzer import analyze_query, tokenize
+from semadb_spark.operators._pool import (
+    ServePool,
+    artifact_fingerprint,
+    cached_fingerprint,
+)
 
 # Partition count for the persisted index's term-hash layout: queries prune
 # to <= |query terms| directories out of TERM_BUCKETS (Collection
@@ -269,41 +276,11 @@ def text_serve(
 
 
 _LOCAL_DATASET_CACHE: dict[str, tuple[int, object]] = {}
-_LOCAL_RG_INDEX_CACHE: dict[tuple[str, int], tuple[int, object]] = {}
+# per-thread {path: (fingerprint, row-group index)}; a thread's handle sets
+# close when the thread exits
+_LOCAL_RG_INDEX_CACHE = threading.local()
 _FP_AT: dict[str, tuple[float, int]] = {}
 _FP_TTL_SEC = 1.0
-
-
-def _artifact_fingerprint(index_path: str) -> int:
-    """Digest of the artifact's file listing (relative name, size,
-    mtime_ns per data file). Both driver-local caches key on (path,
-    fingerprint): ANY mutation — an in-process write.mode("overwrite")
-    rebuild, a file added/replaced inside one bucket directory, or a
-    rewrite landing within the filesystem's mtime granularity for
-    _SUCCESS — changes the digest, so a subsequent text_serve_local
-    re-opens the new files instead of serving stale postings off pinned
-    ParquetFile handles. Cost: one os.walk of the artifact directory per
-    query (~1 ms for the 66-file 10M index), same order as the single
-    os.stat it replaces."""
-    import os
-    import zlib
-
-    h = 0
-    try:
-        for root, dirs, files in os.walk(index_path):
-            dirs.sort()
-            for fn in sorted(files):
-                try:
-                    st = os.stat(os.path.join(root, fn))
-                except OSError:
-                    continue
-                rel = os.path.relpath(os.path.join(root, fn), index_path)
-                h = zlib.crc32(
-                    f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode(), h
-                )
-    except OSError:
-        return 0
-    return h
 
 
 def _local_rowgroup_index(index_path: str, fp: int | None = None):
@@ -321,15 +298,17 @@ def _local_rowgroup_index(index_path: str, fp: int | None = None):
     not safe for concurrent reads from multiple threads (its reader seeks
     one underlying handle), so a multi-threaded serving tier gets its own
     handle set per client thread — each thread an independent engine
-    handle on the immutable artifact, exactly like the process pool. Cost:
-    one footer-only re-open per (thread, file); the decoded data pages are
-    never cached here."""
+    handle on the immutable artifact, exactly like the process pool. The
+    sets live in thread-local storage, so a thread's handles close when
+    the thread exits, and a new fingerprint replaces the path's entry.
+    Cost: one footer-only re-open per (thread, file); the decoded data
+    pages are never cached here."""
     if fp is None:
-        fp = _artifact_fingerprint(index_path)
-    import threading
-
-    cache_key = (index_path, threading.get_ident())
-    hit = _LOCAL_RG_INDEX_CACHE.get(cache_key)
+        fp = artifact_fingerprint(index_path)
+    by_path = getattr(_LOCAL_RG_INDEX_CACHE, "by_path", None)
+    if by_path is None:
+        by_path = _LOCAL_RG_INDEX_CACHE.by_path = {}
+    hit = by_path.get(index_path)
     if hit is not None and hit[0] == fp:
         return hit[1]
     import glob
@@ -363,7 +342,7 @@ def _local_rowgroup_index(index_path: str, fp: int | None = None):
                     stats.append((None, None))
             idx.setdefault(b, []).append((pf, stats))
     result = idx if usable else None
-    _LOCAL_RG_INDEX_CACHE[cache_key] = (fp, result)
+    by_path[index_path] = (fp, result)
     return result
 
 
@@ -426,15 +405,14 @@ def text_serve_local(
     import pyarrow.dataset as pads
 
     from semadb_spark.functions.hashing import md5_hash64_py
-    from semadb_spark.operators._pool import cached_fingerprint
 
-    # TTL-cached: a rebuild is picked up within ~ttl, far inside any
-    # artifact-rotation window, while the listing walk (paid by both the
-    # dataset and the row-group caches) amortizes across point-reads
+    # TTL-cached: a rebuild is picked up within ~ttl on a busy path and
+    # within 10x ttl after an idle gap, far inside any artifact-rotation
+    # window, while the listing walk (paid by both the dataset and the
+    # row-group caches) amortizes across point-reads
     fp = cached_fingerprint(
         _FP_AT, index_path,
         _FP_TTL_SEC if fp_ttl_sec is None else fp_ttl_sec,
-        _artifact_fingerprint,
     )
     hit = _LOCAL_DATASET_CACHE.get(index_path)
     if hit is not None and hit[0] == fp:
@@ -700,19 +678,21 @@ def _pool_init(index_path: str, num_docs: int) -> None:
     _local_rowgroup_index(index_path)
 
 
-def _pool_serve(args: tuple[str, str, int, float]):
-    query, operator, limit, weight = args
-    return text_serve_local(
-        _POOL_INDEX_PATH, query, operator, limit=limit, weight=weight,
-        num_docs=_POOL_NUM_DOCS,
-        # pool contract: artifact immutable while open — amortize the
-        # mutation-detecting listing walk over minutes (same trade as
-        # VectorServePool's workers)
-        fp_ttl_sec=300.0,
-    )
+def _pool_serve(requests: list[tuple[str, str, int, float]]):
+    return [
+        text_serve_local(
+            _POOL_INDEX_PATH, query, operator, limit=limit, weight=weight,
+            num_docs=_POOL_NUM_DOCS,
+            # pool contract: artifact immutable while open — amortize the
+            # mutation-detecting listing walk over minutes (same trade as
+            # VectorServePool's workers)
+            fp_ttl_sec=300.0,
+        )
+        for query, operator, limit, weight in requests
+    ]
 
 
-class TextServePool:
+class TextServePool(ServePool):
     """Process-parallel text serving over an IMMUTABLE posting artifact —
     the deployment shape of the serving tier the reference runs around its
     in-process index (shard/index/text/text.go:305-396), re-expressed for
@@ -728,7 +708,9 @@ class TextServePool:
     the pinned repro). This is exactly how a real tier deploys: the index
     lives in object storage / shared disk, N stateless workers point-read
     it, heavy analytical batches go through the cluster
-    (:func:`text_search_batch`).
+    (:func:`text_search_batch`). Every worker can serve every query, so
+    the pool runs the :class:`~semadb_spark.operators._pool.ServePool`
+    core with one shared executor.
 
     Contract: the artifact must be immutable while the pool is open.
     Mutations are still DETECTED (each worker's caches key on the artifact
@@ -747,11 +729,8 @@ class TextServePool:
             all_hits = pool.search_many([("q1", "containsAll"), ...])
     """
 
-    def __init__(self, index_path: str, num_docs: int, workers: int = 8,
-                 start_method: str | None = None):
+    def __init__(self, index_path: str, num_docs: int, workers: int = 8):
         import os
-
-        from semadb_spark.operators._pool import make_worker_executor
 
         if not os.path.isdir(index_path):
             raise ValueError(f"no posting artifact at {index_path}")
@@ -759,38 +738,18 @@ class TextServePool:
             raise ValueError("TextServePool requires the stored num_docs counter")
         self.index_path = index_path
         self.num_docs = int(num_docs)
-        self.workers = int(workers)
-        # start-method policy (forkserver/spawn preferred, fork for REPL
-        # parents) lives in operators/_pool.choose_start_method, shared
-        # with VectorServePool so the two serving tiers cannot drift
-        self._pool = make_worker_executor(
-            self.workers, _pool_init, (index_path, self.num_docs),
-            start_method,
-        )
+        super().__init__(workers, _pool_init, (index_path, self.num_docs),
+                         _pool_serve)
 
     def search(self, query: str, operator: str = "containsAny",
                limit: int = 10, weight: float = 1.0):
         """One query -> pandas DataFrame (id, _score, _hybridScore), scored
         on whichever worker is free."""
-        return self._pool.submit(
-            _pool_serve, (query, operator, int(limit), float(weight))
-        ).result()
+        return self._one((query, operator, int(limit), float(weight)))
 
     def search_many(self, queries, limit: int = 10, weight: float = 1.0):
         """[(query_text, operator), ...] -> list of pandas DataFrames in
         input order, fanned across all workers."""
-        return list(
-            self._pool.map(
-                _pool_serve,
-                [(q, op, int(limit), float(weight)) for q, op in queries],
-            )
+        return self._many(
+            [(q, op, int(limit), float(weight)) for q, op in queries]
         )
-
-    def close(self) -> None:
-        self._pool.shutdown(wait=True)
-
-    def __enter__(self) -> "TextServePool":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()

@@ -32,6 +32,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from semadb_spark.operators._pool import (
+    ServePool,
+    artifact_fingerprint,
+    cached_fingerprint,
+)
+
 __all__ = [
     "VamanaIndex",
     "vamana_build",
@@ -2231,29 +2237,6 @@ _LOCAL_PACKED_FP_AT: dict[str, tuple[float, int]] = {}
 _FP_TTL_SEC = 1.0
 
 
-def _packed_artifact_fingerprint(path: str) -> int:
-    """Listing digest (name/size/mtime_ns per file) — same invalidation
-    contract as text_search._artifact_fingerprint: ANY rewrite of the
-    artifact re-opens it instead of serving stale decoded shards."""
-    import os
-    import zlib
-
-    h = 0
-    try:
-        for root, dirs, files in os.walk(path):
-            dirs.sort()
-            for fn in sorted(files):
-                try:
-                    st = os.stat(os.path.join(root, fn))
-                except OSError:
-                    continue
-                rel = os.path.relpath(os.path.join(root, fn), path)
-                h = zlib.crc32(f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode(), h)
-    except OSError:
-        return 0
-    return h
-
-
 MAX_CACHED_CENTS = 256
 """Serve-cache FIFO capacity (cent partitions). Shared by
 :func:`_local_decoded_cents` (eviction) and :func:`preload_packed_local`
@@ -2273,19 +2256,17 @@ def _local_decoded_cents(path: str, cents_needed: list[int], np_dtype,
     reference's shard decode cache, cache/manager.go:39-303)."""
     import pyarrow.dataset as pads
 
-    from semadb_spark.operators._pool import cached_fingerprint
-
     # fingerprint with a short TTL: the listing walk costs ~100 ms on a
     # 3000-file 10M artifact — paying it per POINT-READ was 73% of the
     # query latency (r9 profile). A rebuild is still picked up within
-    # the TTL, which is far inside any artifact-rotation window. Callers
-    # holding the immutable-artifact contract (VectorServePool workers)
-    # pass a LONG fp_ttl_sec: at the 1 s default a pool worker re-walked
-    # the listing every ~55 queries — measured ~10% of mp16 throughput.
+    # the TTL on a busy path and within 10x the TTL after an idle gap,
+    # far inside any artifact-rotation window. Callers holding the
+    # immutable-artifact contract (VectorServePool workers) pass a LONG
+    # fp_ttl_sec: at the 1 s default a pool worker re-walked the listing
+    # every ~55 queries — measured ~10% of mp16 throughput.
     fp = cached_fingerprint(
         _LOCAL_PACKED_FP_AT, path,
         _FP_TTL_SEC if fp_ttl_sec is None else fp_ttl_sec,
-        _packed_artifact_fingerprint,
     )
     key = (fp, str(c_dtype))
     hit = _LOCAL_PACKED_CACHE.get(path)
@@ -2622,7 +2603,6 @@ def vamana_serve_local(
     books=None,
     beam_on: str = "auto",
     oversample: int = 4,
-    shard_threads: int | None = None,
 ) -> list[tuple[str, float]]:
     """Driver-local SINGLE-query Vamana serving straight off the persisted
     :func:`vamana_pack` artifact with pyarrow + the NumPy beam kernel — NO
@@ -2781,20 +2761,12 @@ def vamana_serve_local(
     # an intra-query thread pool was A/B-REJECTED: the greedy beam is many
     # SMALL numpy hops (GIL-held interpreter between kernels), and three
     # consecutive measurements with 4 shard threads made the tail WORSE
-    # (p99 104/195/341 ms vs 65 ms sequential). ``shard_threads`` is kept
-    # as an explicit knob (>1 opts in; VectorServePool pins 1) but the
-    # default stays sequential. The structural fix for the tail is
-    # balancing cent sizes at pack time — future work, needs an artifact
-    # rebuild.
-    tasks = [shard for c in routed for shard in shards.get(c, [])]
-    n_thr = 1 if shard_threads is None else int(shard_threads)
-    if n_thr > 1 and len(tasks) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(n_thr) as ex:
-            outs = list(ex.map(_beam_shard, tasks))
-    else:
-        outs = [_beam_shard(shard) for shard in tasks]
+    # (p99 104/195/341 ms vs 65 ms sequential), so shards beam
+    # sequentially. The structural fix for the tail is balancing cent
+    # sizes at pack time — future work, needs an artifact rebuild.
+    outs = [
+        _beam_shard(shard) for c in routed for shard in shards.get(c, [])
+    ]
     for ids, top_i, top_d in outs:
         for j, dd in zip(top_i[0], top_d[0]):
             if j < 0 or not np.isfinite(dd):
@@ -2858,22 +2830,18 @@ def _vpool_init(packed_path: str, kw: dict) -> None:
     global _VPOOL_PATH, _VPOOL_KW
     _VPOOL_PATH = packed_path
     _VPOOL_KW = kw
-    _packed_artifact_fingerprint(packed_path)
+    artifact_fingerprint(packed_path)
 
 
-def _vpool_serve(args: tuple[list, int]):
-    """One owner-batch: a LIST of query vectors -> list of result lists.
-    Batched so a search_many fan-out costs one submit/result round-trip
-    per WORKER, not per query — 256 single-query submits across 16
-    executor feed-queues measured ~3 ms of parent-side overhead each,
-    capping the pool at ~240 QPS while the workers sat idle."""
-    vectors, k = args
+def _vpool_serve(requests: list[tuple[list, int]]):
+    """[(query vector, k), ...] -> one result list per query."""
     return [
-        vamana_serve_local(_VPOOL_PATH, v, k, **_VPOOL_KW) for v in vectors
+        vamana_serve_local(_VPOOL_PATH, v, k, **_VPOOL_KW)
+        for v, k in requests
     ]
 
 
-class VectorServePool:
+class VectorServePool(ServePool):
     """Process-parallel ANN point-read serving over an IMMUTABLE packed
     Vamana artifact — the vector twin of
     :class:`~semadb_spark.operators.text_search.TextServePool`, and the
@@ -2897,7 +2865,10 @@ class VectorServePool:
     cache holds only its ~1/W share of the cent partitions. With
     ``nprobe > 1`` the non-primary probes may straddle owners; the owner
     decodes those too (bounded overlap, same trade the reference makes
-    replicating hot shards).
+    replicating hot shards). This is the ``owner`` dispatch of the
+    :class:`~semadb_spark.operators._pool.ServePool` core: one
+    single-process executor per worker, a batch shipped as one task per
+    owner.
 
     Contract: the artifact must be immutable while the pool is open —
     mutations are still DETECTED per worker (the decoded cache keys on the
@@ -2918,12 +2889,9 @@ class VectorServePool:
                  search_size: int = 75, nprobe: int = 1,
                  dtype: str = "float32", compute_dtype: str = "float32",
                  n_seeds: int = 0, workers: int = 8,
-                 start_method: str | None = None,
                  thresholds: np.ndarray | None = None, books=None,
                  beam_on: str = "auto"):
         import os
-
-        from semadb_spark.operators._pool import make_worker_executor
 
         if not os.path.isdir(packed_path):
             raise ValueError(f"no packed vamana artifact at {packed_path}")
@@ -2933,7 +2901,6 @@ class VectorServePool:
             raise ValueError("VectorServePool requires workers >= 1")
         self.packed_path = packed_path
         self.centroids = np.asarray(centroids, dtype=np.float64)
-        self.workers = int(workers)
         self._cent_norms = (self.centroids * self.centroids).sum(axis=1)
         kw = dict(
             metric=metric, search_size=int(search_size),
@@ -2949,22 +2916,9 @@ class VectorServePool:
             # seconds (at the 1 s default a worker re-walks every ~55
             # queries — measured ~10% of mp16 throughput)
             fp_ttl_sec=300.0,
-            # throughput tier: the pool already runs one process per core,
-            # so intra-query shard threads would only oversubscribe (r14).
-            # This matches the default, which is sequential everywhere.
-            shard_threads=1,
         )
-        # one single-process executor per worker: dispatch must target the
-        # cent owner, which ProcessPoolExecutor's shared queue cannot do.
-        # blas_threads=1: N workers each spawning a full BLAS pool
-        # oversubscribe the host 4x-measured (operators/_pool.py).
-        self._pools = [
-            make_worker_executor(
-                1, _vpool_init, (packed_path, kw), start_method,
-                blas_threads=1,
-            )
-            for _ in range(self.workers)
-        ]
+        super().__init__(workers, _vpool_init, (packed_path, kw),
+                         _vpool_serve, owner=lambda req: self._owner(req[0]))
 
     def _owner(self, vector) -> int:
         q = np.asarray(vector, dtype=np.float64)
@@ -2973,42 +2927,14 @@ class VectorServePool:
 
     def search(self, vector, k: int = 10) -> list[tuple[str, float]]:
         """One query -> [(id, distance)] * k, served by the cent owner."""
-        vec = [float(x) for x in vector]
-        return self._pools[self._owner(vec)].submit(
-            _vpool_serve, ([vec], int(k))
-        ).result()[0]
+        return self._one(([float(x) for x in vector], int(k)))
 
     def search_many(self, vectors, k: int = 10) -> list[list[tuple[str, float]]]:
         """Batch of query vectors -> results in input order. Queries are
         grouped by cent owner and shipped as ONE task per worker (the
         owner serves its group sequentially; distinct owners run fully
-        parallel) — per-query submits paid ~3 ms each of parent-side
-        executor overhead, the measured pool bottleneck."""
-        vecs = [[float(x) for x in v] for v in vectors]
-        groups: dict[int, list[int]] = {}
-        for i, v in enumerate(vecs):
-            groups.setdefault(self._owner(v), []).append(i)
-        futs = {
-            o: self._pools[o].submit(
-                _vpool_serve, ([vecs[i] for i in idxs], int(k))
-            )
-            for o, idxs in groups.items()
-        }
-        out: list = [None] * len(vecs)
-        for o, idxs in groups.items():
-            for i, res in zip(idxs, futs[o].result()):
-                out[i] = res
-        return out
-
-    def close(self) -> None:
-        for p in self._pools:
-            p.shutdown(wait=True)
-
-    def __enter__(self) -> "VectorServePool":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+        parallel)."""
+        return self._many([([float(x) for x in v], int(k)) for v in vectors])
 
 
 # ---------------------------------------------------------------------------

@@ -71,6 +71,8 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+from semadb_spark.operators._pool import ServePool
+
 RANKED_COLS = ("_distance", "_score", "_hybridScore")
 
 # internal ranked-frame id column. Deliberately NOT "id": nothing reserves
@@ -1337,8 +1339,8 @@ def _hpool_init(collection_path: str, vector_mode: str, warm_requests,
     ``shared_graphs`` (list of ``(artifact_path, shm_name, manifest)``)
     attaches this worker's packed-graph serve cache to the pool parent's
     ONE shared-memory decode — zero-copy, no per-worker ramp, no per-worker
-    resident copy. ``preload`` (legacy) instead decodes ALL graph-artifact
-    cents privately in this worker
+    resident copy. ``preload`` is the fallback when the parent's export
+    failed: this worker decodes ALL graph-artifact cents privately
     (:meth:`LocalSearchEngine.preload_graph_artifacts`); without either, a
     worker ramps to steady state as queries lazily fault cents in."""
     global _HPOOL_ENGINE
@@ -1354,7 +1356,7 @@ def _hpool_init(collection_path: str, vector_mode: str, warm_requests,
     coll = Collection.open_local(collection_path)
     _HPOOL_ENGINE = LocalSearchEngine(coll, vector_mode=vector_mode,
                                       graph_nprobe=graph_nprobe)
-    if preload and not shared_graphs:
+    if preload:
         try:
             _HPOOL_ENGINE.preload_graph_artifacts()
         except Exception:
@@ -1373,11 +1375,7 @@ def _hpool_serve(requests: list[dict]):
     return [_HPOOL_ENGINE.search(r) for r in requests]
 
 
-def _hpool_preload():
-    return _HPOOL_ENGINE.preload_graph_artifacts()
-
-
-class HybridServePool:
+class HybridServePool(ServePool):
     """Process-parallel hybrid query serving over one Collection snapshot —
     the pool tier of :meth:`Collection.search_local`, completing the
     serving ladder (driver-local -> worker pool) for the COMPOSED query
@@ -1391,10 +1389,13 @@ class HybridServePool:
     columns, vector matrix + norms, posting row-group index. That is
     whole-snapshot-resident per worker — the right trade for a serving
     node (the reference's shard cache holds the decoded shard the same
-    way); size workers to snapshot-bytes x workers. Workers pin the
-    snapshot version at spawn: rotate the pool after DML, like the other
-    pools rotate on artifact rebuilds. Results are identical to
-    search_local (same engine class; parity-tested).
+    way); size workers to snapshot-bytes x workers. With no per-partition
+    cache affinity to exploit, the pool runs the
+    :class:`~semadb_spark.operators._pool.ServePool` core with one shared
+    executor, so the shortest queue wins. Workers pin the snapshot version
+    at spawn: rotate the pool after DML, like the other pools rotate on
+    artifact rebuilds. Results are identical to search_local (same engine
+    class; parity-tested).
 
     Usage::
 
@@ -1406,28 +1407,22 @@ class HybridServePool:
 
     def __init__(self, collection_path: str, workers: int = 8,
                  vector_mode: str = "auto", warm_requests=None,
-                 start_method: str | None = None,
                  graph_nprobe: int | None = None,
-                 preload: "bool | str" = False):
-        import os
-
-        from semadb_spark.operators._pool import make_worker_executor
-
+                 preload: bool = False):
         if not os.path.exists(os.path.join(collection_path, "_schema.json")):
             raise ValueError(f"no collection at {collection_path}")
+        # checked before the shm export, which a bad value would leak
         if int(workers) < 1:
             raise ValueError("HybridServePool requires workers >= 1")
-        self.workers = int(workers)
         # preload=True: the PARENT decodes each packed graph artifact once
         # into POSIX shared memory and every worker attaches zero-copy
         # views — one resident artifact copy for the whole pool, the
         # reference's single shared shard cache (cache/manager.go:39-303).
-        # preload="worker" keeps the r12 behavior (each worker decodes a
-        # private copy); export failure or an artifact wider than the
-        # serve-cache cap falls back to that path / to lazy faulting.
+        # If the export fails, each worker decodes a private copy instead;
+        # an artifact wider than the serve-cache cap stays lazy.
         self._shm_names: list[str] = []
         shared_graphs: list = []
-        if preload and preload != "worker":
+        if preload:
             try:
                 shared_graphs = self._export_shared_graphs(
                     collection_path, vector_mode, graph_nprobe
@@ -1435,18 +1430,12 @@ class HybridServePool:
                 self._shm_names = [s[1] for s in shared_graphs]
             except Exception:
                 shared_graphs = []
-        # one shared executor: unlike the vector pool there is no
-        # per-partition cache affinity to exploit (every worker holds the
-        # whole snapshot), so the shortest queue wins
-        self._pool = make_worker_executor(
-            self.workers, _hpool_init,
+        super().__init__(
+            workers, _hpool_init,
             (collection_path, vector_mode, list(warm_requests or []),
              graph_nprobe, bool(preload) and not shared_graphs,
              shared_graphs),
-            start_method,
-            # serving workers run single-threaded math: W full BLAS pools
-            # oversubscribe the host (operators/_pool.py, measured 4x)
-            blas_threads=1,
+            _hpool_serve,
         )
 
     @staticmethod
@@ -1475,26 +1464,13 @@ class HybridServePool:
 
     def search(self, request: dict):
         """One request -> pandas DataFrame (search_local's output shape)."""
-        return self._pool.submit(_hpool_serve, [request]).result()[0]
+        return self._one(request)
 
     def search_many(self, requests: list[dict]):
-        """Batch -> results in input order. Requests ship in ~2 chunks per
-        worker (per-request submits measured ~3 ms each of parent-side
-        executor overhead on the vector pool — same economics here)."""
-        reqs = list(requests)
-        if not reqs:
-            return []
-        n_chunks = min(len(reqs), self.workers * 2)
-        step = (len(reqs) + n_chunks - 1) // n_chunks
-        chunks = [reqs[i : i + step] for i in range(0, len(reqs), step)]
-        futs = [self._pool.submit(_hpool_serve, c) for c in chunks]
-        out = []
-        for f in futs:
-            out.extend(f.result())
-        return out
+        """Batch -> results in input order, fanned across all workers."""
+        return self._many(requests)
 
-    def close(self) -> None:
-        self._pool.shutdown(wait=True)
+    def _release(self) -> None:
         from semadb_spark.operators.vamana import release_packed_shared
 
         for name in self._shm_names:
@@ -1503,9 +1479,3 @@ class HybridServePool:
             except Exception:
                 pass
         self._shm_names = []
-
-    def __enter__(self) -> "HybridServePool":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()

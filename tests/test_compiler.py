@@ -621,7 +621,7 @@ def test_text_serve_local_matches_text_serve(products, tmp_path):
 def test_text_serve_local_thread_handles_isolated_and_consistent(
     products, tmp_path
 ):
-    """r14: the per-bucket row-group index is keyed per (path, fingerprint,
+    """r14: the per-bucket row-group index is kept per (path, fingerprint,
     THREAD) — ParquetFile handles are not safe for concurrent reads, so a
     multi-threaded serving tier must get its own handle set per client
     thread, and concurrent queries must return exactly what sequential ones
@@ -634,7 +634,7 @@ def test_text_serve_local_thread_handles_isolated_and_consistent(
     from semadb_spark.functions.hashing import md5_hash64
     from semadb_spark.operators.text_search import (
         TERM_BUCKETS,
-        _LOCAL_RG_INDEX_CACHE,
+        _local_rowgroup_index,
         build_text_index,
         text_serve_local,
     )
@@ -667,24 +667,69 @@ def test_text_serve_local_thread_handles_isolated_and_consistent(
             ),
         ):
             results.setdefault(q, []).append(got)
+        # each serving thread holds its own handle set for this path: four
+        # tasks that meet at a barrier run on four distinct threads
+        barrier = threading.Barrier(4)
+
+        def handles(_):
+            barrier.wait(10)
+            return _local_rowgroup_index(path)
+
+        sets = list(ex.map(handles, range(4)))
     for q, runs in results.items():
         for got in runs:
             assert got == want[q], q
-    # each serving thread built its own handle set for this path
-    thread_keys = {
-        k for k in _LOCAL_RG_INDEX_CACHE if isinstance(k, tuple) and k[0] == path
-    }
-    assert len(thread_keys) >= 2
-    main_key = (path, threading.get_ident())
-    others = [k for k in thread_keys if k != main_key]
-    if main_key in _LOCAL_RG_INDEX_CACHE and others:
-        pf_main = _LOCAL_RG_INDEX_CACHE[main_key][1]
-        pf_other = _LOCAL_RG_INDEX_CACHE[others[0]][1]
-        shared = [
-            b for b in pf_main if b in pf_other and pf_main[b] and pf_other[b]
-        ]
-        if shared:
-            assert pf_main[shared[0]][0][0] is not pf_other[shared[0]][0][0]
+    bucket = min(sets[0])
+    assert len({id(rg[bucket][0][0]) for rg in sets}) == 4
+
+
+def test_text_rowgroup_handles_die_with_their_threads(tmp_path):
+    """Thread churn must not leak handles: 200 concurrent short-lived
+    client threads each open a handle set on a 4-file posting index, and
+    once they have exited none of those ParquetFile handles (nor their
+    file descriptors) remain."""
+    import gc
+    import os
+    import threading
+    import weakref
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from semadb_spark.operators.text_search import _local_rowgroup_index
+
+    path = str(tmp_path / "postings_churn")
+    for b in range(4):
+        os.makedirs(os.path.join(path, f"term_bucket={b}"))
+        pq.write_table(
+            pa.table({"id": ["1", "2"], "term": [f"a{b}", f"b{b}"],
+                      "tf": [1, 1], "doc_len": [2, 2]}),
+            os.path.join(path, f"term_bucket={b}", "part-0.parquet"),
+        )
+    assert _local_rowgroup_index(path) is not None
+
+    def open_fds():
+        return len(os.listdir("/proc/self/fd"))
+
+    fds_before = open_fds()
+    refs = []
+    barrier = threading.Barrier(200)
+
+    def client():
+        rg = _local_rowgroup_index(path)
+        refs.extend(weakref.ref(pf) for files in rg.values() for pf, _ in files)
+        barrier.wait(30)
+
+    threads = [threading.Thread(target=client) for _ in range(200)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(30)
+    assert not any(t.is_alive() for t in threads)
+    assert len(refs) == 800
+    gc.collect()
+    assert sum(r() is not None for r in refs) == 0
+    assert open_fds() <= fds_before
 
 
 def test_text_serve_local_mixed_stats_rowgroups_must_read(products, tmp_path):
@@ -823,7 +868,8 @@ def test_fingerprint_lapsed_ttl_starts_one_refresh(monkeypatch):
         release.wait(5)
         return 2
 
-    cache = {"art": (time.monotonic() - 60.0, 1)}
+    # lapsed (age > ttl) but inside the 10x-ttl hard cap
+    cache = {"art": (time.monotonic() - 5.0, 1)}
     barrier = threading.Barrier(16)
     got = []
 
@@ -856,12 +902,37 @@ def test_fingerprint_refresh_thread_start_failure_frees_path(monkeypatch):
     def fail(self):
         raise RuntimeError("can't start new thread")
 
-    cache = {"art": (time.monotonic() - 60.0, 1)}
+    # lapsed (age > ttl) but inside the 10x-ttl hard cap
+    cache = {"art": (time.monotonic() - 5.0, 1)}
     monkeypatch.setattr(threading.Thread, "start", fail)
     with pytest.raises(RuntimeError):
         _pool.cached_fingerprint(cache, "art", 1.0, lambda p: 2)
     monkeypatch.undo()
     assert "art" not in _pool._FP_REFRESHING
+
+
+def test_fingerprint_past_age_cap_walks_synchronously(tmp_path):
+    """After an idle gap longer than 10x the TTL, the next call walks the
+    listing itself and returns the new fingerprint instead of serving the
+    stale one while a background refresh runs."""
+    import os
+    import time
+
+    from semadb_spark.operators import _pool
+
+    def walk(p):
+        return sorted(os.listdir(p))
+
+    art = tmp_path / "art"
+    art.mkdir()
+    (art / "part-0").write_bytes(b"x")
+    cache: dict = {}
+    ttl = 0.02
+    assert _pool.cached_fingerprint(cache, str(art), ttl, walk) == ["part-0"]
+    (art / "part-1").write_bytes(b"y")
+    time.sleep(10 * ttl + 0.05)
+    got = _pool.cached_fingerprint(cache, str(art), ttl, walk)
+    assert got == ["part-0", "part-1"]
 
 
 def test_text_search_batch_candidate_filter_parity(products):
@@ -1094,11 +1165,9 @@ def test_text_serve_pool_parity_and_lifecycle(products, tmp_path):
                 path, qtext, op, limit=5, weight=0.7, num_docs=n_docs
             )
             assert got.to_dict("records") == want.to_dict("records"), (qtext, op)
-    # pool is shut down after the context exits
-    import concurrent.futures
-
+    # pool is shut down after the context exits: new work is rejected
     with pytest.raises(RuntimeError):
-        pool._pool.submit(len, [])
+        pool.search("gandalf wizard")
     with pytest.raises(ValueError, match="no posting artifact"):
         TextServePool(str(tmp_path / "missing"), num_docs=10)
     with pytest.raises(ValueError, match="num_docs"):

@@ -342,6 +342,19 @@ def test_hybrid_serve_pool_matches_search_local(coll):
         HybridServePool(coll.path, workers=0)
 
 
+def test_tracer_layer_points_are_own_attributes():
+    """The benchmark's traced run swaps each layer entry point through
+    ``owner.__dict__[attr]``, so every traced entry point must be defined
+    directly on its class or module, not inherited: a refactor that moves
+    one into a base class breaks ``perfbench/run.py --trace 1``."""
+    from perfbench import spans
+
+    points = spans._layer_points()
+    assert points
+    for owner, attr, name in points:
+        assert attr in owner.__dict__, name
+
+
 def test_open_local_collection_serves_without_spark(coll):
     """Collection.open_local: filesystem-only open — search_local works,
     Spark surfaces raise the documented error."""

@@ -1,9 +1,10 @@
 """Isolation repro for the bench text_10m 16-client serving row.
 
 The r7 full-bench run recorded 16c QPS 64.8 -> 40.7 while the 1-client
-path stayed flat; the only r7 change on the serving path
-(_artifact_fingerprint) affects text_serve_local (1-client) and not the
-Spark text_serve route this row times, so the prime suspect is host
+path stayed flat; the only r7 change on the serving path (the listing
+fingerprint, now _pool.artifact_fingerprint) affects text_serve_local
+(1-client) and not the Spark text_serve route this row times, so the
+prime suspect is host
 noise (this box has documented 4-5x noisy-neighbor swings). This tool
 re-times EXACTLY the bench shape — 64 queries (8 distinct x 8) through
 text_serve on the sidecar 10M posting index, 16-thread ThreadPoolExecutor,
