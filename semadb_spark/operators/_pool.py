@@ -230,14 +230,11 @@ class ServePool:
 
     def _many(self, requests) -> list:
         reqs = list(requests)
+        step = -(-len(reqs) // (2 * self.workers))
         groups: dict[int, list[int]] = {}
-        if self._route is None:
-            step = -(-len(reqs) // (2 * self.workers))
-            for i in range(len(reqs)):
-                groups.setdefault(i // step, []).append(i)
-        else:
-            for i, r in enumerate(reqs):
-                groups.setdefault(self._route(r), []).append(i)
+        for i, r in enumerate(reqs):
+            g = self._route(r) if self._route else i // step
+            groups.setdefault(g, []).append(i)
         futs = [
             (idxs, self._executors[g if self._route else 0].submit(
                 self._serve, [reqs[i] for i in idxs]
