@@ -4,7 +4,10 @@ Reproduces the reference's search pipeline (models/search.go:9-15):
 *filter first -> vector/text search with hybrid weights -> select/sort ->
 offset/limit*, over the exact JSON query-tree API (models/search.go:54-65).
 
-Compilation strategy (SURVEY.md §3.1 "Spark lifecycle equivalent"):
+Compilation strategy (SURVEY.md §3.1 "Spark lifecycle equivalent"): a
+request is validated and normalized once by :func:`.logical.parse` — the
+front-end the driver-local engine (:mod:`.local_engine`) compiles from too —
+and this module turns the resulting plan nodes into Spark columns and frames:
 
 - A subtree of **pure filters** (string/integer/float/stringArray/_id leaves
   composed with ``_and``/``_or``) compiles to a single boolean ``Column`` —
@@ -44,14 +47,18 @@ from pyspark.sql import functions as F
 
 from semadb_spark.operators import knn as knn_ops
 from semadb_spark.operators import text_search as text_ops
+from semadb_spark.plans import logical
+from semadb_spark.plans.logical import (
+    RANKED_COLS,
+    Bool,
+    IdFilter,
+    RangeFilter,
+    Shape,
+    TextLeaf,
+    VectorLeaf,
+    parse,
+)
 from semadb_spark.schema import IndexSchema
-
-RANKED_COLS = ("_distance", "_score", "_hybridScore")
-
-# Filtered ANN: candidate sets at or below this size are exact-scanned
-# instead of IVF-probed — full recall where it's cheap, optimistic probing
-# where exactness would cost a table scan.
-FILTERED_EXACT_FALLBACK_ROWS = 10_000
 
 
 def _cross_type_sort_order(v, descending: bool) -> list:
@@ -208,11 +215,8 @@ class SearchEngine:
         stay in the rows, but consumers needing a presentation order must
         sort (or pass sort keys); see the class docstring.
         """
-        self.validate_request(request)
-        compiled = self.compile(request["query"])
-        rows = self._assemble(compiled)
-        rows = self._shape(rows, request)
-        return rows
+        plan = parse(request, self.schema, self.df.columns, self.id_col)
+        return self._shape(self._assemble(self._compile(plan.query)), plan.shape)
 
     def explain(self, request: dict, mode: str = "formatted") -> str:
         """Compile a SearchRequest and return Spark's physical plan for it
@@ -229,70 +233,43 @@ class SearchEngine:
             .ExplainMode.fromString(mode)
         )
 
-    def compile(self, query: dict) -> Compiled:
-        prop = query["property"]
-        if prop == "_and":
-            return self._compile_bool([self.compile(q) for q in query["_and"]], True)
-        if prop == "_or":
-            return self._compile_bool([self.compile(q) for q in query["_or"]], False)
-        if prop == "_id":
-            return Compiled(pred=self._compile_id(query))
-        if prop not in self.schema:
-            raise ValueError(f"property {prop} not found in index schema, cannot query")
-        value = self.schema[prop]
-        if value.type in ("vectorFlat", "vectorVamana"):
-            return self._compile_vector(prop, query, value)
-        if value.type == "text":
-            return self._compile_text(prop, query, value)
-        if value.type == "string":
-            return Compiled(pred=self._compile_string(prop, query["string"], value))
-        if value.type == "integer":
-            return Compiled(pred=self._compile_numeric(prop, query["integer"]))
-        if value.type == "float":
-            return Compiled(pred=self._compile_numeric(prop, query["float"]))
-        if value.type == "stringArray":
-            return Compiled(
-                pred=self._compile_string_array(prop, query["stringArray"], value)
+    def _compile(self, node) -> Compiled:
+        if isinstance(node, Bool):
+            return self._compile_bool(
+                [self._compile(c) for c in node.children], node.conjunction
             )
-        raise ValueError(f"unknown index type {value.type}")
+        if isinstance(node, VectorLeaf):
+            return self._compile_vector(node)
+        if isinstance(node, TextLeaf):
+            return self._compile_text(node)
+        return Compiled(pred=self._filter_pred(node))
 
     # -- leaf filters (F1-F10) ---------------------------------------------
 
-    def _col(self, prop: str) -> Column:
-        return F.col(prop)  # dotted paths resolve into structs natively
-
-    def _compile_id(self, query: dict) -> Column:
-        # shard/index/search.go:171-209: equals or containsAny over UUIDs;
-        # unknown ids silently match nothing.
-        if "string" in query and query["string"] is not None:
-            opts = query["string"]
-            if opts["operator"] != "equals":
-                raise ValueError(f"invalid operator {opts['operator']} for _id")
-            return F.col(self.id_col) == F.lit(opts["value"])
-        if "stringArray" in query and query["stringArray"] is not None:
-            opts = query["stringArray"]
-            if opts["operator"] != "containsAny":
-                raise ValueError(f"invalid operator {opts['operator']} for _id")
-            return F.col(self.id_col).isin(list(opts["value"]))
-        raise ValueError("invalid query for _id, expected string or stringArray")
-
-    def _compile_string(self, prop: str, opts: dict, value) -> Column:
-        c = self._col(prop)
-        v = opts["value"]
-        end = opts.get("endValue")
-        if not value.case_sensitive:
-            # case folding at index & query time (inverted/string.go:29-50)
-            c, v = F.lower(c), v.lower()
-            end = end.lower() if end is not None else None
-        op = opts["operator"]
-        if op == "startsWith":
-            return c.startswith(v)
-        return self._range_op(c, op, F.lit(v), F.lit(end))
-
-    def _compile_numeric(self, prop: str, opts: dict) -> Column:
-        return self._range_op(
-            self._col(prop), opts["operator"], F.lit(opts["value"]), F.lit(opts.get("endValue"))
-        )
+    def _filter_pred(self, node) -> Column:
+        if isinstance(node, IdFilter):
+            # shard/index/search.go:171-209: equals or containsAny over
+            # UUIDs; unknown ids silently match nothing.
+            if node.operator == "equals":
+                return F.col(self.id_col) == F.lit(node.value)
+            return F.col(self.id_col).isin(list(node.value))
+        c = F.col(node.prop)  # dotted paths resolve into structs natively
+        if isinstance(node, RangeFilter):
+            if node.fold:
+                # case folding at index & query time (inverted/string.go:29-50)
+                c = F.lower(c)
+            if node.operator == "startsWith":
+                return c.startswith(node.value)
+            return self._range_op(
+                c, node.operator, F.lit(node.value), F.lit(node.end_value)
+            )
+        if node.fold:
+            c = F.transform(c, F.lower)
+        lit_arr = F.array(*[F.lit(v) for v in node.values])
+        if node.contains_all:
+            # AND of per-value equals lookups (inverted/array.go:58-78)
+            return F.size(F.array_intersect(c, lit_arr)) == len(node.values)
+        return F.arrays_overlap(c, lit_arr)
 
     @staticmethod
     def _range_op(c: Column, op: str, v: Column, end: Column) -> Column:
@@ -310,78 +287,46 @@ class SearchEngine:
             return c < v
         if op == "lessThanOrEquals":
             return c <= v
-        if op == "inRange":
-            return (c >= v) & (c <= end)  # inclusive both ends (inverted.go:244-252)
-        raise ValueError(f"invalid operator {op}")
-
-    def _compile_string_array(self, prop: str, opts: dict, value) -> Column:
-        c = self._col(prop)
-        vals = list(dict.fromkeys(opts["value"]))
-        if not value.case_sensitive:
-            c = F.transform(c, F.lower)
-            vals = list(dict.fromkeys(v.lower() for v in vals))
-        lit_arr = F.array(*[F.lit(v) for v in vals])
-        if opts["operator"] == "containsAll":
-            # AND of per-value equals lookups (inverted/array.go:58-78)
-            return F.size(F.array_intersect(c, lit_arr)) == len(vals)
-        if opts["operator"] == "containsAny":
-            return F.arrays_overlap(c, lit_arr)
-        raise ValueError(f"invalid operator {opts['operator']} for stringArray")
+        # inRange: inclusive both ends (inverted.go:244-252)
+        return (c >= v) & (c <= end)
 
     # -- ranked leaves (R1-R5) ---------------------------------------------
 
-    def _prefiltered_df(self, filter_query: dict | None) -> DataFrame:
+    def _prefiltered_df(self, flt) -> DataFrame:
         """Apply a ranked leaf's pre-filter (R4): computed BEFORE the ranked
         search, pure predicates stay in the same scan."""
-        if filter_query is None:
+        if flt is None:
             return self.df
-        sub = self.compile(filter_query)
+        sub = self._compile(flt)
         if sub.is_pure:
             return self.df.filter(sub.pred)
         return self.df.join(sub.ids, self.id_col, "left_semi")
 
-    def _compile_vector(self, prop: str, query: dict, value) -> Compiled:
-        key = "vectorFlat" if value.type == "vectorFlat" else "vectorVamana"
-        opts = query.get(key)
-        if opts is None:
-            raise ValueError(f"{key} query options not provided for property {prop}")
-        vector = opts["vector"]
-        if value.vector_size and len(vector) != value.vector_size:
-            raise ValueError(
-                f"{key} query vector length mismatch for property {prop}, "
-                f"expected {value.vector_size} got {len(vector)}"
-            )
-        if opts.get("operator", "near") != "near":
-            raise ValueError(f"invalid operator {opts['operator']} for vector query")
-        if not (1 <= len(vector) <= 4096):
-            raise ValueError(
-                f"query vector length must be between 1 and 4096, got {len(vector)}"
-            )
-        # per-search option ranges (models/search.go:267-306); a missing
-        # limit takes the lenient default 10 instead of the reference's
-        # required-field rejection — batch callers shouldn't have to care
-        limit = int(opts.get("limit", 10))
-        if not (1 <= limit <= 75):
-            raise ValueError(f"invalid limit {limit} for vector query, expected 1-75")
-        if key == "vectorVamana" and opts.get("searchSize") is not None:
-            ss = int(opts["searchSize"])
-            if not (25 <= ss <= 75):
-                raise ValueError(
-                    f"invalid searchSize {ss} for vector query, expected 25-75"
-                )
-            if ss < limit:
-                raise ValueError("searchSize must be greater than or equal to limit")
-        # explicit weight 0 is honored; only an absent field defaults to 1
-        # (the reference checks the pointer, not the value)
-        w = opts.get("weight")
-        weight = 1.0 if w is None else float(w)
+    def _filter_ids(self, flt) -> tuple[DataFrame | None, bool]:
+        """(candidate id frame, small) of a filtered ANN leaf. Optimistic
+        probing (the reference's filtered-ANN mode,
+        docs/content/docs/search/filtered.md:49-51) can miss matches whose
+        cells aren't probed — a recall cliff when the filter is highly
+        selective. Bounded early-stop count: a small candidate set is
+        exact-scanned instead (cheap AND full recall); the limit makes the
+        probe cheap for non-selective filters (the scan stops once the
+        threshold is exceeded)."""
+        if flt is None:
+            return None, False
+        ids = self._prefiltered_df(flt).select(self.id_col)
+        n = ids.limit(logical.FILTERED_EXACT_FALLBACK_ROWS + 1).count()
+        return ids, n <= logical.FILTERED_EXACT_FALLBACK_ROWS
+
+    def _compile_vector(self, leaf: VectorLeaf) -> Compiled:
+        prop, key, metric = leaf.prop, leaf.kind, leaf.metric
+        vector, limit, flt = leaf.vector, leaf.limit, leaf.filter
         ann_index = self.vector_indexes.get(prop)
         q_index = self.quantized_indexes.get(prop)
         from semadb_spark.operators.ann import IVFBQIndex, IVFPQIndex
 
         fused_quantized = (
             isinstance(ann_index, (IVFBQIndex, IVFPQIndex))
-            and value.distance_metric in ("euclidean", "cosine", "dot")
+            and metric in ("euclidean", "cosine", "dot")
         )
         graph_q = self.graph_indexes.get(prop) if key == "vectorVamana" else None
         quantized_graph = (
@@ -389,10 +334,10 @@ class SearchEngine:
             and graph_q.get("packed") is not None
             and graph_q.get("packed_codes") in ("bq", "pq")
             and q_index is not None
-            and value.distance_metric in ("euclidean", "cosine", "dot")
+            and metric in ("euclidean", "cosine", "dot")
         )
         qg_flt_ids = None
-        if quantized_graph and opts.get("filter") is not None:
+        if quantized_graph and flt is not None:
             # filtered quantized-graph route (r9): a BROAD candidate set
             # runs the reference's seeded quantized beam on the packed
             # artifact (search.go:28-51 + vamana.go:257-259 — filter-
@@ -400,9 +345,8 @@ class SearchEngine:
             # small set keeps the pre-r9 filtered routes below (fused /
             # flat quantized scan or exact fallback — full recall at
             # lower cost than any beam).
-            qg_flt_ids = self._prefiltered_df(opts["filter"]).select(self.id_col)
-            n = qg_flt_ids.limit(FILTERED_EXACT_FALLBACK_ROWS + 1).count()
-            if n <= FILTERED_EXACT_FALLBACK_ROWS:
+            qg_flt_ids, small = self._filter_ids(flt)
+            if small:
                 quantized_graph = False
                 qg_flt_ids = None
         if quantized_graph and graph_q.get("quantizer_fp") is not None:
@@ -448,17 +392,13 @@ class SearchEngine:
             # (fused/flat quantized scan or exact fallback).
             from semadb_spark.operators.vamana import vamana_serve_packed
 
-            search_size = int(
-                opts.get("searchSize")
-                or value.params.get("searchSize")
-                or graph_q["search_size"]
-            )
+            search_size = int(leaf.search_size or graph_q["search_size"])
             nprobe = max(1, min(len(graph_q["centroids"]), search_size // 8))
             topk = vamana_serve_packed(
                 graph_q["packed"],
                 [("q", vector)],
                 limit,
-                metric=value.distance_metric,
+                metric=metric,
                 search_size=search_size,
                 centroids=graph_q["centroids"],
                 # filtered mode fans to every shard holding a filtered
@@ -489,23 +429,13 @@ class SearchEngine:
             # code scan whenever the artifact exists.
             from semadb_spark.operators.ann import ivfbq_search
 
-            search_size = int(
-                opts.get("searchSize") or value.params.get("searchSize") or 75
-            )
+            search_size = int(leaf.search_size or 75)
             nprobe = max(1, min(len(ann_index.centroids), search_size // 8))
-            flt_ids = None
-            exact_fallback = False
-            if opts.get("filter") is not None:
-                flt_ids = self._prefiltered_df(opts["filter"]).select(self.id_col)
-                # same bounded early-stop as the float ANN branch below: a
-                # small filtered candidate set is exact-scanned (full
-                # recall) instead of optimistically probed
-                n = flt_ids.limit(FILTERED_EXACT_FALLBACK_ROWS + 1).count()
-                exact_fallback = n <= FILTERED_EXACT_FALLBACK_ROWS
+            flt_ids, exact_fallback = self._filter_ids(flt)
             if exact_fallback:
-                base = self._prefiltered_df(opts["filter"])
+                base = self._prefiltered_df(flt)
                 topk = knn_ops.knn_topk(
-                    base, prop, vector, value.distance_metric, limit,
+                    base, prop, vector, metric, limit,
                     id_col=self.id_col,
                 )
             elif isinstance(ann_index, IVFBQIndex):
@@ -515,7 +445,7 @@ class SearchEngine:
                     limit,
                     nprobe=nprobe,
                     oversample=max(2, search_size // max(limit, 1)),
-                    rerank_metric=value.distance_metric,
+                    rerank_metric=metric,
                     candidate_ids=flt_ids,
                 ).select(F.col(ann_index.id_col).alias(self.id_col), "_distance")
             else:
@@ -524,13 +454,13 @@ class SearchEngine:
                 topk = ivfpq_search(
                     ann_index,
                     [("q", vector)],
-                    value.distance_metric,
+                    metric,
                     limit,
                     nprobe=nprobe,
                     oversample=max(2, search_size // max(limit, 1)),
                     candidate_ids=flt_ids,
                 ).select(F.col(ann_index.id_col).alias(self.id_col), "_distance")
-        elif q_index is not None and value.quantizer is not None:
+        elif q_index is not None and self.schema[prop].quantizer is not None:
             # Schema-declared quantized serving: every query on this property
             # ranks over the codes (vectorstore.go:75+ — the reference's
             # store is wrapped the same way, filtered or not). A pre-filter
@@ -540,8 +470,8 @@ class SearchEngine:
             import dataclasses
 
             codes = q_index.codes
-            if opts.get("filter") is not None:
-                base_ids = self._prefiltered_df(opts["filter"]).select(self.id_col)
+            if flt is not None:
+                base_ids = self._prefiltered_df(flt).select(self.id_col)
                 codes = codes.join(base_ids, self.id_col, "left_semi")
             scoped = dataclasses.replace(q_index, codes=codes)
             topk = quantized_topk(scoped, vector, limit).select(
@@ -550,7 +480,7 @@ class SearchEngine:
         elif (
             key == "vectorVamana"
             and ann_index is not None
-            and value.distance_metric not in ("hamming", "jaccard")
+            and metric not in ("hamming", "jaccard")
         ):
             # approximate serving over the persisted index — vectorVamana is
             # the reference's ANN type (beam search, vamana/search.go:9-102).
@@ -560,27 +490,14 @@ class SearchEngine:
             # without ever scanning the full table.
             from semadb_spark.operators.ann import ivf_search
 
-            search_size = int(opts.get("searchSize") or value.params.get("searchSize") or 75)
+            search_size = int(leaf.search_size or 75)
             nprobe = max(1, min(len(ann_index.centroids), search_size // 8))
-            flt_ids = None
-            exact_fallback = False
-            if opts.get("filter") is not None:
-                flt_ids = self._prefiltered_df(opts["filter"]).select(self.id_col)
-                # Optimistic probing (the reference's filtered-ANN mode,
-                # docs/content/docs/search/filtered.md:49-51) can miss
-                # matches whose cells aren't probed — a recall cliff when
-                # the filter is highly selective. Bounded early-stop count:
-                # a small candidate set is exact-scanned instead (cheap AND
-                # full recall); the limit makes the probe cheap for
-                # non-selective filters (the scan stops once the threshold
-                # is exceeded).
-                n = flt_ids.limit(FILTERED_EXACT_FALLBACK_ROWS + 1).count()
-                exact_fallback = n <= FILTERED_EXACT_FALLBACK_ROWS
+            flt_ids, exact_fallback = self._filter_ids(flt)
             graph = self.graph_indexes.get(prop)
             if exact_fallback:
-                base = self._prefiltered_df(opts["filter"])
+                base = self._prefiltered_df(flt)
                 topk = knn_ops.knn_topk(
-                    base, prop, vector, value.distance_metric, limit,
+                    base, prop, vector, metric, limit,
                     id_col=self.id_col,
                 )
             elif flt_ids is not None and graph is not None:
@@ -607,7 +524,7 @@ class SearchEngine:
                             graph["packed"],
                             [("q", vector)],
                             limit,
-                            metric=value.distance_metric,
+                            metric=metric,
                             search_size=search_size,
                             dtype=graph.get("pack_dtype", "float32"),
                             kernel="batched",
@@ -626,7 +543,7 @@ class SearchEngine:
                             graph["shard_edges"],
                             [("q", vector)],
                             limit,
-                            metric=value.distance_metric,
+                            metric=metric,
                             search_size=search_size,
                             candidate_ids=flt_ids,
                         )
@@ -636,12 +553,12 @@ class SearchEngine:
                 topk = ivf_search(
                     ann_index,
                     [("q", vector)],
-                    value.distance_metric,
+                    metric,
                     limit,
                     nprobe=nprobe,
                     candidate_ids=flt_ids,
                 ).select(F.col(ann_index.id_col).alias(self.id_col), "_distance")
-        elif value.distance_metric in ("hamming", "jaccard"):
+        elif metric in ("hamming", "jaccard"):
             # D8: float vectors queried with a bit metric are force-binarized
             # at threshold 0.5 — the reference auto-wraps a binary quantizer
             # around the vector store and serves from the WRAPPED codes, it
@@ -655,8 +572,8 @@ class SearchEngine:
 
             from semadb_spark.operators.quantize import bq_encode, encode_bits_np
 
-            base = self._prefiltered_df(opts.get("filter"))
-            cache_key = (prop, opts.get("filter") is None)
+            base = self._prefiltered_df(flt)
+            cache_key = (prop, flt is None)
             codes = self._d8_codes.get(cache_key) if cache_key[1] else None
             if codes is None:
                 codes = bq_encode(
@@ -679,16 +596,16 @@ class SearchEngine:
                     codes,
                     "bq_code",
                     [("q", qcode.tolist())],
-                    value.distance_metric,
+                    metric,
                     limit,
                     id_col=self.id_col,
                 )
                 .select(self.id_col, "_distance")
             )
         else:
-            base = self._prefiltered_df(opts.get("filter"))
+            base = self._prefiltered_df(flt)
             topk = knn_ops.knn_topk(
-                base, prop, vector, value.distance_metric, limit, id_col=self.id_col
+                base, prop, vector, metric, limit, id_col=self.id_col
             )
         ranked = (
             topk.select(self.id_col, "_distance")
@@ -696,7 +613,7 @@ class SearchEngine:
             .withColumn(
                 # HybridScore = -1 * weight * distance (flat.go:79-110)
                 "_hybridScore",
-                F.lit(-1.0 * weight) * F.col("_distance"),
+                F.lit(-1.0 * leaf.weight) * F.col("_distance"),
             )
         )
         return Compiled(
@@ -706,28 +623,15 @@ class SearchEngine:
             ids_is_ranked=True,
         )
 
-    def _compile_text(self, prop: str, query: dict, value) -> Compiled:
-        opts = query.get("text")
-        if opts is None:
-            raise ValueError(f"text query options not provided for property {prop}")
-        if not opts.get("value"):
-            raise ValueError("text query value cannot be empty")
-        if opts.get("operator") not in ("containsAll", "containsAny"):
-            raise ValueError(
-                f"invalid operator {opts.get('operator')} for text query"
-            )
-        limit = int(opts.get("limit", 10))
-        if not (1 <= limit <= 75):
-            raise ValueError(f"invalid limit {limit} for text query, expected 1-75")
-        w = opts.get("weight")
-        weight = 1.0 if w is None else float(w)
+    def _compile_text(self, leaf: TextLeaf) -> Compiled:
+        prop = leaf.prop
         doc_terms = self.text_indexes.get(prop)
         cand = None
-        if opts.get("filter") is not None:
+        if leaf.filter is not None:
             # R4 pre-filter: intersect the candidate set BEFORE scoring and
             # truncation (text.go:333-335, 387-393); df/IDF remain
             # corpus-wide facts regardless of the filter.
-            sub = self.compile(opts["filter"])
+            sub = self._compile(leaf.filter)
             cand = (
                 self.df.filter(sub.pred).select(self.id_col)
                 if sub.is_pure
@@ -736,10 +640,10 @@ class SearchEngine:
         scored = text_ops.text_search(
             self.df,
             prop,
-            opts["value"],
-            operator=opts["operator"],
-            limit=limit,
-            weight=weight,
+            leaf.value,
+            operator=leaf.operator,
+            limit=leaf.limit,
+            weight=leaf.weight,
             id_col=self.id_col,
             doc_terms=doc_terms,
             num_docs=self.text_index_stats.get(prop),
@@ -764,9 +668,39 @@ class SearchEngine:
             return self.df.filter(c.pred).select(self.id_col)
         return c.ids
 
+    def _merge(self, children: list[Compiled], need: int | None = None) -> DataFrame:
+        """Hybrid merge of the children's ranked frames: duplicate ids sum
+        hybrid scores; first (lowest child index) non-null distance/score
+        wins (search.go:255-289) — the struct min makes the reference's
+        append-order rule deterministic. With ``need``, only ids ranked by
+        that many children survive."""
+        unioned = reduce(
+            DataFrame.unionByName,
+            [
+                c.ranked.withColumn("_src", F.lit(i))
+                for i, c in enumerate(children)
+                if c.ranked is not None
+            ],
+        )
+        aggs = [F.sum("_hybridScore").alias("_hybridScore")] + [
+            F.min(
+                F.when(F.col(c).isNotNull(), F.struct(F.col("_src"), F.col(c)))
+            ).alias(alias)
+            for c, alias in (("_distance", "_dmin"), ("_score", "_smin"))
+        ]
+        if need is not None:
+            aggs.append(F.count(F.lit(1)).alias("_nsrc"))
+        merged = unioned.groupBy(self.id_col).agg(*aggs)
+        if need is not None:
+            merged = merged.filter(F.col("_nsrc") == need)
+        return merged.select(
+            self.id_col,
+            F.col("_dmin._distance").alias("_distance"),
+            F.col("_smin._score").alias("_score"),
+            "_hybridScore",
+        )
+
     def _compile_bool(self, children: list[Compiled], conjunction: bool) -> Compiled:
-        if len(children) == 1:
-            return children[0]
         if all(c.is_pure for c in children):
             combine = (lambda a, b: a & b) if conjunction else (lambda a, b: a | b)
             return Compiled(pred=reduce(combine, [c.pred for c in children]))
@@ -780,44 +714,14 @@ class SearchEngine:
         # ranked frame carries distinct ids (leaf topk/groupBy output; the
         # pre-existing "inner join is a semi join" comment below leans on
         # the same invariant), so count(*) per id == number of
-        # contributing children. Aggregate expressions are IDENTICAL to
-        # the general path; _and keeps ids present in all children
-        # (search.go:266-268), _or keeps them all.
+        # contributing children. The merge is the general path's; _and keeps
+        # ids present in all children (search.go:266-268), _or keeps them
+        # all.
         if all(
             (not c.is_pure) and c.ids_is_ranked and c.ranked is not None
             for c in children
         ):
-            unioned = reduce(
-                DataFrame.unionByName,
-                [
-                    c.ranked.withColumn("_src", F.lit(i))
-                    for i, c in enumerate(children)
-                ],
-            )
-            merged = unioned.groupBy(self.id_col).agg(
-                F.sum("_hybridScore").alias("_hybridScore"),
-                F.min(
-                    F.when(
-                        F.col("_distance").isNotNull(),
-                        F.struct(F.col("_src"), F.col("_distance")),
-                    )
-                ).alias("_dmin"),
-                F.min(
-                    F.when(
-                        F.col("_score").isNotNull(),
-                        F.struct(F.col("_src"), F.col("_score")),
-                    )
-                ).alias("_smin"),
-                F.count(F.lit(1)).alias("_nsrc"),
-            )
-            if conjunction:
-                merged = merged.filter(F.col("_nsrc") == len(children))
-            merged = merged.select(
-                self.id_col,
-                F.col("_dmin._distance").alias("_distance"),
-                F.col("_smin._score").alias("_score"),
-                "_hybridScore",
-            )
+            merged = self._merge(children, len(children) if conjunction else None)
             return Compiled(
                 ids=merged.select(self.id_col),
                 ranked=merged,
@@ -851,37 +755,9 @@ class SearchEngine:
             id_frames = [self._ids_of(c) for c in children]
             final_set = reduce(DataFrame.unionByName, id_frames).distinct()
 
-        ranked_frames = [
-            c.ranked.withColumn("_src", F.lit(i))
-            for i, c in enumerate(children)
-            if c.ranked is not None
-        ]
         merged = None
-        if ranked_frames:
-            unioned = reduce(DataFrame.unionByName, ranked_frames)
-            # Duplicate ids: sum hybrid scores; first (lowest child index)
-            # non-null distance/score wins (search.go:255-289) — the struct
-            # min makes the reference's append-order rule deterministic.
-            merged = unioned.groupBy(self.id_col).agg(
-                F.sum("_hybridScore").alias("_hybridScore"),
-                F.min(
-                    F.when(
-                        F.col("_distance").isNotNull(),
-                        F.struct(F.col("_src"), F.col("_distance")),
-                    )
-                ).alias("_dmin"),
-                F.min(
-                    F.when(
-                        F.col("_score").isNotNull(),
-                        F.struct(F.col("_src"), F.col("_score")),
-                    )
-                ).alias("_smin"),
-            ).select(
-                self.id_col,
-                F.col("_dmin._distance").alias("_distance"),
-                F.col("_smin._score").alias("_score"),
-                "_hybridScore",
-            )
+        if any(c.ranked is not None for c in children):
+            merged = self._merge(children)
             if conjunction:
                 # _and drops ranked rows outside the intersection
                 # (search.go:266-268). merged is bounded by the sum of the
@@ -925,24 +801,20 @@ class SearchEngine:
     def _assemble(self, compiled: Compiled) -> DataFrame:
         """Backfill point data: ranked rows keep scores, filter-only ids are
         appended with null scores (shard/shard.go:350-369)."""
-        if compiled.is_pure:
-            return (
-                self.df.filter(compiled.pred)
-                .withColumn("_distance", F.lit(None).cast("double"))
-                .withColumn("_score", F.lit(None).cast("double"))
-                .withColumn("_hybridScore", F.lit(0.0))
-                .withColumn("_rankedFirst", F.lit(1))
-            )
-        ranked = compiled.ranked
-        ids = F.broadcast(compiled.ids) if compiled.ids_bounded else compiled.ids
-        if ranked is None:
-            rows = self.df.join(ids, self.id_col, "left_semi")
+        def unranked(rows: DataFrame) -> DataFrame:
             return (
                 rows.withColumn("_distance", F.lit(None).cast("double"))
                 .withColumn("_score", F.lit(None).cast("double"))
                 .withColumn("_hybridScore", F.lit(0.0))
                 .withColumn("_rankedFirst", F.lit(1))
             )
+
+        if compiled.is_pure:
+            return unranked(self.df.filter(compiled.pred))
+        ranked = compiled.ranked
+        ids = F.broadcast(compiled.ids) if compiled.ids_bounded else compiled.ids
+        if ranked is None:
+            return unranked(self.df.join(ids, self.id_col, "left_semi"))
         # ranked is bounded by the branch limits (<= 75 rows per ranked
         # leaf) — broadcast explicitly so the backfill never shuffles the
         # table, independent of AQE's runtime size estimate.
@@ -962,16 +834,10 @@ class SearchEngine:
         )
         if compiled.ids_bounded:
             leftover_ids = F.broadcast(leftover_ids)
-        leftover_rows = (
-            self.df.join(leftover_ids, self.id_col, "left_semi")
-            .withColumn("_distance", F.lit(None).cast("double"))
-            .withColumn("_score", F.lit(None).cast("double"))
-            .withColumn("_hybridScore", F.lit(0.0))
-            .withColumn("_rankedFirst", F.lit(1))
-        )
+        leftover_rows = unranked(self.df.join(leftover_ids, self.id_col, "left_semi"))
         return ranked_rows.unionByName(leftover_rows)
 
-    def _shape(self, rows: DataFrame, request: dict) -> DataFrame:
+    def _shape(self, rows: DataFrame, shape: Shape) -> DataFrame:
         # Default order: ranked first by hybrid desc, then filter-only rows,
         # id tiebreak (shard.go:350-369 + search.go:291-295). User sort keys
         # take precedence with missing-last (utils/compare.go:56-89); the
@@ -981,63 +847,41 @@ class SearchEngine:
             F.col("_hybridScore").desc(),
             F.col(self.id_col).asc(),
         ]
-        sort_opts = request.get("sort") or []
-        if len(sort_opts) > 10:
-            raise ValueError("sort options exceed maximum of 10")
         user_order: list = []
-        for s in sort_opts:
-            prop = s["property"]
-            desc = bool(s.get("descending"))
-            root = prop.split(".", 1)[0]
-            if root in rows.columns:
-                user_order.append(
-                    F.col(prop).desc_nulls_last()
-                    if desc
-                    else F.col(prop).asc_nulls_last()
-                )
-            elif "payload" in rows.columns:
+        for key in shape.sort:
+            if key.payload:
                 # Schemaless sort key: the field lives in the payload map
                 # (JSON-encoded). Cross-type grouping per CompareAny.
-                v = F.element_at(F.col("payload"), F.lit(root))
-                if "." in prop:
-                    v = F.get_json_object(v, "$." + prop.split(".", 1)[1])
-                user_order.extend(_cross_type_sort_order(v, desc))
+                v = F.element_at(F.col("payload"), F.lit(key.root))
+                if "." in key.path:
+                    v = F.get_json_object(v, "$." + key.path.split(".", 1)[1])
+                user_order.extend(_cross_type_sort_order(v, key.descending))
+            elif key.descending:
+                user_order.append(F.col(key.path).desc_nulls_last())
             else:
-                raise ValueError(f"unknown sort property {prop}")
+                user_order.append(F.col(key.path).asc_nulls_last())
         order = user_order + order
 
-        offset = int(request.get("offset", 0))
-        # Missing limit defaults to 10 (httpapi/v2/handlers.go:442-445).
-        # An EXPLICIT null limit is an engine extension meaning "all rows"
-        # (batch-analytics mode; the reference's HTTP API always caps).
-        limit = request["limit"] if "limit" in request else 10
+        offset, limit = shape.offset, shape.limit
         if limit is not None:
             # Distributed pre-trim: orderBy().limit() is TakeOrderedAndProject
             # (per-partition bounded top-k + driver merge). With no offset it
             # IS the answer — no global row_number window at all.
-            rows = rows.orderBy(*order).limit(offset + int(limit))
-            if offset:
-                # Slice off the offset; the window sees at most offset+limit
-                # (<= 200) pre-trimmed rows, so single-partition is free.
-                w = Window.orderBy(*order)
-                rows = (
-                    rows.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") > offset)
-                    .drop("_rn")
-                )
-        elif offset:
-            # unlimited + offset: the one shape that still needs a global
-            # row_number over the full result (rare; prefer a limit)
+            rows = rows.orderBy(*order).limit(offset + limit)
+        elif offset or user_order:
+            # unlimited but offset or explicitly sorted: honor the order
             rows = rows.orderBy(*order)
+        if offset:
+            # Slice off the offset. Limited: the window sees at most
+            # offset+limit (<= 200) pre-trimmed rows, so single-partition is
+            # free. Unlimited + offset is the one shape that still needs a
+            # global row_number over the full result (rare; prefer a limit).
             w = Window.orderBy(*order)
             rows = (
                 rows.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") > offset)
                 .drop("_rn")
             )
-        elif user_order:
-            # unlimited but explicitly sorted: honor the requested order
-            rows = rows.orderBy(*order)
         # else: batch mode (explicit null limit, no offset, no sort keys) —
         # return the full result set UNORDERED. The default ranked-first
         # order exists for paginated API responses; globally sorting an
@@ -1049,35 +893,13 @@ class SearchEngine:
         # orderBy used only to make output deterministic.
         rows = rows.drop("_rankedFirst")
 
-        select = request.get("select")
-        if select and select != ["*"] and "*" not in select:
-            cols = [F.col(self.id_col)]
-            roots: dict[str, list[str]] = {}
-            for p in select:
-                if "." in p:
-                    roots.setdefault(p.split(".", 1)[0], []).append(p)
-                elif p != self.id_col:  # the id always leads, once
-                    cols.append(F.col(p))
-            for root, paths in roots.items():
+        sel = shape.select
+        if sel is not None:
+            cols = [F.col(c) for c in sel.columns]
+            for root, fields in sel.nested:
                 # re-nest dotted selects: {"nested": {"field": v}} (shard.go:431-448)
-                cols.append(
-                    F.struct(
-                        *[F.col(p).alias(p.split(".", 1)[1]) for p in paths]
-                    ).alias(root)
-                )
+                nested = [F.col(f"{root}.{f}").alias(f) for f in fields]
+                cols.append(F.struct(*nested).alias(root))
             cols += [F.col(c) for c in RANKED_COLS]
             rows = rows.select(*cols)
         return rows
-
-    # -- validation (models/search.go:27-50) --------------------------------
-
-    @staticmethod
-    def validate_request(request: dict) -> None:
-        if "query" not in request:
-            raise ValueError("query is required")
-        offset = int(request.get("offset", 0))
-        if offset < 0:
-            raise ValueError("offset must be greater than or equal to 0")
-        limit = request.get("limit")
-        if limit is not None and not (1 <= int(limit) <= 100):
-            raise ValueError("limit must be between 1 and 100")

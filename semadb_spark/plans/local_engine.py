@@ -13,8 +13,11 @@ composition: it compiles the SAME query tree as
 :class:`~semadb_spark.plans.compiler.SearchEngine` but routes every leg
 through the local tiers and does the hybrid merge in pandas.
 
-Semantics are pinned to the compiler (parity-tested per leaf kind and per
-composed shape):
+Both engines compile from the same front-end: :func:`.logical.parse`
+validates and normalizes a request once, so the two accept, default and
+reject requests identically, and a shape this tier cannot serve is refused
+from the plan before any leg runs. Execution is pinned to the compiler
+(parity-tested per leaf kind and per composed shape):
 
 - pure-filter subtrees -> an exact pandas predicate over resident columns.
   Filter columns are decoded from the bucketed snapshot ONCE per engine
@@ -57,9 +60,11 @@ composed shape):
 Only the fused IVF-BQ/IVF-PQ oversample+rerank route still raises
 :class:`LocalServeUnsupported` among the vector tiers (its
 candidate-pool mechanics are engine-side); callers fall back to
-``Collection.search``. Broad-filtered queries on graph+IVF properties
-(the engine's seeded-beam walk) and payload (schemaless) sort keys are
-likewise unsupported locally.
+``Collection.search``. Filtered quantized-graph legs, text legs without a
+persisted index and payload (schemaless) sort keys are likewise refused,
+all from the plan. The one refusal that depends on the data is a
+broad-filtered query on a graph+IVF property (the engine's seeded-beam
+walk), raised when the candidate set is known.
 """
 
 from __future__ import annotations
@@ -72,8 +77,18 @@ import numpy as np
 import pandas as pd
 
 from semadb_spark.operators._pool import ServePool
-
-RANKED_COLS = ("_distance", "_score", "_hybridScore")
+from semadb_spark.plans import logical
+from semadb_spark.plans.logical import (
+    RANKED_COLS,
+    Bool,
+    IdFilter,
+    RangeFilter,
+    Shape,
+    TextLeaf,
+    VectorLeaf,
+    parse,
+    walk,
+)
 
 # internal ranked-frame id column. Deliberately NOT "id": nothing reserves
 # "id" as a property name, so a collection may legally define one — the
@@ -117,15 +132,26 @@ class _LocalCompiled:
         return self.pred is not None
 
 
-def _empty_ranked() -> pd.DataFrame:
+def _no_hits() -> pd.DataFrame:
     return pd.DataFrame(
-        {
-            RID: pd.Series([], dtype=object),
-            "_distance": pd.Series([], dtype=float),
-            "_score": pd.Series([], dtype=float),
-            "_hybridScore": pd.Series([], dtype=float),
-        }
+        {RID: pd.Series([], dtype=object), "_distance": pd.Series([], dtype=float)}
     )
+
+
+def _dists(X: np.ndarray, n2: np.ndarray, q: np.ndarray, metric: str) -> np.ndarray:
+    """Query distances to float rows — the shared kernel's formulas.
+    Euclidean runs inline with cached row norms ``n2``: one GEMV + saxpy,
+    same ||x||² - 2x·q + ||q||² formula (and clamp), minus the kernel's
+    per-call rows x d squared temp."""
+    if metric == "euclidean":
+        return np.maximum(n2 - 2.0 * (X @ q) + (q @ q), 0.0)
+    if metric == "dot":
+        return -(X @ q)
+    if metric == "cosine":
+        return 1.0 - X @ q
+    from semadb_spark.functions.distances import numpy_distance_matrix
+
+    return numpy_distance_matrix(metric, X, q[None, :])[:, 0]
 
 
 class LocalSearchEngine:
@@ -308,7 +334,7 @@ class LocalSearchEngine:
                                 self.graph[p]["books"] = books
                                 # clears any code-scan refusal set above:
                                 # the engine's route precedence puts the
-                                # quantized graph FIRST (compiler.py:402)
+                                # quantized graph FIRST (compiler.py _compile_vector)
                                 self.unsupported_vec.pop(p, None)
                         else:
                             self.unsupported_vec.setdefault(
@@ -476,72 +502,77 @@ class LocalSearchEngine:
         """Execute a full SearchRequest locally; returns a pandas frame with
         the engine's output shape (point columns + _distance/_score/
         _hybridScore), ordered exactly like Collection.search."""
-        from semadb_spark.plans.compiler import SearchEngine
+        plan = parse(request, self.schema, self._frame_fields)
+        self._check_servable(plan)
+        compiled = self._compile(plan.query)
+        return self._assemble_and_shape(compiled, plan.shape)
 
-        SearchEngine.validate_request(request)
-        compiled = self.compile(request["query"])
-        rows = self._assemble_and_shape(compiled, request)
-        return rows
+    def _check_servable(self, plan) -> None:
+        """Structural refusals, decided from the plan before any leg runs
+        (only the broad graph+IVF candidate check waits for the data)."""
+        for node in walk(plan.query):
+            if isinstance(node, TextLeaf) and node.prop not in self.text:
+                raise LocalServeUnsupported(
+                    f"no persisted text index for {node.prop} at this "
+                    "snapshot; run build_text_index (the local tier never "
+                    "re-tokenizes the corpus per query)"
+                )
+            if not isinstance(node, VectorLeaf):
+                continue
+            if node.prop in self.unsupported_vec:
+                raise LocalServeUnsupported(
+                    f"property {node.prop} serves through a distributed route "
+                    f"({self.unsupported_vec[node.prop]}); use Collection.search"
+                )
+            if node.filter is not None and self._quantized_graph(node):
+                # the engine's filtered quantized-graph route picks seeded
+                # beam vs exact fallback by candidate breadth — a
+                # driver-side re-implementation would drift; route filtered
+                # requests to the engine
+                raise LocalServeUnsupported(
+                    f"filtered query on quantized-graph property {node.prop}; "
+                    "use Collection.search"
+                )
+        for key in plan.shape.sort:
+            if key.payload or key.root == "payload":
+                raise LocalServeUnsupported(
+                    f"sort property {key.path} is not a root column; "
+                    "schemaless cross-type sort is engine-only"
+                )
+
+    def _quantized_graph(self, leaf: VectorLeaf) -> bool:
+        """Does the ENGINE serve this leaf through the quantized-graph
+        route (codes baked + frozen quantizer resolved)?"""
+        graph = self.graph.get(leaf.prop)
+        return leaf.kind == "vectorVamana" and graph is not None and (
+            graph["thresholds"] is not None or graph["books"] is not None
+        )
 
     # -- compile --------------------------------------------------------------
 
-    def compile(self, query: dict) -> _LocalCompiled:
-        prop = query["property"]
-        if prop == "_and":
+    def _compile(self, node) -> _LocalCompiled:
+        if isinstance(node, Bool):
             return self._compile_bool(
-                [self.compile(q) for q in query["_and"]], True
+                [self._compile(c) for c in node.children], node.conjunction
             )
-        if prop == "_or":
-            return self._compile_bool(
-                [self.compile(q) for q in query["_or"]], False
-            )
-        if prop == "_id":
-            return _LocalCompiled(pred=self._compile_id(query))
-        if prop not in self.schema:
-            raise ValueError(
-                f"property {prop} not found in index schema, cannot query"
-            )
-        value = self.schema[prop]
-        if value.type in ("vectorFlat", "vectorVamana"):
-            return self._compile_vector(prop, query, value)
-        if value.type == "text":
-            return self._compile_text(prop, query, value)
-        if value.type == "string":
-            return _LocalCompiled(
-                pred=self._compile_string(prop, query["string"], value)
-            )
-        if value.type == "integer":
-            return _LocalCompiled(pred=self._compile_numeric(prop, query["integer"]))
-        if value.type == "float":
-            return _LocalCompiled(pred=self._compile_numeric(prop, query["float"]))
-        if value.type == "stringArray":
-            return _LocalCompiled(
-                pred=self._compile_string_array(prop, query["stringArray"], value)
-            )
-        raise ValueError(f"unknown index type {value.type}")
+        if isinstance(node, VectorLeaf):
+            return self._compile_vector(node)
+        if isinstance(node, TextLeaf):
+            return self._compile_text(node)
+        if isinstance(node, IdFilter):
+            return _LocalCompiled(pred=self._compile_id(node))
+        if isinstance(node, RangeFilter):
+            return _LocalCompiled(pred=self._compile_range(node))
+        return _LocalCompiled(pred=self._compile_string_array(node))
 
     # -- leaf filters (F1-F10), each compiled to an exact pandas fn -----------
 
-    def _compile_id(self, query: dict) -> tuple:
-        if "string" in query and query["string"] is not None:
-            opts = query["string"]
-            if opts["operator"] != "equals":
-                raise ValueError(f"invalid operator {opts['operator']} for _id")
-            v = opts["value"]
-            return (
-                lambda pdf: (pdf[self.id_col] == v).to_numpy(),
-                {self.id_col},
-            )
-        if "stringArray" in query and query["stringArray"] is not None:
-            opts = query["stringArray"]
-            if opts["operator"] != "containsAny":
-                raise ValueError(f"invalid operator {opts['operator']} for _id")
-            vals = list(opts["value"])
-            return (
-                lambda pdf: pdf[self.id_col].isin(vals).to_numpy(),
-                {self.id_col},
-            )
-        raise ValueError("invalid query for _id, expected string or stringArray")
+    def _compile_id(self, node: IdFilter) -> tuple:
+        v = node.value
+        if node.operator == "equals":
+            return (lambda pdf: (pdf[self.id_col] == v).to_numpy(), {self.id_col})
+        vals = list(v)
+        return (lambda pdf: pdf[self.id_col].isin(vals).to_numpy(), {self.id_col})
 
     @staticmethod
     def _range_mask(s: pd.Series, op: str, v, end):
@@ -561,21 +592,19 @@ class LocalSearchEngine:
             return (s < v).to_numpy() & notnull
         if op == "lessThanOrEquals":
             return (s <= v).to_numpy() & notnull
-        if op == "inRange":
-            return ((s >= v) & (s <= end)).to_numpy() & notnull
-        raise ValueError(f"invalid operator {op}")
+        return ((s >= v) & (s <= end)).to_numpy() & notnull  # inRange
 
-    def _compile_string(self, prop: str, opts: dict, value) -> tuple:
-        v = opts["value"]
-        end = opts.get("endValue")
-        op = opts["operator"]
-        fold = not value.case_sensitive
+    def _compile_range(self, node: RangeFilter) -> tuple:
+        prop, op, v, end = node.prop, node.operator, node.value, node.end_value
+        fold = node.fold
         root = prop.split(".", 1)[0]
-        if fold:
-            v = v.lower()
-            end = end.lower() if end is not None else None
+        if node.kind != "string":
+            def fn(pdf):
+                return self._range_mask(_leaf_series(pdf, prop), op, v, end)
 
-        def fn(pdf, prop=prop, v=v, end=end, op=op, fold=fold, root=root):
+            return (fn, {root})
+
+        def fn(pdf):
             s = _leaf_series(pdf, prop)
             # equality over a resident root column goes through the
             # factorized codes (int compare, null-safe via the -1
@@ -598,29 +627,11 @@ class LocalSearchEngine:
 
         return (fn, {root})
 
-    def _compile_numeric(self, prop: str, opts: dict) -> tuple:
-        v, end, op = opts["value"], opts.get("endValue"), opts["operator"]
-        root = prop.split(".", 1)[0]
+    def _compile_string_array(self, node) -> tuple:
+        prop, fold, contains_all = node.prop, node.fold, node.contains_all
+        want = set(node.values)
 
-        def fn(pdf, prop=prop, v=v, end=end, op=op):
-            return self._range_mask(_leaf_series(pdf, prop), op, v, end)
-
-        return (fn, {root})
-
-    def _compile_string_array(self, prop: str, opts: dict, value) -> tuple:
-        vals = list(dict.fromkeys(opts["value"]))
-        fold = not value.case_sensitive
-        if fold:
-            vals = list(dict.fromkeys(v.lower() for v in vals))
-        want = set(vals)
-        contains_all = opts["operator"] == "containsAll"
-        if not contains_all and opts["operator"] != "containsAny":
-            raise ValueError(
-                f"invalid operator {opts['operator']} for stringArray"
-            )
-        root = prop.split(".", 1)[0]
-
-        def fn(pdf, prop=prop, want=want, fold=fold, contains_all=contains_all):
+        def fn(pdf):
             def one(arr):
                 if arr is None or (
                     not isinstance(arr, (list, np.ndarray)) and pd.isna(arr)
@@ -631,7 +642,7 @@ class LocalSearchEngine:
 
             return _leaf_series(pdf, prop).map(one).to_numpy(dtype=bool)
 
-        return (fn, {root})
+        return (fn, {prop.split(".", 1)[0]})
 
     # -- ranked leaves ---------------------------------------------------------
 
@@ -643,12 +654,12 @@ class LocalSearchEngine:
         mask[pos[pos >= 0]] = True
         return mask
 
-    def _candidate_ids(self, filter_query: dict | None) -> np.ndarray | None:
+    def _candidate_ids(self, flt) -> np.ndarray | None:
         """R4 pre-filter -> candidate id array (computed BEFORE ranking)."""
-        if filter_query is None:
+        if flt is None:
             return None
         ids_all, _, _ = self._canonical_ids()
-        return ids_all[self._mask_of(self.compile(filter_query))]
+        return ids_all[self._mask_of(self._compile(flt))]
 
     def _vec_matrix(self, prop: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(ids, X float64, row_norms²) for the exact scan, cached per
@@ -688,7 +699,7 @@ class LocalSearchEngine:
             keep = pd.Series(ids).isin(candidates).to_numpy()
             ids, X, n2 = ids[keep], X[keep], n2[keep]
         if len(ids) == 0:
-            return _empty_ranked().drop(columns=["_score", "_hybridScore"])
+            return _no_hits()
         q = np.asarray(vector, dtype=np.float64)
         if metric in ("hamming", "jaccard"):
             from semadb_spark.operators.quantize import encode_bits_np
@@ -702,17 +713,8 @@ class LocalSearchEngine:
                 ids, codes = hit
             qc = encode_bits_np(q[None, :], np.asarray(0.5))
             d = numpy_distance_matrix(metric, codes, qc)[:, 0].astype(np.float64)
-        elif metric == "euclidean":
-            # inline with the cached row norms: one GEMV + saxpy, same
-            # ||x||² - 2x·q + ||q||² formula (and clamp) as the shared
-            # kernel, minus its per-call 200k x d squared temp
-            d = np.maximum(n2 - 2.0 * (X @ q) + (q @ q), 0.0)
-        elif metric == "dot":
-            d = -(X @ q)
-        elif metric == "cosine":
-            d = 1.0 - X @ q
         else:
-            d = numpy_distance_matrix(metric, X, q[None, :])[:, 0]
+            d = _dists(X, n2, q, metric)
         return self._take_topk(ids, d, limit)
 
     @staticmethod
@@ -773,7 +775,7 @@ class LocalSearchEngine:
             m = pd.Series(ids).isin(candidates).to_numpy()
             ids, codes = ids[m], codes[m]
         if len(ids) == 0:
-            return _empty_ranked().drop(columns=["_score", "_hybridScore"])
+            return _no_hits()
         if meta["kind"] == "binary":
             from semadb_spark.operators.quantize import encode_bits_np
 
@@ -834,7 +836,7 @@ class LocalSearchEngine:
             self._ivf_cache[prop] = hit
         return hit
 
-    def _ivf_topk(self, prop: str, vector, value, opts: dict, limit: int,
+    def _ivf_topk(self, leaf: VectorLeaf,
                   candidates: np.ndarray | None) -> pd.DataFrame:
         """The compiler's float IVF probe route served in-process: same
         centroid shortlist math (argsort of the metric's centroid
@@ -843,11 +845,10 @@ class LocalSearchEngine:
         parity, including the bounded filtered-exact fallback
         (FILTERED_EXACT_FALLBACK_ROWS) on small candidate sets."""
         from semadb_spark.functions.distances import numpy_distance_matrix
-        from semadb_spark.plans.compiler import FILTERED_EXACT_FALLBACK_ROWS
 
-        metric = value.distance_metric
+        prop, vector, metric, limit = leaf.prop, leaf.vector, leaf.metric, leaf.limit
         if candidates is not None:
-            if len(candidates) <= FILTERED_EXACT_FALLBACK_ROWS:
+            if len(candidates) <= logical.FILTERED_EXACT_FALLBACK_ROWS:
                 # engine takes the exact scan over the filtered base here
                 return self._exact_topk(prop, vector, metric, limit, candidates)
             if prop in self._graph_artifacts:
@@ -859,9 +860,7 @@ class LocalSearchEngine:
                     f"broad filtered query on graph+IVF property {prop}; "
                     "use Collection.search"
                 )
-        search_size = int(
-            opts.get("searchSize") or value.params.get("searchSize") or 75
-        )
+        search_size = int(leaf.search_size or 75)
         ids, X, n2, cent = self._ivf_state(prop)
         centroids = self.ivf[prop]["centroids"]
         nprobe = max(1, min(len(centroids), search_size // 8))
@@ -880,101 +879,50 @@ class LocalSearchEngine:
         for lo, hi in zip(los, his):
             if lo == hi:
                 continue
-            Xs = X[lo:hi]
-            if metric == "euclidean":
-                dd = np.maximum(n2[lo:hi] - 2.0 * (Xs @ q) + (q @ q), 0.0)
-            elif metric == "dot":
-                dd = -(Xs @ q)
-            elif metric == "cosine":
-                dd = 1.0 - Xs @ q
-            else:
-                dd = numpy_distance_matrix(metric, Xs, q[None, :])[:, 0]
             id_parts.append(ids[lo:hi])
-            d_parts.append(dd)
+            d_parts.append(_dists(X[lo:hi], n2[lo:hi], q, metric))
         if not id_parts:
-            return _empty_ranked().drop(columns=["_score", "_hybridScore"])
+            return _no_hits()
         ids = np.concatenate(id_parts)
         d = np.concatenate(d_parts)
         if candidates is not None:
             m = pd.Series(ids).isin(candidates).to_numpy()
             ids, d = ids[m], d[m]
         if len(ids) == 0:
-            return _empty_ranked().drop(columns=["_score", "_hybridScore"])
+            return _no_hits()
         return self._take_topk(ids, d, limit)
 
-    def _compile_vector(self, prop: str, query: dict, value) -> _LocalCompiled:
-        key = "vectorFlat" if value.type == "vectorFlat" else "vectorVamana"
-        opts = query.get(key)
-        if opts is None:
-            raise ValueError(f"{key} query options not provided for property {prop}")
-        vector = opts["vector"]
-        if value.vector_size and len(vector) != value.vector_size:
-            raise ValueError(
-                f"{key} query vector length mismatch for property {prop}, "
-                f"expected {value.vector_size} got {len(vector)}"
-            )
-        if opts.get("operator", "near") != "near":
-            raise ValueError(f"invalid operator {opts['operator']} for vector query")
-        if not (1 <= len(vector) <= 4096):
-            raise ValueError(
-                f"query vector length must be between 1 and 4096, got {len(vector)}"
-            )
-        limit = int(opts.get("limit", 10))
-        if not (1 <= limit <= 75):
-            raise ValueError(f"invalid limit {limit} for vector query, expected 1-75")
-        if key == "vectorVamana" and opts.get("searchSize") is not None:
-            ss = int(opts["searchSize"])
-            if not (25 <= ss <= 75):
-                raise ValueError(
-                    f"invalid searchSize {ss} for vector query, expected 25-75"
-                )
-            if ss < limit:
-                raise ValueError("searchSize must be greater than or equal to limit")
-        w = opts.get("weight")
-        weight = 1.0 if w is None else float(w)
-        if prop in self.unsupported_vec:
-            raise LocalServeUnsupported(
-                f"property {prop} serves through a distributed route "
-                f"({self.unsupported_vec[prop]}); use Collection.search"
-            )
-        candidates = self._candidate_ids(opts.get("filter"))
+    def _compile_vector(self, leaf: VectorLeaf) -> _LocalCompiled:
+        prop, key, metric = leaf.prop, leaf.kind, leaf.metric
+        vector, limit = leaf.vector, leaf.limit
+        candidates = self._candidate_ids(leaf.filter)
         graph = self.graph.get(prop)
-        quantized_graph = (
-            key == "vectorVamana"
+        quantized = self._quantized_graph(leaf)
+        if quantized or (
+            self.vector_mode == "graph"
+            and key == "vectorVamana"
             and graph is not None
-            and (
-                graph.get("thresholds") is not None
-                or graph.get("books") is not None
-            )
-        )
-        if quantized_graph:
-            if candidates is not None:
-                # the engine's filtered quantized-graph route picks seeded
-                # beam vs exact fallback by candidate breadth
-                # (compiler.py:363-375) — a driver-side re-implementation
-                # would drift; route filtered requests to the engine
-                raise LocalServeUnsupported(
-                    f"filtered query on quantized-graph property {prop}; "
-                    "use Collection.search"
-                )
-            # ENGINE route served locally: the same quantized ADC beam +
-            # exact float rerank as the compiler's quantized-graph route
-            # (identical kernel + params; vamana_serve_local is
-            # parity-pinned to vamana_serve_packed)
+            and candidates is None
+            and metric not in ("hamming", "jaccard")
+        ):
+            # The packed-artifact beam (vamana_serve_local is parity-pinned
+            # to vamana_serve_packed). On a quantized graph this IS the
+            # engine route (unfiltered: _check_servable refuses filtered
+            # legs): the same quantized ADC beam + exact float rerank with
+            # identical params. Otherwise it is the opt-in approximate route
+            # (search.go:9-102 semantics), which diverges from the engine's
+            # exact route by design — recall < 1 — hence opt-in, and takes
+            # the graph_nprobe serving knob.
             from semadb_spark.operators.vamana import vamana_serve_local
 
-            search_size = int(
-                opts.get("searchSize")
-                or value.params.get("searchSize")
-                or graph["search_size"]
-            )
+            search_size = int(leaf.search_size or graph["search_size"])
             nprobe = max(1, min(len(graph["centroids"]), search_size // 8))
             hits = vamana_serve_local(
                 graph["packed"], vector, limit,
-                metric=value.distance_metric,
+                metric=metric,
                 search_size=search_size,
                 centroids=graph["centroids"],
-                nprobe=nprobe,
+                nprobe=nprobe if quantized else (self.graph_nprobe or nprobe),
                 dtype=graph["pack_dtype"],
                 compute_dtype="float32",
                 n_seeds=32,
@@ -993,45 +941,7 @@ class LocalSearchEngine:
                     "_distance": [float(dd) for _, dd in hits],
                 }
             )
-        elif (
-            self.vector_mode == "graph"
-            and key == "vectorVamana"
-            and graph is not None
-            and candidates is None
-            and value.distance_metric not in ("hamming", "jaccard")
-        ):
-            # opt-in approximate route: the packed-artifact beam
-            # (search.go:9-102 semantics; parity-pinned to
-            # vamana_serve_packed). Diverges from the engine's exact
-            # route by design — recall < 1 — hence opt-in.
-            from semadb_spark.operators.vamana import vamana_serve_local
-
-            search_size = int(
-                opts.get("searchSize")
-                or value.params.get("searchSize")
-                or graph["search_size"]
-            )
-            nprobe = self.graph_nprobe or max(
-                1, min(len(graph["centroids"]), search_size // 8)
-            )
-            hits = vamana_serve_local(
-                graph["packed"], vector, limit,
-                metric=value.distance_metric,
-                search_size=search_size,
-                centroids=graph["centroids"],
-                nprobe=nprobe,
-                dtype=graph["pack_dtype"],
-                compute_dtype="float32",
-                n_seeds=32,
-                fp_ttl_sec=3600.0,  # snapshot-pinned engine, see above
-            )
-            topk = pd.DataFrame(
-                {
-                    RID: [i for i, _ in hits],
-                    "_distance": [float(dd) for _, dd in hits],
-                }
-            )
-        elif prop in self.qscan and value.quantizer is not None:
+        elif prop in self.qscan and self.schema[prop].quantizer is not None:
             # ENGINE parity: a schema-declared quantizer with persisted
             # codes (and no fused IVF artifact) serves EVERY query on the
             # property through the flat code scan (compiler's q_index
@@ -1040,51 +950,28 @@ class LocalSearchEngine:
         elif (
             key == "vectorVamana"
             and prop in self.ivf
-            and value.distance_metric not in ("hamming", "jaccard")
+            and metric not in ("hamming", "jaccard")
         ):
             # ENGINE parity: with an IVF artifact present the compiler's
             # unfiltered vectorVamana route is ivf_search over the
             # artifact — NOT exact — so 'auto' must probe too
-            topk = self._ivf_topk(prop, vector, value, opts, limit, candidates)
+            topk = self._ivf_topk(leaf, candidates)
         else:
-            topk = self._exact_topk(
-                prop, vector, value.distance_metric, limit, candidates
-            )
+            topk = self._exact_topk(prop, vector, metric, limit, candidates)
         ranked = topk.assign(
             _score=np.nan,
-            _hybridScore=-1.0 * weight * topk["_distance"].to_numpy(),
+            _hybridScore=-1.0 * leaf.weight * topk["_distance"].to_numpy(),
         )
         return _LocalCompiled(mask=self._mask_for_ids(ranked[RID]), ranked=ranked)
 
-    def _compile_text(self, prop: str, query: dict, value) -> _LocalCompiled:
-        opts = query.get("text")
-        if opts is None:
-            raise ValueError(f"text query options not provided for property {prop}")
-        if not opts.get("value"):
-            raise ValueError("text query value cannot be empty")
-        if opts.get("operator") not in ("containsAll", "containsAny"):
-            raise ValueError(
-                f"invalid operator {opts.get('operator')} for text query"
-            )
-        limit = int(opts.get("limit", 10))
-        if not (1 <= limit <= 75):
-            raise ValueError(f"invalid limit {limit} for text query, expected 1-75")
-        w = opts.get("weight")
-        weight = 1.0 if w is None else float(w)
-        if prop not in self.text:
-            raise LocalServeUnsupported(
-                f"no persisted text index for {prop} at this snapshot; "
-                "run build_text_index (the local tier never re-tokenizes "
-                "the corpus per query)"
-            )
+    def _compile_text(self, leaf: TextLeaf) -> _LocalCompiled:
         from semadb_spark.operators.text_search import text_serve_local
 
-        path, num_docs = self.text[prop]
-        cand = self._candidate_ids(opts.get("filter"))
+        path, num_docs = self.text[leaf.prop]
         scored = text_serve_local(
-            path, opts["value"], opts["operator"], limit=limit,
-            weight=weight, num_docs=num_docs,
-            candidate_ids=None if cand is None else cand,
+            path, leaf.value, leaf.operator, limit=leaf.limit,
+            weight=leaf.weight, num_docs=num_docs,
+            candidate_ids=self._candidate_ids(leaf.filter),
         )
         ranked = scored.rename(columns={"id": RID}).assign(_distance=np.nan)[
             [RID, "_distance", "_score", "_hybridScore"]
@@ -1107,8 +994,6 @@ class LocalSearchEngine:
     def _compile_bool(
         self, children: list[_LocalCompiled], conjunction: bool
     ) -> _LocalCompiled:
-        if len(children) == 1:
-            return children[0]
         if all(c.is_pure for c in children):
             fns, colsets = zip(*[c.pred for c in children])
             cols = set().union(*colsets)
@@ -1177,7 +1062,7 @@ class LocalSearchEngine:
     # -- assembly + shaping (P1-P3, B4) ----------------------------------------
 
     def _assemble_and_shape(
-        self, compiled: _LocalCompiled, request: dict
+        self, compiled: _LocalCompiled, shape: Shape
     ) -> pd.DataFrame:
         # 1) membership mask + ranked frame (ordered hybrid-desc/id-asc)
         ids_all, index, id_order = self._canonical_ids()
@@ -1195,28 +1080,13 @@ class LocalSearchEngine:
             ranked = None
             leftover_mask = mask
 
-        sort_opts = request.get("sort") or []
-        if len(sort_opts) > 10:
-            raise ValueError("sort options exceed maximum of 10")
-        user_cols: list[tuple[str, bool]] = []
-        for s in sort_opts:
-            sp = s["property"]
-            root = sp.split(".", 1)[0]
-            if root not in self._frame_fields or root == "payload":
-                raise LocalServeUnsupported(
-                    f"sort property {sp} is not a root column; schemaless "
-                    "cross-type sort is engine-only"
-                )
-            user_cols.append((sp, bool(s.get("descending"))))
-
-        offset = int(request.get("offset", 0))
-        limit = request["limit"] if "limit" in request else 10
-        if not user_cols:
+        offset, limit = shape.offset, shape.limit
+        if not shape.sort:
             # default order = ranked rows (already sorted), then filter-only
             # rows id-asc; paging is a GATHER through the precomputed
             # id-sorted permutation — no per-query sort of the filter set
             # (the local analogue of TakeOrderedAndProject's bounded trim)
-            need = None if limit is None else offset + int(limit)
+            need = None if limit is None else offset + limit
             ids_sorted = self._canon[3]
             sel = np.flatnonzero(leftover_mask[id_order])
             n_ranked = 0 if ranked is None else len(ranked)
@@ -1230,7 +1100,7 @@ class LocalSearchEngine:
             parts = [ranked, leftover] if ranked is not None else [leftover]
             ordered = pd.concat(parts, ignore_index=True)
             if limit is not None:
-                ordered = ordered.iloc[offset : offset + int(limit)]
+                ordered = ordered.iloc[offset : offset + limit]
             elif offset:
                 ordered = ordered.iloc[offset:]
         else:
@@ -1255,30 +1125,33 @@ class LocalSearchEngine:
             skel_frames.append(lo)
             key = pd.concat(skel_frames, ignore_index=True)
             by, asc = [], []
-            for sp, desc in user_cols:
-                root = sp.split(".", 1)[0]
-                self._col_frame([root])  # ensure residency
-                col = self._col_cache[root]
-                pos = key["__pos"].to_numpy()
-                sv = pd.Series(
-                    col.to_numpy()[np.maximum(pos, 0)], index=key.index
-                ).where(pos >= 0)
-                if "." in sp:
-                    sv = _leaf_series(pd.DataFrame({root: sv}), sp)
-                kn, mn = f"__k_{sp}", f"__m_{sp}"
+            for sk in shape.sort:
+                root = sk.root
+                if root in RANKED_COLS:
+                    sv = key[root]
+                else:
+                    self._col_frame([root])  # ensure residency
+                    col = self._col_cache[root]
+                    pos = key["__pos"].to_numpy()
+                    sv = pd.Series(
+                        col.to_numpy()[np.maximum(pos, 0)], index=key.index
+                    ).where(pos >= 0)
+                    if "." in sk.path:
+                        sv = _leaf_series(pd.DataFrame({root: sv}), sk.path)
+                kn, mn = f"__k_{sk.path}", f"__m_{sk.path}"
                 key[kn] = sv
                 # nulls last regardless of direction: explicit missing rank
                 # first (pandas na_position is global, the engine's per-key)
                 key[mn] = sv.isna().astype(int)
                 by.extend([mn, kn])
-                asc.extend([True, not desc])
+                asc.extend([True, not sk.descending])
             by.extend(["_rankedFirst", "_hybridScore", RID])
             asc.extend([True, False, True])
             ordered = key.sort_values(by, ascending=asc, kind="stable")[
                 [RID, "_distance", "_score", "_hybridScore"]
             ]
             if limit is not None:
-                ordered = ordered.iloc[offset : offset + int(limit)]
+                ordered = ordered.iloc[offset : offset + limit]
             elif offset:
                 ordered = ordered.iloc[offset:]
         ordered = ordered.reset_index(drop=True)
@@ -1296,28 +1169,15 @@ class LocalSearchEngine:
         out = out[[c for c in cols if c in out.columns]]
 
         # 5) select + dotted re-nest (shard.go:431-448)
-        select = request.get("select")
-        if select and select != ["*"] and "*" not in select:
-            keep = [self.id_col]
-            roots: dict[str, list[str]] = {}
-            for p in select:
-                if "." in p:
-                    roots.setdefault(p.split(".", 1)[0], []).append(p)
-                elif p != self.id_col:  # the id always leads, once
-                    keep.append(p)
-            final = out[[c for c in keep if c in out.columns]].copy()
-            for root, paths in roots.items():
-                def nest(row_val, paths=paths, root=root):
-                    return {
-                        p.split(".", 1)[1]: (
-                            row_val.get(p.split(".", 1)[1])
-                            if isinstance(row_val, dict)
-                            else None
-                        )
-                        for p in paths
-                    }
+        sel = shape.select
+        if sel is not None:
+            final = out[[c for c in sel.columns if c in out.columns]].copy()
+            for root, fields in sel.nested:
+                def nest(row_val, fields=fields):
+                    ok = isinstance(row_val, dict)
+                    return {f: row_val.get(f) if ok else None for f in fields}
 
-                final[root] = out[root].map(nest) if root in out.columns else None
+                final[root] = out[root].map(nest)
             for c in RANKED_COLS:
                 final[c] = out[c]
             out = final

@@ -927,7 +927,7 @@ def test_filtered_vamana_seeded_beam_route(spark, tmp_path, monkeypatch):
     enter the result. Route-pinned by poisoning ivf_search."""
     import numpy as np
 
-    from semadb_spark.plans import compiler as comp
+    from semadb_spark.plans import logical
 
     schema = {
         "v": {"type": "vectorVamana", "vectorVamana": {
@@ -946,7 +946,7 @@ def test_filtered_vamana_seeded_beam_route(spark, tmp_path, monkeypatch):
     coll.build_vamana_index("v", num_shards=3)
 
     # force the graph route: candidate set (80) must exceed the fallback
-    monkeypatch.setattr(comp, "FILTERED_EXACT_FALLBACK_ROWS", 10)
+    monkeypatch.setattr(logical, "FILTERED_EXACT_FALLBACK_ROWS", 10)
 
     def _boom(*a, **k):
         raise AssertionError("filtered vectorVamana took the IVF probe route")

@@ -1186,7 +1186,7 @@ def test_filtered_broad_quantized_query_takes_graph_route(spark, tmp_path, monke
     from pyspark.sql import Row
 
     import semadb_spark.operators.vamana as vm_mod
-    import semadb_spark.plans.compiler as comp_mod
+    import semadb_spark.plans.logical as logical_mod
     from semadb_spark import Collection
 
     schema = {"v": {"type": "vectorVamana", "vectorVamana": {
@@ -1207,7 +1207,7 @@ def test_filtered_broad_quantized_query_takes_graph_route(spark, tmp_path, monke
     coll.build_vamana_index("v", num_shards=2, seed=5)
 
     # 160 filtered rows > patched threshold of 20 -> broad -> graph route
-    monkeypatch.setattr(comp_mod, "FILTERED_EXACT_FALLBACK_ROWS", 20)
+    monkeypatch.setattr(logical_mod, "FILTERED_EXACT_FALLBACK_ROWS", 20)
     calls = []
     real_serve = vm_mod.vamana_serve_packed
 
@@ -1261,7 +1261,7 @@ def test_filtered_plain_vamana_prefers_packed_layout(spark, tmp_path, monkeypatc
     from pyspark.sql import Row
 
     import semadb_spark.operators.vamana as vm_mod
-    import semadb_spark.plans.compiler as comp_mod
+    import semadb_spark.plans.logical as logical_mod
     from semadb_spark import Collection
 
     schema = {"v": {"type": "vectorVamana", "vectorVamana": {
@@ -1279,7 +1279,7 @@ def test_filtered_plain_vamana_prefers_packed_layout(spark, tmp_path, monkeypatc
     ))
     coll.build_vector_index("v")
     coll.build_vamana_index("v", num_shards=2, seed=5)
-    monkeypatch.setattr(comp_mod, "FILTERED_EXACT_FALLBACK_ROWS", 20)
+    monkeypatch.setattr(logical_mod, "FILTERED_EXACT_FALLBACK_ROWS", 20)
     calls = []
     real = vm_mod.vamana_serve_packed
 

@@ -216,6 +216,24 @@ def test_select_renest_parity(coll):
         "select": ["name", "nested.lab", "n"]})
 
 
+def test_select_missing_property_skipped_parity(coll):
+    """Selected names the collection lacks are skipped on both engines,
+    plain and dotted alike (the reference skips missing fields)."""
+    req = {"query": F_SHAPES[1], "limit": 6,
+           "select": ["zzz", "name", "zzz.a", "nested.lab"]}
+    got = assert_parity(coll, req)
+    assert list(got.columns) == coll.search(req).columns == [
+        "_id", "name", "nested", "_distance", "_score", "_hybridScore"]
+
+
+def test_sort_on_ranked_column_parity(coll):
+    """A ranked column is a sort key on both engines (missing last)."""
+    assert_parity(coll, {"query": {"property": "_or", "_or": [
+        F_SHAPES[1],
+        {"property": "v", "vectorFlat": {"vector": [0.4] * 8, "limit": 10}},
+    ]}, "limit": 15, "sort": [{"property": "_distance", "descending": True}]})
+
+
 @pytest.mark.parametrize("select", [["_id"], ["_id", "name"], ["name", "_id"]])
 def test_select_id_returned_once_parity(coll, select):
     """Naming the id in ``select`` returns it once, leading, on both
@@ -230,9 +248,24 @@ def test_select_id_returned_once_parity(coll, select):
 
 
 def test_unsupported_shapes_raise(coll, spark, tmp_path):
-    with pytest.raises(LocalServeUnsupported, match="sort property"):
+    # no payload column: an unknown sort key is an invalid request
+    with pytest.raises(ValueError, match="unknown sort property"):
         coll.search_local({"query": F_SHAPES[0], "limit": 5,
                            "sort": [{"property": "payload.x"}]})
+    # a payload map column: schemaless sort keys are engine-only
+    cp = Collection.create(
+        spark, str(tmp_path / "payload"),
+        {"n": {"type": "integer", "integer": {}}}, num_buckets=2,
+    )
+    cp.insert(spark.createDataFrame(
+        [Row(_id="a", n=1, payload={"x": "1"})],
+        "_id string, n long, payload map<string,string>",
+    ))
+    for key in ("payload.x", "x"):
+        with pytest.raises(LocalServeUnsupported, match="sort property"):
+            cp.search_local({"query": {"property": "n", "integer": {
+                "operator": "equals", "value": 1}}, "limit": 5,
+                "sort": [{"property": key}]})
     # a text property without a persisted index refuses rather than
     # re-tokenizing the corpus per query
     c2 = Collection.create(
@@ -246,18 +279,71 @@ def test_unsupported_shapes_raise(coll, spark, tmp_path):
 
 
 def test_validation_parity(coll):
-    for bad in (
-        {"query": {"property": "ghost", "string": {"operator": "equals",
-                                                   "value": "x"}}},
-        {"query": {"property": "v", "vectorFlat": {"vector": [1.0] * 3,
-                                                   "limit": 5}}},
-        {"query": F_SHAPES[0], "limit": 1000},
-        {"query": F_SHAPES[0], "offset": -1},
+    """Both engines reject each bad request with the same error."""
+    for bad, msg in (
+        ({"query": {"property": "ghost", "string": {"operator": "equals",
+                                                    "value": "x"}}},
+         "property ghost not found"),
+        ({"query": {"property": "v", "vectorFlat": {"vector": [1.0] * 3,
+                                                    "limit": 5}}},
+         "vector length mismatch"),
+        ({"query": F_SHAPES[0], "limit": 1000}, "limit must be between"),
+        ({"query": F_SHAPES[0], "offset": -1}, "offset must be"),
+        ({"query": {"property": "_and", "_and": []}},
+         "_and query requires at least one subquery"),
+        ({"query": {"property": "cat"}},
+         "string query options not provided for property cat"),
+        ({"query": F_SHAPES[0], "sort": [{"property": "zzz"}]},
+         "unknown sort property zzz"),
     ):
-        with pytest.raises(ValueError):
-            coll.search_local(bad)
-        with pytest.raises(ValueError):
-            coll.search(bad).collect()
+        errors = []
+        for run in (lambda: coll.search_local(bad),
+                    lambda: coll.search(bad).collect(),
+                    lambda: coll.search(bad, route="auto")):
+            with pytest.raises(ValueError, match=msg) as ei:
+                run()
+            errors.append((type(ei.value), str(ei.value)))
+        assert errors[0] == errors[1] == errors[2], errors
+
+
+def test_structural_refusal_runs_no_local_leg(spark, tmp_path, monkeypatch):
+    """A tree the local tier cannot serve is refused from the plan before
+    any leg runs: here a vector leg beside a text leg on a property with no
+    persisted index. route='auto' then serves the Spark engine's answer."""
+    from semadb_spark.plans.local_engine import LocalSearchEngine
+
+    schema = {"body": {"type": "text", "text": {}},
+              "v": {"type": "vectorFlat", "vectorFlat": {
+                  "vectorSize": 4, "distanceMetric": "euclidean"}}}
+    c = Collection.create(spark, str(tmp_path / "noidx"), schema,
+                          num_buckets=2)
+    c.insert(spark.createDataFrame([
+        Row(_id=f"p{i}", body=WORDS[i % 10] + " " + WORDS[(i + 1) % 10],
+            v=[float(i), 1.0, 0.0, float(i % 3)])
+        for i in range(20)
+    ]))
+    calls = []
+    real = LocalSearchEngine._exact_topk
+
+    def spy(self, *a, **kw):
+        calls.append(a[0])
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(LocalSearchEngine, "_exact_topk", spy)
+    req = {"query": {"property": "_or", "_or": [
+        {"property": "v", "vectorFlat": {"vector": [3.0, 1.0, 0.0, 0.0],
+                                         "limit": 5}},
+        {"property": "body", "text": {"operator": "containsAny",
+                                      "value": "spark join", "limit": 5}},
+    ]}, "limit": 8}
+    with pytest.raises(LocalServeUnsupported, match="build_text_index"):
+        c.search_local(req)
+    assert calls == []
+    want = [(r["_id"], _norm(r["_hybridScore"])) for r in c.search(req).collect()]
+    got = c.search(req, route="auto")
+    assert [(g["_id"], _norm(g["_hybridScore"]))
+            for g in got.to_dict("records")] == want
+    assert want
 
 
 def test_graph_mode_and_route_guards(spark, tmp_path):
@@ -565,7 +651,7 @@ def test_ivf_local_route_parity(spark, tmp_path, monkeypatch):
     parity — unfiltered (probe + exact rerank), filtered small (bounded
     exact fallback), and filtered broad (probe ∩ candidate set, exercised
     by shrinking FILTERED_EXACT_FALLBACK_ROWS on BOTH tiers)."""
-    import semadb_spark.plans.compiler as compiler_mod
+    import semadb_spark.plans.logical as logical_mod
 
     schema = {"v": {"type": "vectorVamana", "vectorVamana": {
         "vectorSize": 8, "distanceMetric": "euclidean",
@@ -593,7 +679,7 @@ def test_ivf_local_route_parity(spark, tmp_path, monkeypatch):
             "operator": "lessThan", "value": 10}}}}, "limit": 6})
     # filtered BROAD (threshold shrunk on both tiers): engine probes with
     # candidate_ids, local probes ∩ candidates — same optimistic recall
-    monkeypatch.setattr(compiler_mod, "FILTERED_EXACT_FALLBACK_ROWS", 3)
+    monkeypatch.setattr(logical_mod, "FILTERED_EXACT_FALLBACK_ROWS", 3)
     coll._invalidate_engine()
     assert_parity(coll, {"query": {"property": "v", "vectorVamana": {
         "vector": qv, "limit": 6, "filter": {"property": "n", "integer": {
@@ -604,7 +690,7 @@ def test_ivf_plus_graph_broad_filter_falls_back(spark, tmp_path, monkeypatch):
     """With BOTH a graph artifact and an IVF artifact, a broad-filtered
     request rides the engine's seeded-beam walk — search_local refuses and
     route='auto' transparently serves the engine's answer."""
-    import semadb_spark.plans.compiler as compiler_mod
+    import semadb_spark.plans.logical as logical_mod
 
     schema = {"v": {"type": "vectorVamana", "vectorVamana": {
         "vectorSize": 8, "distanceMetric": "euclidean",
@@ -620,7 +706,7 @@ def test_ivf_plus_graph_broad_filter_falls_back(spark, tmp_path, monkeypatch):
     ))
     coll.build_vamana_index("v", num_shards=2, seed=5)
     coll.build_vector_index("v", nlist=8)
-    monkeypatch.setattr(compiler_mod, "FILTERED_EXACT_FALLBACK_ROWS", 3)
+    monkeypatch.setattr(logical_mod, "FILTERED_EXACT_FALLBACK_ROWS", 3)
     coll._invalidate_engine()
     req = {"query": {"property": "v", "vectorVamana": {
         "vector": [float(x) for x in X[5]], "limit": 5,
