@@ -22,9 +22,12 @@ Storage model (Spark-first, not a bbolt translation):
 - **Hash-bucketed layout + manifest**: rows land in
   ``vN/_bucket=pmod(xxhash64(_id), num_buckets)`` dirs, and each snapshot's
   ``_manifest.json`` maps bucket -> the snapshot dir that last rewrote it.
-  A DML batch touches only the buckets its ids hash to, so an update of k
-  points reads and rewrites O(k/num_buckets · table) — never the table
-  (round-1 finding: full-snapshot rewrite is a 100 TB killer for the
+  A DML batch reads and rewrites every bucket its ids hash to, whole: k
+  changed points touch up to min(k, num_buckets) buckets, so a batch
+  rewrites that share of the table, and a batch of num_buckets or more
+  random ids usually rewrites all of it (50 rows over 8 buckets rewrite 8
+  of 8). Small batches against many buckets are the case this layout
+  saves (round-1 finding: full-snapshot rewrite is a 100 TB killer for the
   reference's own <=100-point batches). Unaffected buckets are carried
   forward by manifest pointer, the same trick as Delta/Iceberg file
   manifests. The bucket count is fixed at create (like the reference's
@@ -56,6 +59,7 @@ import uuid as _uuid
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from .schema import IndexSchema
+from .session import local_df
 
 DELETE_VALUE = "_delete"  # shard/shard.go:41
 _CURRENT = "_current"
@@ -295,9 +299,10 @@ class Collection:
         self, df: DataFrame, affected: list[int] | None = None
     ) -> None:
         """Commit a new snapshot. ``affected=None`` rewrites every bucket of
-        ``df``; otherwise ``df`` holds ONLY rows of the affected buckets and
-        all other buckets carry forward by manifest pointer (the O(k·bucket)
-        DML path)."""
+        ``df``; otherwise ``df`` holds ONLY rows of the affected buckets,
+        each rewritten whole, and all other buckets carry forward by
+        manifest pointer (the DML path: its cost is the affected buckets'
+        size, not the batch's)."""
         cur = self._current_version()
         nxt = cur + 1
         path = self._data_path(nxt)
@@ -417,6 +422,10 @@ class Collection:
         analogue of the reference's insert-time text index
         (shard/index/text/text.go:16-20,151-258). Returns {prop: num_docs}.
 
+        ``num_docs`` is the sum of the per-data-bucket document counts that
+        the postings write observes on its own final stage; nothing is read
+        back.
+
         The index is version-pinned: a later insert/update/delete writes a
         new snapshot and search falls back to ad-hoc scoring until the index
         is rebuilt or rolled forward (:meth:`refresh_text_index`)."""
@@ -436,33 +445,57 @@ class Collection:
         return stats
 
     def _write_postings(
-        self, doc_terms: DataFrame, path: str, marked: Column | None = None
+        self, doc_terms: DataFrame, path: str, carried: dict[int, int] | None = None
     ) -> tuple[int, int]:
         """The one postings writer behind :meth:`build_text_index` and
-        :meth:`refresh_text_index`: ``doc_terms(id, term, tf, doc_len)`` ->
-        the term-hash partitioned artifact at ``path`` with the corpus
-        ``df`` denormalized onto every row, plus ``_num_docs.json``.
-        Returns ``(num_docs, rows matching marked)``.
+        :meth:`refresh_text_index`: ``doc_terms(id, term, tf, doc_len,
+        doc_first)`` -> the term-hash partitioned artifact at ``path`` with
+        the corpus ``df`` denormalized onto every row, plus
+        ``_num_docs.json``. Rows with a null ``doc_first`` are carried
+        postings whose documents are already counted in ``carried`` (data
+        bucket -> documents). Returns ``(num_docs, fresh posting rows)``.
 
-        One shuffle: the rows are hash-partitioned on ``term_bucket``, which
-        already satisfies the ``df`` window over (term_bucket, term), and the
-        window's sort leaves each bucket term-ordered for the writer. A
-        query's isin(term) filter then prunes to <= |query terms| of the
+        Two shuffles: the tokenizer's (id, term) aggregate, then a
+        hash-partitioning on ``term_bucket`` into ``spark.sql.shuffle.
+        partitions`` partitions — an explicit count, so AQE cannot coalesce
+        the write into one task — which already satisfies the ``df`` window
+        over (term_bucket, term); the window's sort leaves each bucket
+        term-ordered for the writer, and each term bucket lands in one file.
+        A query's isin(term) filter then prunes to <= |query terms| of the
         TERM_BUCKETS directories, and term row-group statistics prune inside
-        each file."""
-        from pyspark.sql import Window
+        each file.
+
+        The statistics come from the write itself: an observation on the
+        final (result) stage counts the fresh posting rows and, per data
+        bucket, the ``doc_first`` rows. A result task's metrics are applied
+        once even if a map stage is recomputed, so the counts are exact.
+        ``_num_docs.json`` keeps ``bucket_docs`` (which a refresh carries
+        forward for clean buckets) and their sum, ``num_docs``."""
+        from pyspark.sql import Observation, Window
 
         from .functions.hashing import md5_hash64
         from .operators.text_search import TERM_BUCKETS
 
+        doc_bucket = F.when(F.col("doc_first"), self._bucket_expr(F.col("id")))
+        seen = Observation()
         (
             doc_terms.withColumn(
                 "term_bucket",
                 F.pmod(md5_hash64(F.col("term")), F.lit(TERM_BUCKETS)).cast("int"),
             )
-            .repartition("term_bucket")
+            .repartition(
+                int(self.spark.conf.get("spark.sql.shuffle.partitions")), "term_bucket"
+            )
             .withColumn(
                 "df", F.count("*").over(Window.partitionBy("term_bucket", "term"))
+            )
+            .observe(
+                seen,
+                F.count("doc_first").alias("fresh"),
+                *(
+                    F.count_if(doc_bucket == b).alias(str(b))
+                    for b in range(self.num_buckets)
+                ),
             )
             .select(*_POSTINGS_SCHEMA.names)
             # lead with the partition column: partitionBy's writer re-sorts
@@ -477,18 +510,15 @@ class Collection:
             .partitionBy("term_bucket")
             .parquet(path)
         )
-        marked = F.lit(False) if marked is None else marked
-        row = (
-            self.spark.read.schema(_POSTINGS_SCHEMA)
-            .parquet(path)
-            .agg(F.count_distinct("id"), F.count_if(marked))
-            .first()
-        )
-        num_docs, n_marked = int(row[0]), int(row[1])
+        metrics = seen.get
+        bucket_docs = {b: int(metrics[str(b)]) for b in range(self.num_buckets)}
+        bucket_docs.update(carried or {})
+        num_docs = sum(bucket_docs.values())
         # leading underscore: ignored by parquet directory listings
         with open(os.path.join(path, "_num_docs.json"), "w") as f:
-            json.dump({"num_docs": num_docs}, f)
-        return num_docs, n_marked
+            json.dump({"num_docs": num_docs, "bucket_docs": {
+                str(b): n for b, n in sorted(bucket_docs.items())}}, f)
+        return num_docs, int(metrics["fresh"])
 
     def open_text_pool(self, prop: str, workers: int = 8):
         """Open a process-parallel serving pool over this collection's
@@ -530,8 +560,12 @@ class Collection:
         :meth:`build_text_index`: one shuffle of the postings recomputes
         every term's ``df``, and the artifact has the build's layout
         (term-sorted buckets, 1 MB row groups) and equals a from-scratch
-        rebuild row for row. Returns the number of re-tokenized posting
-        rows."""
+        rebuild row for row. ``num_docs`` is the clean buckets' document
+        counts carried from the indexed version's ``bucket_docs`` plus the
+        dirty buckets' counts observed on the write; an index written
+        without ``bucket_docs`` is rebuilt from scratch instead, and the old
+        postings are not read when no clean bucket holds a document. Returns
+        the number of re-tokenized posting rows."""
         import re
 
         from .operators.text_search import doc_term_freqs
@@ -553,23 +587,32 @@ class Collection:
             raise ValueError(f"no text index found for property {prop}; build first")
         if indexed_v == cur:
             return 0
-        old_manifest = self._manifest(indexed_v)
+        old_path = self._index_path(prop, indexed_v)
+        with open(os.path.join(old_path, "_num_docs.json")) as f:
+            old_docs = json.load(f).get("bucket_docs", {})
+        # an index without bucket_docs carries nothing: every bucket is dirty
+        old_manifest = self._manifest(indexed_v) if old_docs else {}
         cur_manifest = self._manifest(cur)
         dirty = sorted(
             int(b)
             for b in set(old_manifest) | set(cur_manifest)
             if old_manifest.get(b) != cur_manifest.get(b)
         )
-        is_dirty = self._bucket_expr(F.col("id")).isin(dirty)
-        clean = (
-            self.spark.read.schema(_POSTINGS_SCHEMA)
-            .parquet(self._index_path(prop, indexed_v))
-            .filter(~is_dirty)
-            .select("id", "term", "tf", "doc_len")
-        )
-        fresh = doc_term_freqs(self._read_buckets(dirty), prop)
+        doc_terms = doc_term_freqs(self._read_buckets(dirty), prop)
+        carried = {int(b): n for b, n in old_docs.items() if int(b) not in dirty}
+        if any(carried.values()):  # else no clean bucket holds a posting
+            clean = (
+                self.spark.read.schema(_POSTINGS_SCHEMA)
+                .parquet(old_path)
+                .filter(~self._bucket_expr(F.col("id")).isin(dirty))
+                .select(
+                    "id", "term", "tf", "doc_len",
+                    F.lit(None).cast("boolean").alias("doc_first"),
+                )
+            )
+            doc_terms = clean.unionByName(doc_terms)
         _, n_fresh = self._write_postings(
-            clean.unionByName(fresh), self._index_path(prop, cur), marked=is_dirty
+            doc_terms, self._index_path(prop, cur), carried
         )
         self._invalidate_engine()
         return n_fresh
@@ -931,8 +974,6 @@ class Collection:
         ):
             # convenience: accept a plain id list/sequence (Arrow-path local
             # frame — see semadb_spark.session.local_df)
-            from semadb_spark.session import local_df
-
             candidate_ids = local_df(
                 self.spark, [(str(i),) for i in candidate_ids], "id string"
             )
@@ -1912,7 +1953,7 @@ class Collection:
         if isinstance(ids, DataFrame):
             id_df = ids.select(F.col(ids.columns[0]).alias("_id")).distinct()
         else:
-            id_df = self.spark.createDataFrame([(i,) for i in ids], "_id string").distinct()
+            id_df = local_df(self.spark, [(i,) for i in ids], "_id string").distinct()
         affected = self._buckets_of(id_df)
         existing = self._read_buckets(affected)
         deleted = [

@@ -44,9 +44,13 @@ TERM_BUCKETS = 64
 
 
 def doc_term_freqs(df: DataFrame, text_col: str, id_col: str = "_id") -> DataFrame:
-    """-> doc_terms(id, term, tf, doc_len) — the per-document half of the
-    index (no corpus-wide ``df`` yet). Shared by the full build and the
-    incremental refresh, which re-tokenizes only dirty-bucket documents.
+    """-> doc_terms(id, term, tf, doc_len, doc_first) — the per-document half
+    of the index (no corpus-wide ``df`` yet). Shared by the full build and
+    the incremental refresh, which re-tokenizes only dirty-bucket documents.
+
+    ``doc_first`` is true on exactly one row per document, the one whose
+    term is the document's least token, so counting those rows counts
+    documents without a DISTINCT (which observed metrics reject).
 
     Null/emptied docs are excluded entirely (missing properties are never
     indexed, models/index.go:125-131; empty token list removes the doc,
@@ -59,9 +63,16 @@ def doc_term_freqs(df: DataFrame, text_col: str, id_col: str = "_id") -> DataFra
         .filter(F.col("doc_len") > 0)
     )
     return (
-        toks.select("id", "doc_len", F.explode("tokens").alias("term"))
+        toks.select(
+            "id", "doc_len", F.array_min("tokens").alias("least"),
+            F.explode("tokens").alias("term"),
+        )
         .groupBy("id", "term")
-        .agg(F.count("*").alias("tf"), F.first("doc_len").alias("doc_len"))
+        .agg(
+            F.count("*").alias("tf"),
+            F.first("doc_len").alias("doc_len"),
+            F.bool_or(F.col("term") == F.col("least")).alias("doc_first"),
+        )
     )
 
 
@@ -75,8 +86,10 @@ def build_text_index(df: DataFrame, text_col: str, id_col: str = "_id") -> DataF
     """
     from pyspark.sql import Window
 
-    return doc_term_freqs(df, text_col, id_col).withColumn(
-        "df", F.count("*").over(Window.partitionBy("term"))
+    return (
+        doc_term_freqs(df, text_col, id_col)
+        .drop("doc_first")
+        .withColumn("df", F.count("*").over(Window.partitionBy("term")))
     )
 
 

@@ -11,6 +11,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark lists a read's directories with a distributed job once there are more
+# than spark.sql.sources.parallelPartitionDiscovery.threshold (default 32) of
+# them. The library's artifacts are POSIX dirs with a fixed fan-out, the
+# widest being a text index's TERM_BUCKETS = 64 term_bucket dirs (default IVF
+# nlist 64, data buckets 16): at the default every text-index read would start
+# a listing job (~0.5 s at local[4]) for what the driver lists in ~30 ms. Keep
+# this above TERM_BUCKETS.
+PARTITION_DISCOVERY_THRESHOLD = 256
+
 
 def get_spark(
     app_name: str = "semadb-spark",
@@ -43,6 +52,10 @@ def get_spark(
         # is a session-wide default rather than a per-query mutation
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(PARTITION_DISCOVERY_THRESHOLD),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
     )

@@ -114,6 +114,21 @@ def test_delete_and_missing_noop(spark, coll):
     assert coll.count() == 4
 
 
+def test_delete_id_list_is_a_local_scan(spark, coll, monkeypatch):
+    """delete(list) turns the ids into a LocalTableScan, not a pickled
+    Python RDD, so none of its three actions starts a Python worker."""
+    coll.insert(_points(spark, 3))
+    frames = []
+    buckets_of = Collection._buckets_of
+    monkeypatch.setattr(
+        Collection, "_buckets_of",
+        lambda self, ids_df: frames.append(ids_df) or buckets_of(self, ids_df),
+    )
+    assert coll.delete(["p1", "ghost"]) == ["p1"]
+    plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_persistence_across_reopen(spark, coll):
     coll.insert(_points(spark, 4))
     coll.delete(["p0"])
@@ -722,19 +737,37 @@ def _postings(spark, path):
     return sorted(map(tuple, spark.read.parquet(path).select(*cols).collect()))
 
 
-def _num_docs(path):
+def _doc_stats(path):
+    """-> (num_docs, bucket_docs) from an index's _num_docs.json."""
     import json
     import os
 
     with open(os.path.join(path, "_num_docs.json")) as f:
-        return json.load(f)["num_docs"]
+        stats = json.load(f)
+    return stats["num_docs"], stats.get("bucket_docs")
 
 
-# Spark jobs one refresh_text_index runs on the test session: the write's
-# three adaptive stages (tokenize, postings shuffle, write) and the num_docs
-# read-back's three. A term-bucket listing job adds one per read once an
-# index has more than 32 term_bucket directories (not the case here).
-REFRESH_TEXT_JOBS = 6
+def _jobs(spark, fn, *args):
+    """-> (fn(*args), Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, fn.__name__)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Spark jobs one build_text_index / refresh_text_index runs on the test
+# session: the postings write's three adaptive stages (tokenize, postings
+# shuffle, write). The document counts are observed on the write stage, and
+# the session lists the TERM_BUCKETS term_bucket dirs on the driver, so
+# neither a read-back nor a listing job is added.
+BUILD_TEXT_JOBS = 3
+REFRESH_TEXT_JOBS = 3
 
 
 def test_refresh_text_index_incremental(spark, tmp_path):
@@ -743,10 +776,9 @@ def test_refresh_text_index_incremental(spark, tmp_path):
     term, and lands on EXACTLY the index a from-scratch rebuild produces
     (rows and num_docs), across insert + update + delete — including an
     update that leaves only stopwords (the doc drops out of the index) and
-    a delete that empties a whole data bucket. The refresh runs a pinned
-    number of Spark jobs."""
-    import uuid
-
+    a delete that empties a whole data bucket. Build and refresh run a
+    pinned number of Spark jobs, and the refreshed per-data-bucket document
+    counts equal the rebuilt ones."""
     schema = {"text": {"type": "text", "text": {"analyser": "standard"}}}
     coll = Collection.create(spark, str(tmp_path / "txcoll"), schema, num_buckets=4)
     base = [
@@ -760,7 +792,10 @@ def test_refresh_text_index_incremental(spark, tmp_path):
         ("d9", "signals past spark"),
     ]
     coll.insert(spark.createDataFrame([Row(_id=i, text=t) for i, t in base]))
-    coll.build_text_index("text")
+    assert _jobs(spark, coll.build_text_index, "text") == (
+        {"text": len(base)}, BUILD_TEXT_JOBS
+    )
+    built = coll._manifest()
 
     # DML mix: new docs, a text rewrite, a delete, and a stopword-only doc
     coll.insert(spark.createDataFrame(
@@ -781,25 +816,24 @@ def test_refresh_text_index_incremental(spark, tmp_path):
     emptied = sorted(i for i, b in bucket_of.items() if b == bucket_of["d0"])
     coll.delete(emptied)
     assert str(bucket_of["d0"]) not in coll._manifest()
+    # one data bucket stays clean, so the refresh carries old postings
+    assert any(built.get(b) == p for b, p in coll._manifest().items())
 
-    sc = spark.sparkContext
-    group = f"refresh-text-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "refresh_text_index")
-    try:
-        n_fresh = coll.refresh_text_index("text")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == REFRESH_TEXT_JOBS
+    n_fresh, jobs = _jobs(spark, coll.refresh_text_index, "text")
+    assert jobs == REFRESH_TEXT_JOBS
     assert n_fresh > 0
 
     path = coll._index_path("text")
-    refreshed, refreshed_n = _postings(spark, path), _num_docs(path)
+    refreshed, refreshed_stats = _postings(spark, path), _doc_stats(path)
     indexed = {r[0] for r in refreshed}
     assert "d3" not in indexed and not (indexed & set(emptied))
     assert {"d1", "d5"} <= indexed
     coll.build_text_index("text")  # from-scratch rebuild of the same snapshot
     assert refreshed == _postings(spark, path)
-    assert refreshed_n == _num_docs(path) == len(indexed)
+    assert refreshed_stats == _doc_stats(path)
+    num_docs, bucket_docs = refreshed_stats
+    assert num_docs == len(indexed) == sum(bucket_docs.values())
+    assert bucket_docs[str(bucket_of["d0"])] == 0
 
     # served scores use the refreshed artifact (idf depends on df and N)
     res = coll.search({"query": {"property": "text", "text": {
@@ -844,8 +878,11 @@ def test_refresh_text_index_keeps_build_layout(spark, tmp_path):
     coll.insert(spark.createDataFrame([
         Row(_id=f"d{i}", text=" ".join(rnd.choices(words, k=6))) for i in range(300)
     ]))
-    coll.build_text_index("text")
+    # the corpus fills more than 32 term buckets: the pins also show that
+    # reading the artifact back lists its directories without a Spark job
+    assert _jobs(spark, coll.build_text_index, "text")[1] == BUILD_TEXT_JOBS
     _assert_build_layout(coll._index_path("text"))
+    built = coll._manifest()
 
     coll.insert(spark.createDataFrame([
         Row(_id=f"n{i}", text=" ".join(rnd.choices(words, k=6))) for i in range(20)
@@ -854,8 +891,46 @@ def test_refresh_text_index_keeps_build_layout(spark, tmp_path):
         Row(_id=f"d{i}", text=" ".join(rnd.choices(words, k=4))) for i in range(0, 60, 3)
     ]))
     coll.delete([f"d{i}" for i in range(1, 60, 7)])
-    assert coll.refresh_text_index("text") > 0
-    _assert_build_layout(coll._index_path("text"))
+    n_fresh, jobs = _jobs(spark, coll.refresh_text_index, "text")
+    assert n_fresh > 0 and jobs == REFRESH_TEXT_JOBS
+    path = coll._index_path("text")
+    _assert_build_layout(path)
+    # every data bucket was rewritten, so no old posting was carried; the
+    # refresh still equals a rebuild
+    assert not set(built.values()) & set(coll._manifest().values())
+    refreshed, refreshed_stats = _postings(spark, path), _doc_stats(path)
+    coll.build_text_index("text")
+    assert refreshed == _postings(spark, path)
+    assert refreshed_stats == _doc_stats(path)
+
+
+def test_refresh_text_index_without_bucket_docs_rebuilds(spark, tmp_path):
+    """An index whose _num_docs.json has no bucket_docs (written before the
+    per-data-bucket counts existed) refreshes by a full build: the result
+    equals a from-scratch rebuild, rows, num_docs and bucket_docs."""
+    import json
+    import os
+
+    schema = {"text": {"type": "text", "text": {"analyser": "standard"}}}
+    coll = Collection.create(spark, str(tmp_path / "legacy"), schema, num_buckets=4)
+    coll.insert(spark.createDataFrame([
+        Row(_id=f"d{i}", text=f"spark doc {i} merges windows") for i in range(12)
+    ]))
+    coll.build_text_index("text")
+    stats_path = os.path.join(coll._index_path("text"), "_num_docs.json")
+    with open(stats_path, "w") as f:
+        json.dump({"num_docs": 12}, f)
+    coll.update(spark.createDataFrame([Row(_id="d0", text="fresh vectors rank")]))
+    coll.delete(["d1"])
+
+    n_fresh = coll.refresh_text_index("text")
+    path = coll._index_path("text")
+    refreshed, refreshed_stats = _postings(spark, path), _doc_stats(path)
+    assert n_fresh == len(refreshed)  # every posting was re-tokenized
+    coll.build_text_index("text")
+    assert refreshed == _postings(spark, path)
+    assert refreshed_stats == _doc_stats(path)
+    assert refreshed_stats[0] == 11 == sum(refreshed_stats[1].values())
 
 
 def test_refresh_vamana_index_incremental(spark, tmp_path):
