@@ -39,6 +39,25 @@ Storage model (Spark-first, not a bbolt translation):
 - The duplicate-insert probe and the update/delete joins read only affected
   buckets and broadcast the small change batch — the common case is a
   broadcast join over a pruned fraction of the table.
+- **Artifact map**: the manifest also names every index artifact (text
+  postings, IVF, quantized codes, Vamana graph + packed layout), e.g.
+  ``"artifacts": {"text_body": {"path": "v7_idx/text_body", "data": 6}}``.
+  A build or refresh writes into a directory under the NEXT version, which
+  no manifest names yet, then commits a new snapshot naming it: two small
+  files and the ``_current`` swap, no Spark job, buckets and the other
+  artifacts carried by pointer. No artifact directory is ever rewritten, so
+  a crashed build leaves only an unnamed directory that ``vacuum`` drops.
+- **Liveness**: ``"data"`` is the version whose DML wrote the snapshot's
+  rows (a build commit carries it forward); each artifact entry records the
+  ``data`` it indexes and serves only a snapshot with exactly that data.
+  DML carries the entries forward as "last built", so search falls back to
+  the engine's ad-hoc scoring / exact scan until a refresh rolls the
+  last-built artifact forward.
+- **One pin per reader**: a reader reads ``_current`` once and resolves the
+  data files and every artifact from that one manifest (the Spark engine,
+  :class:`~semadb_spark.plans.local_engine.LocalSearchEngine`, a serving
+  pool's workers). A path never changes under it, so every serving cache
+  keys on the path alone, and a commit during an open cannot mix versions.
 
 Column-vs-map note: the reference merges a msgpack map at depth 1
 (shard/shard.go:275-281). Here each top-level key is a column, so the merge
@@ -88,9 +107,9 @@ def _quantizer_fingerprint(qmeta: dict) -> str:
     """Digest of the fit parameters that determine what a baked code MEANS
     (thresholds for BQ, codebooks+metric for PQ). Stored in _graph.json
     when codes are baked into a packed graph and re-checked at serve time:
-    the serve path resolves the LATEST frozen quantizer meta, and if that
-    ever differed from the fit the codes were baked with (e.g. the
-    highest-version glob resolving a different fit), ADC distances would
+    the serve path resolves the frozen quantizer meta of the last-built
+    codes, and if that ever differed from the fit the codes were baked
+    with (e.g. a refit after the graph was built), ADC distances would
     silently degrade rather than error (ADVICE r8)."""
     import hashlib
 
@@ -104,6 +123,16 @@ def _quantizer_fingerprint(qmeta: dict) -> str:
         h.update(np.asarray(qmeta["centroids"], dtype=np.float64).tobytes())
         h.update(str(qmeta.get("pq_metric")).encode())
     return h.hexdigest()[:16]
+
+
+def _tag(kind: str, prop: str) -> str:
+    """Artifact-map key and directory name of ``kind``'s index on ``prop``."""
+    return f"{kind}_{prop.replace('.', '_')}"
+
+
+def _dirty_buckets(old: dict[str, str], new: dict[str, str]) -> list[int]:
+    """Data buckets whose pointer differs between two bucket manifests."""
+    return sorted(int(b) for b in set(old) | set(new) if old.get(b) != new.get(b))
 
 
 def _merge_column(
@@ -290,19 +319,111 @@ class Collection:
         )
         return sorted(int(r["b"]) for r in rows)
 
-    def _manifest(self, version: int | None = None) -> dict[str, str]:
+    def _snapshot(self, version: int | None = None) -> dict:
+        """The manifest of ``version`` (default: ``_current``, read once):
+        ``{"version", "data", "buckets", "artifacts"}``. A reader resolves
+        everything it serves from one of these."""
         v = self._current_version() if version is None else version
         with open(os.path.join(self._data_path(v), _MANIFEST_FILE)) as f:
-            return json.load(f)["buckets"]
+            snap = json.load(f)
+        # a manifest written before the artifact map names no artifacts
+        snap.setdefault("data", v)
+        snap.setdefault("artifacts", {})
+        snap["version"] = v
+        return snap
+
+    def _manifest(self, version: int | None = None) -> dict[str, str]:
+        return self._snapshot(version)["buckets"]
+
+    def _commit(
+        self,
+        artifacts: dict[str, str] | None = None,
+        buckets: dict[int, str] | None = None,
+        frame_schema: str | None = None,
+    ) -> None:
+        """Publish the next version: its ``_manifest.json`` and
+        ``_frame_schema.json``, then the atomic ``_current`` swap — no Spark
+        job, no data rewritten.
+
+        A data write passes its ``buckets`` and ``frame_schema``, and the
+        new version is its own data generation. Otherwise the buckets, the
+        data generation and the frame schema carry forward. Artifact
+        entries always carry forward; ``artifacts`` (tag -> directory built
+        from the current data) are merged over them, each recorded as
+        indexing the current data generation."""
+        cur = self._current_version()
+        prev = (
+            self._snapshot(cur) if cur >= 0
+            else {"data": -1, "buckets": {}, "artifacts": {}}
+        )
+        nxt = cur + 1
+        path = self._data_path(nxt)
+        entries = dict(prev["artifacts"])
+        for tag, art in (artifacts or {}).items():
+            entries[tag] = {
+                "path": os.path.relpath(art, self.path), "data": prev["data"],
+            }
+        snap = {
+            "data": prev["data"] if buckets is None else nxt,
+            "buckets": prev["buckets"] if buckets is None else {
+                str(k): v for k, v in sorted(buckets.items())
+            },
+            "artifacts": entries,
+        }
+        if frame_schema is None:
+            with open(os.path.join(self._data_path(cur), "_frame_schema.json")) as f:
+                frame_schema = f.read()
+        os.makedirs(path, exist_ok=True)
+        with open(os.path.join(path, _MANIFEST_FILE), "w") as f:
+            json.dump(snap, f)
+        # Pin the frame schema beside the snapshot: an all-empty write emits
+        # no part files, so reads need an explicit schema.
+        with open(os.path.join(path, "_frame_schema.json"), "w") as f:
+            f.write(frame_schema)
+        tmp = os.path.join(self.path, f".{_CURRENT}.{_uuid.uuid4().hex}")
+        with open(tmp, "w") as f:
+            f.write(str(nxt))
+        os.replace(tmp, os.path.join(self.path, _CURRENT))  # atomic swap
+
+    def _artifact_dir(self, tag: str) -> str:
+        """A fresh directory for a build of artifact ``tag``: under the next
+        version, which no manifest names until the build commits."""
+        return os.path.join(
+            self.path, f"v{self._current_version() + 1}_idx", tag
+        )
+
+    def _artifact(
+        self, tag: str, snap: dict | None = None, live: bool = True
+    ) -> str | None:
+        """Directory of artifact ``tag`` in ``snap`` (default: the current
+        manifest), or None. ``live`` accepts only an artifact that indexes
+        exactly the snapshot's data (the serving rule); otherwise the last
+        built one is returned, which a refresh rolls forward."""
+        snap = self._snapshot() if snap is None else snap
+        entry = snap["artifacts"].get(tag)
+        if entry is None or (live and entry["data"] != snap["data"]):
+            return None
+        return os.path.join(self.path, entry["path"])
+
+    def _last_built(self, kind: str, prop: str, marker: str):
+        """``(snapshot, dir, data generation)`` of the last-built ``kind``
+        index on ``prop`` that a refresh rolls forward, read from the
+        current manifest. Raises the build-first error when the manifest
+        names none, or when vacuum removed it."""
+        snap = self._snapshot()
+        path = self._artifact(_tag(kind, prop), snap, live=False)
+        if path is None or not os.path.exists(os.path.join(path, marker)):
+            raise ValueError(f"no {kind} index found for property {prop}; build first")
+        return snap, path, snap["artifacts"][_tag(kind, prop)]["data"]
 
     def _write_snapshot(
         self, df: DataFrame, affected: list[int] | None = None
     ) -> None:
-        """Commit a new snapshot. ``affected=None`` rewrites every bucket of
-        ``df``; otherwise ``df`` holds ONLY rows of the affected buckets,
-        each rewritten whole, and all other buckets carry forward by
-        manifest pointer (the DML path: its cost is the affected buckets'
-        size, not the batch's)."""
+        """Write ``df`` as the next version's data and commit it.
+        ``affected=None`` rewrites every bucket of ``df``; otherwise ``df``
+        holds ONLY rows of the affected buckets, each rewritten whole, and
+        all other buckets carry forward by manifest pointer (the DML path:
+        its cost is the affected buckets' size, not the batch's)."""
         cur = self._current_version()
         nxt = cur + 1
         path = self._data_path(nxt)
@@ -330,69 +451,74 @@ class Collection:
             for b in affected:
                 buckets.pop(b, None)  # bucket may have emptied
             buckets.update({b: p for b, p in written.items() if b in set(affected)})
-        with open(os.path.join(path, _MANIFEST_FILE), "w") as f:
-            json.dump({"buckets": {str(k): v for k, v in sorted(buckets.items())}}, f)
-        # Pin the frame schema beside the snapshot: an all-empty write emits
-        # no part files, so reads need an explicit schema.
-        with open(os.path.join(path, "_frame_schema.json"), "w") as f:
-            f.write(df.schema.json())
-        tmp = os.path.join(self.path, f".{_CURRENT}.{_uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(str(nxt))
-        os.replace(tmp, os.path.join(self.path, _CURRENT))  # atomic swap
+        self._commit(buckets=buckets, frame_schema=df.schema.json())
 
     def vacuum(self, keep_versions: int = 1) -> list[int]:
         """S7 backup rotation: snapshot versions double as backups
         (utils/backup.go keeps N timestamped copies; here, versions), and
         vacuum is the rotation. Retains the last ``keep_versions`` manifests
-        plus every older version dir still referenced by a retained manifest
-        (bucket pointers carry forward across DML), deletes the rest —
-        including their version-pinned index artifacts.
-        Returns the removed version numbers."""
+        plus every older version dir a retained manifest still references
+        (bucket pointers carry forward across DML, and a live artifact's
+        data generation), and every artifact dir a retained manifest names
+        as LIVE; deletes the rest. Index artifacts serve only the data they
+        index, so a last-built artifact that no retained manifest serves
+        goes too, and a later refresh asks for a build first. Returns the
+        version numbers whose dirs (data or artifact) were removed."""
         import re
         import shutil
 
         cur = self._current_version()
-        retained = set(range(max(0, cur - int(keep_versions) + 1), cur + 1))
-        referenced = set(retained)
-        for v in retained:
-            manifest_path = os.path.join(self._data_path(v), _MANIFEST_FILE)
-            if not os.path.exists(manifest_path):
-                continue
-            for p in self._manifest(v).values():
-                referenced.add(int(p.split("/", 1)[0][1:]))
+        keep_dirs: set[str] = set()
+        live: set[str] = set()
+        for v in range(max(0, cur - int(keep_versions) + 1), cur + 1):
+            snap = self._snapshot(v)
+            keep_dirs.add(f"v{v}")
+            keep_dirs.add(f"v{snap['data']}")
+            keep_dirs.update(p.split("/", 1)[0] for p in snap["buckets"].values())
+            live.update(
+                a["path"] for a in snap["artifacts"].values()
+                if a["data"] == snap["data"]
+            )
         removed: set[int] = set()
         for entry in os.listdir(self.path):
             m = re.fullmatch(r"v(\d+)(_idx)?", entry)
             if not m:
                 continue
-            v = int(m.group(1))
-            if m.group(2):  # index artifacts only serve their own version
-                if v not in retained:
-                    shutil.rmtree(os.path.join(self.path, entry))
-                    removed.add(v)
-            elif v not in referenced:
-                shutil.rmtree(os.path.join(self.path, entry))
-                removed.add(v)
+            d = os.path.join(self.path, entry)
+            if not m.group(2):
+                if entry not in keep_dirs:
+                    shutil.rmtree(d)
+                    removed.add(int(m.group(1)))
+                continue
+            for tag in os.listdir(d):
+                if f"{entry}/{tag}" not in live:
+                    shutil.rmtree(os.path.join(d, tag))
+                    removed.add(int(m.group(1)))
+            if not os.listdir(d):
+                os.rmdir(d)
         return sorted(removed)
 
     # -- read side ----------------------------------------------------------
-    def _read_buckets(self, buckets: list[int] | None = None) -> DataFrame:
-        """Read the current snapshot, pruned to ``buckets`` when given —
-        bucket pruning is directory pruning, the point of the layout."""
+    def _read_buckets(
+        self, buckets: list[int] | None = None, snap: dict | None = None
+    ) -> DataFrame:
+        """Read ``snap`` (default: the current snapshot), pruned to
+        ``buckets`` when given — bucket pruning is directory pruning, the
+        point of the layout."""
         if self.spark is None:
             raise ValueError(
                 "collection opened local-only (open_local): Spark surfaces "
                 "(search/DML/index builds) unavailable; use search_local / "
                 "the point-read tiers"
             )
-        manifest = self._manifest()
+        snap = self._snapshot() if snap is None else snap
+        manifest = snap["buckets"]
         if buckets is not None:
             wanted = set(buckets)
             paths = [p for b, p in manifest.items() if int(b) in wanted]
         else:
             paths = list(manifest.values())
-        schema = self._df_schema()
+        schema = self._df_schema(snap["version"])
         if not paths:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(
@@ -402,8 +528,8 @@ class Collection:
     def df(self) -> DataFrame:
         return self._read_buckets()
 
-    def _df_schema(self) -> T.StructType:
-        with open(os.path.join(self._data_path(), "_frame_schema.json")) as f:
+    def _df_schema(self, version: int | None = None) -> T.StructType:
+        with open(os.path.join(self._data_path(version), "_frame_schema.json")) as f:
             return T.StructType.fromJson(json.loads(f.read()))
 
     def count(self) -> int:
@@ -412,9 +538,8 @@ class Collection:
         return self.df().count()
 
     # -- W6: persisted text index -------------------------------------------
-    def _index_path(self, prop: str, version: int | None = None) -> str:
-        v = self._current_version() if version is None else version
-        return os.path.join(self.path, f"v{v}_idx", f"text_{prop.replace('.', '_')}")
+    def _index_path(self, prop: str, snap: dict | None = None) -> str | None:
+        return self._artifact(_tag("text", prop), snap)
 
     def build_text_index(self, prop: str | None = None) -> dict[str, int]:
         """Materialize the doc_terms posting table + _numDocuments counter
@@ -426,22 +551,24 @@ class Collection:
         the postings write observes on its own final stage; nothing is read
         back.
 
-        The index is version-pinned: a later insert/update/delete writes a
-        new snapshot and search falls back to ad-hoc scoring until the index
-        is rebuilt or rolled forward (:meth:`refresh_text_index`)."""
+        Each index lands in a fresh directory and the call commits one new
+        snapshot naming them all. The index serves only the data it was
+        built from: a later insert/update/delete writes a new snapshot and
+        search falls back to ad-hoc scoring until the index is rebuilt or
+        rolled forward (:meth:`refresh_text_index`)."""
         from .operators.text_search import doc_term_freqs
 
         props = (
             [prop] if prop else [p for p, v in self.schema.items() if v.type == "text"]
         )
         stats: dict[str, int] = {}
+        built: dict[str, str] = {}
         for p in props:
             if self.schema[p].type != "text":
                 raise ValueError(f"property {p} is not a text index")
-            stats[p], _ = self._write_postings(
-                doc_term_freqs(self.df(), p), self._index_path(p)
-            )
-        self._invalidate_engine()
+            built[_tag("text", p)] = path = self._artifact_dir(_tag("text", p))
+            stats[p], _ = self._write_postings(doc_term_freqs(self.df(), p), path)
+        self._commit(built)
         return stats
 
     def _write_postings(
@@ -528,16 +655,17 @@ class Collection:
         on the immutable posting artifact, results byte-identical to the
         engine's text scoring. Measured on a 400M-posting index: 250-437
         QPS at 8-16 workers vs ~35 for one client (the Spark route stays
-        the analytical/batch path). Use as a context manager; reopen after
-        ``build_text_index``/``refresh_text_index`` rotate the artifact
-        (the pool detects rebuilds via the artifact fingerprint, but
-        rotation at a request boundary is the clean deployment shape)."""
+        the analytical/batch path). Use as a context manager. The pool
+        serves the index that is live at open for its whole life: a
+        ``build_text_index``/``refresh_text_index`` commits a new artifact
+        at a new path and leaves this one as it was, so reopen the pool to
+        serve it."""
         from .operators.text_search import TextServePool
 
         if prop not in self.schema or self.schema[prop].type != "text":
             raise ValueError(f"property {prop} is not a text index")
         path = self._index_path(prop)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        if path is None or not os.path.exists(os.path.join(path, "_SUCCESS")):
             raise ValueError(
                 f"no persisted text index for {prop}; run build_text_index"
             )
@@ -566,39 +694,19 @@ class Collection:
         without ``bucket_docs`` is rebuilt from scratch instead, and the old
         postings are not read when no clean bucket holds a document. Returns
         the number of re-tokenized posting rows."""
-        import re
-
         from .operators.text_search import doc_term_freqs
 
         if self.schema[prop].type != "text":
             raise ValueError(f"property {prop} is not a text index")
-        cur = self._current_version()
-        indexed_v = None
-        for entry in os.listdir(self.path):
-            m = re.fullmatch(r"v(\d+)_idx", entry)
-            if m:
-                v = int(m.group(1))
-                if v <= cur and os.path.exists(
-                    os.path.join(self._index_path(prop, v), "_num_docs.json")
-                ):
-                    if indexed_v is None or v > indexed_v:
-                        indexed_v = v
-        if indexed_v is None:
-            raise ValueError(f"no text index found for property {prop}; build first")
-        if indexed_v == cur:
+        snap, old_path, indexed = self._last_built("text", prop, "_num_docs.json")
+        if indexed == snap["data"]:
             return 0
-        old_path = self._index_path(prop, indexed_v)
         with open(os.path.join(old_path, "_num_docs.json")) as f:
             old_docs = json.load(f).get("bucket_docs", {})
         # an index without bucket_docs carries nothing: every bucket is dirty
-        old_manifest = self._manifest(indexed_v) if old_docs else {}
-        cur_manifest = self._manifest(cur)
-        dirty = sorted(
-            int(b)
-            for b in set(old_manifest) | set(cur_manifest)
-            if old_manifest.get(b) != cur_manifest.get(b)
-        )
-        doc_terms = doc_term_freqs(self._read_buckets(dirty), prop)
+        old_manifest = self._manifest(indexed) if old_docs else {}
+        dirty = _dirty_buckets(old_manifest, snap["buckets"])
+        doc_terms = doc_term_freqs(self._read_buckets(dirty, snap), prop)
         carried = {int(b): n for b, n in old_docs.items() if int(b) not in dirty}
         if any(carried.values()):  # else no clean bucket holds a posting
             clean = (
@@ -611,16 +719,14 @@ class Collection:
                 )
             )
             doc_terms = clean.unionByName(doc_terms)
-        _, n_fresh = self._write_postings(
-            doc_terms, self._index_path(prop, cur), carried
-        )
-        self._invalidate_engine()
+        new_path = self._artifact_dir(_tag("text", prop))
+        _, n_fresh = self._write_postings(doc_terms, new_path, carried)
+        self._commit({_tag("text", prop): new_path})
         return n_fresh
 
     # -- W7 analogue: persisted ANN (IVF) index -----------------------------
-    def _vindex_path(self, prop: str, version: int | None = None) -> str:
-        v = self._current_version() if version is None else version
-        return os.path.join(self.path, f"v{v}_idx", f"ivf_{prop.replace('.', '_')}")
+    def _vindex_path(self, prop: str, snap: dict | None = None) -> str | None:
+        return self._artifact(_tag("ivf", prop), snap)
 
     def build_vector_index(self, prop: str, nlist: int = 64, seed: int = 42) -> int:
         """Materialize an IVF index for a vectorVamana property: coarse
@@ -629,14 +735,13 @@ class Collection:
         SURVEY.md §7 M7; serving analogue of the reference's graph,
         shard/index/vamana/vamana.go:93-120). Returns nlist actually fit.
 
-        Version-pinned like the text index: a newer snapshot falls back to
-        exact search until rebuilt."""
+        Data-pinned like the text index: a snapshot with newer data falls
+        back to exact search until rebuilt or refreshed."""
         from .operators.ann import ivf_build
 
         if self.schema[prop].type != "vectorVamana":
             raise ValueError(f"property {prop} is not a vectorVamana index")
         index = ivf_build(self.df(), prop, id_col="_id", nlist=nlist, seed=seed)
-        path = self._vindex_path(prop)
         artifact = index.assigned.select("_id", F.col(prop).alias("v"), "centroid_id")
         # Quantizer-in-the-index parity (the reference plugs the fitted
         # quantizer INTO the graph index and serves graph distances over
@@ -646,23 +751,21 @@ class Collection:
         # and exact-rerank from the SAME row — the fused IVF-BQ kernel,
         # no join back to the base table at query time.
         qmeta = self._frozen_quantizer_meta(prop)
-        if qmeta is not None and os.path.exists(
-            os.path.join(self._qindex_path(prop), "_quantizer.json")
-        ):
+        qpath = self._qindex_path(prop)
+        if qmeta is not None and qpath is not None:
             code_col = "bq_code" if qmeta["kind"] == "binary" else "pq_code"
-            codes = self.spark.read.parquet(self._qindex_path(prop)).select(
-                "_id", code_col
-            )
+            codes = self.spark.read.parquet(qpath).select("_id", code_col)
             artifact = artifact.join(codes, "_id", "left")
-        (
-            artifact.write.mode("overwrite")
-            .partitionBy("centroid_id")
-            .parquet(path)
-        )
-        with open(os.path.join(path, "_centroids.json"), "w") as f:
-            json.dump(index.centroids.tolist(), f)
-        self._invalidate_engine()
+        path = self._artifact_dir(_tag("ivf", prop))
+        self._write_ivf(artifact, index.centroids, path)
+        self._commit({_tag("ivf", prop): path})
         return len(index.centroids)
+
+    @staticmethod
+    def _write_ivf(rows: DataFrame, centroids, path: str) -> None:
+        rows.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+        with open(os.path.join(path, "_centroids.json"), "w") as f:
+            json.dump(centroids.tolist(), f)
 
     def refresh_vector_index(self, prop: str) -> int:
         """W4 incremental index maintenance for the vector index: roll the
@@ -678,95 +781,73 @@ class Collection:
         wholesale by the current snapshot's content. Returns the number of
         rows re-assigned. The artifact itself is rewritten (O(index) IO,
         O(dirty) compute); per-centroid manifesting of the artifact is the
-        next step at 100 TB.
+        next step at 100 TB. With no dirty bucket the artifact carries
+        forward by pointer.
         """
-        import re
-
         import numpy as np
 
         from .operators.ann import ivf_build  # noqa: F401  (doc anchor)
         from .functions.kmeans import assign_centroids
 
-        cur = self._current_version()
-        indexed_v = None
-        for entry in os.listdir(self.path):
-            m = re.fullmatch(r"v(\d+)_idx", entry)
-            if m and os.path.exists(
-                os.path.join(self._vindex_path(prop, int(m.group(1))), "_centroids.json")
-            ):
-                v = int(m.group(1))
-                if v <= cur and (indexed_v is None or v > indexed_v):
-                    indexed_v = v
-        if indexed_v is None:
-            raise ValueError(f"no IVF index found for property {prop}; build first")
-        if indexed_v == cur:
+        tag = _tag("ivf", prop)
+        snap, old_path, indexed = self._last_built("ivf", prop, "_centroids.json")
+        if indexed == snap["data"]:
             return 0
-        old_path = self._vindex_path(prop, indexed_v)
         with open(os.path.join(old_path, "_centroids.json")) as f:
             cents = np.asarray(json.load(f), dtype=np.float64)
-        old_manifest = self._manifest(indexed_v)
-        cur_manifest = self._manifest(cur)
-        dirty = sorted(
-            int(b)
-            for b in set(old_manifest) | set(cur_manifest)
-            if old_manifest.get(b) != cur_manifest.get(b)
-        )
+        dirty = _dirty_buckets(self._manifest(indexed), snap["buckets"])
+        if not dirty:
+            self._commit({tag: old_path})
+            return 0
         old_index = self.spark.read.parquet(old_path)
-        if dirty:
-            dirty_set = [int(b) for b in dirty]
-            clean_rows = old_index.filter(
-                ~self._bucket_expr(F.col("_id")).isin(dirty_set)
+        clean_rows = old_index.filter(~self._bucket_expr(F.col("_id")).isin(dirty))
+        fresh = self._read_buckets(dirty, snap).select(
+            "_id", F.col(prop).alias("v")
+        ).filter(F.col("v").isNotNull())
+        reassigned = assign_centroids(fresh, "v", cents)
+        # a quantized artifact carries codes beside the floats — fresh
+        # rows are re-encoded with the FROZEN fit (vectorstore.go:75+
+        # Set semantics), exactly as clean rows keep their stored codes
+        qmeta = self._frozen_quantizer_meta(prop, snap)
+        if "bq_code" in old_index.columns and qmeta is not None:
+            from .operators.quantize import bq_encode
+
+            reassigned = bq_encode(
+                reassigned, "v", np.asarray(qmeta["thresholds"])
             )
-            fresh = self._read_buckets(dirty_set).select(
-                "_id", F.col(prop).alias("v")
-            ).filter(F.col("v").isNotNull())
-            reassigned = assign_centroids(fresh, "v", cents)
-            # a quantized artifact carries codes beside the floats — fresh
-            # rows are re-encoded with the FROZEN fit (vectorstore.go:75+
-            # Set semantics), exactly as clean rows keep their stored codes
-            qmeta = self._frozen_quantizer_meta(prop)
-            if "bq_code" in old_index.columns and qmeta is not None:
-                from .operators.quantize import bq_encode
+        elif "pq_code" in old_index.columns and qmeta is not None:
+            from .operators.quantize import PQCodebooks, pq_encode
 
-                reassigned = bq_encode(
-                    reassigned, "v", np.asarray(qmeta["thresholds"])
-                )
-            elif "pq_code" in old_index.columns and qmeta is not None:
-                from .operators.quantize import PQCodebooks, pq_encode
-
-                reassigned = pq_encode(
-                    reassigned,
-                    "v",
-                    PQCodebooks(
-                        centroids=np.asarray(qmeta["centroids"], dtype=np.float64),
-                        metric=qmeta["pq_metric"],
-                    ),
-                )
-            n = reassigned.count()
-            merged = clean_rows.unionByName(reassigned)
-        else:
-            merged, n = old_index, 0
-        new_path = self._vindex_path(prop, cur)
-        merged.write.mode("overwrite").partitionBy("centroid_id").parquet(new_path)
-        with open(os.path.join(new_path, "_centroids.json"), "w") as f:
-            json.dump(cents.tolist(), f)
+            reassigned = pq_encode(
+                reassigned,
+                "v",
+                PQCodebooks(
+                    centroids=np.asarray(qmeta["centroids"], dtype=np.float64),
+                    metric=qmeta["pq_metric"],
+                ),
+            )
+        n = reassigned.count()
+        new_path = self._artifact_dir(tag)
+        self._write_ivf(clean_rows.unionByName(reassigned), cents, new_path)
+        self._commit({tag: new_path})
         return n
 
-    def _vector_indexes(self) -> dict[str, object]:
+    def _vector_indexes(self, snap: dict | None = None) -> dict[str, object]:
         import numpy as np
 
         from .operators.ann import IVFBQIndex, IVFIndex
 
+        snap = self._snapshot() if snap is None else snap
         out: dict[str, object] = {}
         for p, v in self.schema.items():
             if v.type != "vectorVamana":
                 continue
-            path = self._vindex_path(p)
-            if os.path.exists(os.path.join(path, "_centroids.json")):
+            path = self._vindex_path(p, snap)
+            if path is not None:
                 with open(os.path.join(path, "_centroids.json")) as f:
                     cents = np.asarray(json.load(f), dtype=np.float64)
                 assigned = self.spark.read.parquet(path)
-                qmeta = self._frozen_quantizer_meta(p)
+                qmeta = self._frozen_quantizer_meta(p, snap)
                 if "bq_code" in assigned.columns and qmeta is not None and qmeta[
                     "kind"
                 ] == "binary":
@@ -842,8 +923,7 @@ class Collection:
             max_shard_rows=int(max_shard_rows),
             build_mode=build_mode, build_passes=int(build_passes),
         )
-        v = self._current_version()
-        path = os.path.join(self.path, f"v{v}_idx", f"vamana_{prop.replace('.', '_')}")
+        path = self._artifact_dir(_tag("vamana", prop))
         index.edges.write.mode("overwrite").parquet(os.path.join(path, "edges"))
         # per-shard serving subgraphs, shard-partitioned so query routing
         # prunes whole partitions (vamana_serve)
@@ -883,8 +963,23 @@ class Collection:
         index.edges.unpersist()
         index.shard_edges.unpersist()
         index.shard_nodes.unpersist()
-        self._invalidate_engine()
+        self._commit({_tag("vamana", prop): path})
         return path
+
+    def _vamana_artifact(
+        self, prop: str, snap: dict | None = None, packed: bool = False
+    ) -> tuple[str, dict]:
+        """(directory, ``_graph.json`` meta) of the live Vamana artifact for
+        ``prop``; with ``packed``, its packed serving layout must exist."""
+        path = self._artifact(_tag("vamana", prop), snap)
+        ok = path is not None and os.path.exists(os.path.join(path, "_graph.json"))
+        if ok and packed:
+            ok = os.path.exists(os.path.join(path, "packed", "_SUCCESS"))
+        if not ok:
+            what = "packed vamana artifact" if packed else "persisted vamana index"
+            raise ValueError(f"no {what} for {prop}; run build_vamana_index")
+        with open(os.path.join(path, "_graph.json")) as f:
+            return path, json.load(f)
 
     def _write_packed_graph(
         self, prop: str, shard_nodes, shard_edges, path: str,
@@ -952,17 +1047,8 @@ class Collection:
 
         from .operators.vamana import vamana_serve
 
-        path = os.path.join(
-            self.path, f"v{self._current_version()}_idx",
-            f"vamana_{prop.replace('.', '_')}",
-        )
-        meta_file = os.path.join(path, "_graph.json")
-        if not os.path.exists(meta_file):
-            raise ValueError(
-                f"no persisted vamana index for {prop}; run build_vamana_index"
-            )
-        with open(meta_file) as f:
-            meta = json.load(f)
+        snap = self._snapshot()
+        path, meta = self._vamana_artifact(prop, snap)
         packed_dir = os.path.join(path, "packed")
         if candidate_ids is not None and rerank != "exact":
             raise ValueError(
@@ -987,7 +1073,7 @@ class Collection:
             # no-op in filtered mode (reference fans to every shard).
             from .operators.vamana import vamana_serve_packed
 
-            thresholds, books = self._resolve_packed_quantizer(prop, meta)
+            thresholds, books = self._resolve_packed_quantizer(prop, meta, snap)
             return vamana_serve_packed(
                 self.spark.read.parquet(packed_dir),
                 queries, k,
@@ -1021,7 +1107,7 @@ class Collection:
             n_seeds=n_seeds,
         )
 
-    def _resolve_packed_quantizer(self, prop: str, meta: dict):
+    def _resolve_packed_quantizer(self, prop: str, meta: dict, snap: dict):
         """(thresholds, books) for a packed graph's baked codes, with the
         fit-fingerprint drift check (ADVICE r8): codes were baked with a
         specific fit — the quantizer a serve resolves MUST be that fit or
@@ -1031,7 +1117,7 @@ class Collection:
         import numpy as np
 
         thresholds = books = None
-        qmeta = self._frozen_quantizer_meta(prop)
+        qmeta = self._frozen_quantizer_meta(prop, snap)
         if meta.get("packed_codes"):
             want_fp = meta.get("quantizer_fp")
             if qmeta is None:
@@ -1075,28 +1161,16 @@ class Collection:
 
         import numpy as np
 
-        path = os.path.join(
-            self.path, f"v{self._current_version()}_idx",
-            f"vamana_{prop.replace('.', '_')}",
-        )
-        meta_file = os.path.join(path, "_graph.json")
-        packed_dir = os.path.join(path, "packed")
-        if not os.path.exists(meta_file) or not os.path.exists(
-            os.path.join(packed_dir, "_SUCCESS")
-        ):
-            raise ValueError(
-                f"no packed vamana artifact for {prop}; run build_vamana_index"
-            )
-        with open(meta_file) as f:
-            meta = json.load(f)
+        snap = self._snapshot()
+        path, meta = self._vamana_artifact(prop, snap, packed=True)
         cents = np.asarray(meta["centroids"], dtype=np.float64)
         if nprobe is None:
             nprobe = max(1, min(len(cents), int(meta["search_size"]) // 8))
         # baked quantizer codes engage the local bq_adc / pq beam with
         # exact rerank, same route selection as the Spark packed serve
-        thresholds, books = self._resolve_packed_quantizer(prop, meta)
+        thresholds, books = self._resolve_packed_quantizer(prop, meta, snap)
         return vamana_serve_local(
-            packed_dir, vector, k,
+            os.path.join(path, "packed"), vector, k,
             metric=meta["metric"],
             search_size=int(meta["search_size"]),
             centroids=cents,
@@ -1118,31 +1192,20 @@ class Collection:
         The reference's deployment shape: concurrent request goroutines
         over shared shard state (shard/shard.go:329-472) with shard-owner
         fan-out (cluster/actions.go:321-351). Use as a context manager;
-        reopen after ``build_vamana_index`` rotates the artifact."""
+        the pool serves the artifact live at open, so reopen it after a
+        build or refresh commits a new one."""
         import numpy as np
 
         from .operators.vamana import VectorServePool
 
-        path = os.path.join(
-            self.path, f"v{self._current_version()}_idx",
-            f"vamana_{prop.replace('.', '_')}",
-        )
-        meta_file = os.path.join(path, "_graph.json")
-        packed_dir = os.path.join(path, "packed")
-        if not os.path.exists(meta_file) or not os.path.exists(
-            os.path.join(packed_dir, "_SUCCESS")
-        ):
-            raise ValueError(
-                f"no packed vamana artifact for {prop}; run build_vamana_index"
-            )
-        with open(meta_file) as f:
-            meta = json.load(f)
+        snap = self._snapshot()
+        path, meta = self._vamana_artifact(prop, snap, packed=True)
         cents = np.asarray(meta["centroids"], dtype=np.float64)
         if nprobe is None:
             nprobe = max(1, min(len(cents), int(meta["search_size"]) // 8))
-        thresholds, books = self._resolve_packed_quantizer(prop, meta)
+        thresholds, books = self._resolve_packed_quantizer(prop, meta, snap)
         return VectorServePool(
-            packed_dir,
+            os.path.join(path, "packed"),
             centroids=cents,
             metric=meta["metric"],
             search_size=int(meta["search_size"]),
@@ -1168,15 +1231,10 @@ class Collection:
         blocking full warm-up (bytes + plan codegen)."""
         from .operators.vamana import prefetch_packed_artifact
 
-        packed_dir = os.path.join(
-            self.path, f"v{self._current_version()}_idx",
-            f"vamana_{prop.replace('.', '_')}", "packed",
+        path, _ = self._vamana_artifact(prop, packed=True)
+        return prefetch_packed_artifact(
+            os.path.join(path, "packed"), threads=threads
         )
-        if not os.path.exists(os.path.join(packed_dir, "_SUCCESS")):
-            raise ValueError(
-                f"no packed vamana artifact for {prop}; run build_vamana_index"
-            )
-        return prefetch_packed_artifact(packed_dir, threads=threads)
 
     def warm_vamana_index(self, prop: str) -> float:
         """Pre-warm the packed Vamana serving artifact so the FIRST real
@@ -1199,19 +1257,9 @@ class Collection:
 
         import numpy as np
 
-        path = os.path.join(
-            self.path, f"v{self._current_version()}_idx",
-            f"vamana_{prop.replace('.', '_')}",
-        )
-        meta_file = os.path.join(path, "_graph.json")
-        packed_dir = os.path.join(path, "packed")
-        if not os.path.exists(meta_file):
-            raise ValueError(
-                f"no persisted vamana index for {prop}; run build_vamana_index"
-            )
         t0 = time.time()
-        with open(meta_file) as f:
-            meta = json.load(f)
+        path, meta = self._vamana_artifact(prop)
+        packed_dir = os.path.join(path, "packed")
         if os.path.exists(os.path.join(packed_dir, "_SUCCESS")):
             packed = self.spark.read.parquet(packed_dir)
             blob_cols = [
@@ -1262,9 +1310,8 @@ class Collection:
         shard medoid. Like the reference's delete, the shard-local repair
         is intentionally local/optimistic — the merged graph holds the full
         repair; a rebuild re-optimizes. Returns the number of applied
-        changes."""
-        import re
-
+        changes. With no dirty bucket the artifact carries forward by
+        pointer."""
         import numpy as np
 
         from .functions.distances import distance_expr
@@ -1281,49 +1328,20 @@ class Collection:
             )
         if self.schema[prop].type != "vectorVamana":
             raise ValueError(f"property {prop} is not a vectorVamana index")
-        cur = self._current_version()
-        tag = f"vamana_{prop.replace('.', '_')}"
-        indexed_v = None
-        for entry in os.listdir(self.path):
-            m = re.fullmatch(r"v(\d+)_idx", entry)
-            if m:
-                v = int(m.group(1))
-                if v <= cur and os.path.exists(
-                    os.path.join(self.path, f"v{v}_idx", tag, "_graph.json")
-                ):
-                    if indexed_v is None or v > indexed_v:
-                        indexed_v = v
-        if indexed_v is None:
-            raise ValueError(f"no vamana index found for property {prop}; build first")
-        if indexed_v == cur:
+        tag = _tag("vamana", prop)
+        snap, old_path, indexed = self._last_built("vamana", prop, "_graph.json")
+        if indexed == snap["data"]:
             return 0
-        old_path = os.path.join(self.path, f"v{indexed_v}_idx", tag)
         with open(os.path.join(old_path, "_graph.json")) as f:
             meta = json.load(f)
-        old_manifest = self._manifest(indexed_v)
-        cur_manifest = self._manifest(cur)
-        dirty = sorted(
-            int(b)
-            for b in set(old_manifest) | set(cur_manifest)
-            if old_manifest.get(b) != cur_manifest.get(b)
-        )
-        new_path = os.path.join(self.path, f"v{cur}_idx", tag)
+        dirty = _dirty_buckets(self._manifest(indexed), snap["buckets"])
+        if not dirty:
+            self._commit({tag: old_path})
+            return 0
+        new_path = self._artifact_dir(tag)
         old_sn = self.spark.read.parquet(os.path.join(old_path, "shard_nodes"))
         old_se = self.spark.read.parquet(os.path.join(old_path, "shard_edges"))
         old_edges = self.spark.read.parquet(os.path.join(old_path, "edges"))
-        if not dirty:
-            # nothing changed: carry the artifact forward verbatim
-            old_edges.write.mode("overwrite").parquet(os.path.join(new_path, "edges"))
-            old_sn.write.mode("overwrite").partitionBy("shard").parquet(
-                os.path.join(new_path, "shard_nodes")
-            )
-            old_se.write.mode("overwrite").partitionBy("shard").parquet(
-                os.path.join(new_path, "shard_edges")
-            )
-            with open(os.path.join(new_path, "_graph.json"), "w") as f:
-                json.dump(meta, f)
-            self._invalidate_engine()
-            return 0
 
         # -- bounded delta within the dirty buckets -------------------------
         is_dirty_id = self._bucket_expr(F.col("id")).isin(dirty)
@@ -1331,7 +1349,7 @@ class Collection:
             old_sn.select("id", "v").groupBy("id").agg(F.first("v").alias("ov"))
         ).filter(is_dirty_id)
         cur_dirty = (
-            self._read_buckets(dirty)
+            self._read_buckets(dirty, snap)
             .select(F.col("_id").alias("id"), F.col(prop).alias("nv"))
             .filter(F.col("nv").isNotNull())
         )
@@ -1542,13 +1560,12 @@ class Collection:
         )
         with open(os.path.join(new_path, "_graph.json"), "w") as f:
             json.dump(meta, f)
-        self._invalidate_engine()
+        self._commit({tag: new_path})
         return len(delta_rows)
 
     # -- W9 + vectorstore.go:75+: persisted quantized serving codes ----------
-    def _qindex_path(self, prop: str, version: int | None = None) -> str:
-        v = self._current_version() if version is None else version
-        return os.path.join(self.path, f"v{v}_idx", f"quant_{prop.replace('.', '_')}")
+    def _qindex_path(self, prop: str, snap: dict | None = None) -> str | None:
+        return self._artifact(_tag("quant", prop), snap)
 
     def build_quantized_index(self, prop: str, seed: int = 42) -> str:
         """Fit + encode the schema-declared quantizer for a vector property
@@ -1557,8 +1574,10 @@ class Collection:
         quantized store, shard/vectorstore/vectorstore.go:75+,
         binary.go:145-178, product.go:175-236). Returns the quantizer kind.
 
-        Version-pinned like the other index artifacts: a newer snapshot
-        falls back to exact float serving until rebuilt."""
+        Data-pinned like the other index artifacts: a snapshot with newer
+        data falls back to exact float serving until the codes are
+        re-encoded (the next insert does it, :meth:`_autofit_quantizers`)
+        or rebuilt."""
         from .operators.quantize import build_quantized_index as _build
 
         value = self.schema[prop]
@@ -1571,8 +1590,6 @@ class Collection:
             self.df(), prop, quantizer,
             id_col="_id", metric=value.distance_metric, seed=seed,
         )
-        path = self._qindex_path(prop)
-        idx.codes.write.mode("overwrite").parquet(path)
         meta: dict = {"kind": idx.kind, "code_col": idx.code_col, "metric": idx.metric}
         if idx.kind == "binary":
             meta["thresholds"] = (
@@ -1587,37 +1604,33 @@ class Collection:
         else:
             meta["centroids"] = idx.books.centroids.tolist()
             meta["pq_metric"] = idx.books.metric
-        with open(os.path.join(path, "_quantizer.json"), "w") as f:
-            json.dump(meta, f)
-        self._invalidate_engine()
+        self._write_codes(prop, idx.codes, meta)
         return idx.kind
 
-    def _frozen_quantizer_meta(self, prop: str) -> dict | None:
-        """Latest persisted quantizer meta for ``prop`` across ALL snapshot
-        versions. The fit FREEZES once made (binary.go:145+ fits a single
-        time past the trigger; product.go:230-236 likewise) — later
-        snapshots re-encode with these frozen parameters, never refit."""
-        import glob
-        import re
+    def _write_codes(self, prop: str, codes: DataFrame, meta: dict) -> None:
+        """Persist a property's quantized codes + fit and commit them."""
+        path = self._artifact_dir(_tag("quant", prop))
+        codes.write.mode("overwrite").parquet(path)
+        with open(os.path.join(path, "_quantizer.json"), "w") as f:
+            json.dump(meta, f)
+        self._commit({_tag("quant", prop): path})
 
-        pat = os.path.join(
-            self.path, "v*_idx", f"quant_{prop.replace('.', '_')}", "_quantizer.json"
-        )
-        best, best_v = None, -1
-        for m in glob.glob(pat):
-            ver = int(re.search(r"v(\d+)_idx", m).group(1))
-            if ver > best_v:
-                best_v, best = ver, m
-        if best is None:
+    def _frozen_quantizer_meta(self, prop: str, snap: dict | None = None) -> dict | None:
+        """The quantizer fit of the last-built codes ``snap`` names for
+        ``prop`` (live or not). The fit FREEZES once made (binary.go:145+
+        fits a single time past the trigger; product.go:230-236 likewise)
+        — later snapshots re-encode with these frozen parameters, never
+        refit."""
+        path = self._artifact(_tag("quant", prop), snap, live=False)
+        if path is None or not os.path.exists(os.path.join(path, "_quantizer.json")):
             return None
-        with open(best) as f:
+        with open(os.path.join(path, "_quantizer.json")) as f:
             return json.load(f)
 
     def _reencode_frozen(self, prop: str, meta: dict) -> None:
         """Encode the current snapshot with a FROZEN fit (no refit) and
-        persist the codes for this version — the maintain-on-write half of
-        vectorstore.go:75+ (Set encodes each point with the already-fitted
-        quantizer)."""
+        commit the codes — the maintain-on-write half of vectorstore.go:75+
+        (Set encodes each point with the already-fitted quantizer)."""
         import numpy as np
 
         from .operators.quantize import PQCodebooks, bq_encode, pq_encode
@@ -1633,10 +1646,7 @@ class Collection:
                 metric=meta["pq_metric"],
             )
             codes = pq_encode(base, prop, books).select("_id", "pq_code")
-        path = self._qindex_path(prop)
-        codes.write.mode("overwrite").parquet(path)
-        with open(os.path.join(path, "_quantizer.json"), "w") as f:
-            json.dump(meta, f)
+        self._write_codes(prop, codes, meta)
 
     def _autofit_quantizers(self) -> None:
         """Insert-path auto-trigger parity (binary.go:145+, product.go:
@@ -1653,8 +1663,7 @@ class Collection:
             trigger = params.get("triggerThreshold")
             if not trigger:
                 continue
-            cur_meta = os.path.join(self._qindex_path(p), "_quantizer.json")
-            if os.path.exists(cur_meta):
+            if self._qindex_path(p) is not None:
                 continue  # codes already current for this snapshot
             frozen = self._frozen_quantizer_meta(p)
             if frozen is not None:
@@ -1664,20 +1673,20 @@ class Collection:
             ):
                 self.build_quantized_index(p)
 
-    def _quantized_indexes(self) -> dict[str, object]:
+    def _quantized_indexes(self, snap: dict | None = None) -> dict[str, object]:
         import numpy as np
 
         from .operators.quantize import PQCodebooks, QuantizedIndex
 
+        snap = self._snapshot() if snap is None else snap
         out: dict[str, object] = {}
         for p, v in self.schema.items():
             if v.type not in ("vectorFlat", "vectorVamana") or v.quantizer is None:
                 continue
-            path = self._qindex_path(p)
-            meta_path = os.path.join(path, "_quantizer.json")
-            if not os.path.exists(meta_path):
+            path = self._qindex_path(p, snap)
+            if path is None:
                 continue
-            with open(meta_path) as f:
+            with open(os.path.join(path, "_quantizer.json")) as f:
                 meta = json.load(f)
             codes = self.spark.read.parquet(path)
             if meta["kind"] == "binary":
@@ -1697,26 +1706,22 @@ class Collection:
                 )
         return out
 
-    def _graph_indexes(self) -> dict[str, dict]:
-        """Persisted Vamana graph artifacts for the current snapshot —
-        handles only (lazy parquet frames + routing metadata), consumed by
-        the compiler's filtered vectorVamana seeded-beam route
-        (search.go:28-51 parity)."""
+    def _graph_indexes(self, snap: dict | None = None) -> dict[str, dict]:
+        """Persisted Vamana graph artifacts live in ``snap`` — handles only
+        (lazy parquet frames + routing metadata), consumed by the
+        compiler's filtered vectorVamana seeded-beam route (search.go:28-51
+        parity)."""
         import numpy as np
 
+        snap = self._snapshot() if snap is None else snap
         out: dict[str, dict] = {}
-        v = self._current_version()
         for p, val in self.schema.items():
             if val.type != "vectorVamana":
                 continue
-            path = os.path.join(
-                self.path, f"v{v}_idx", f"vamana_{p.replace('.', '_')}"
-            )
-            meta_file = os.path.join(path, "_graph.json")
-            if not os.path.exists(meta_file):
+            try:
+                path, meta = self._vamana_artifact(p, snap)
+            except ValueError:
                 continue
-            with open(meta_file) as f:
-                meta = json.load(f)
             out[p] = {
                 "shard_nodes": self.spark.read.parquet(
                     os.path.join(path, "shard_nodes")
@@ -1736,14 +1741,17 @@ class Collection:
                 out[p]["quantizer_fp"] = meta.get("quantizer_fp")
         return out
 
-    def _text_indexes(self) -> tuple[dict[str, DataFrame], dict[str, int]]:
+    def _text_indexes(
+        self, snap: dict | None = None
+    ) -> tuple[dict[str, DataFrame], dict[str, int]]:
+        snap = self._snapshot() if snap is None else snap
         idxs: dict[str, DataFrame] = {}
         stats: dict[str, int] = {}
         for p, v in self.schema.items():
             if v.type != "text":
                 continue
-            path = self._index_path(p)
-            if os.path.exists(os.path.join(path, "_SUCCESS")):
+            path = self._index_path(p, snap)
+            if path is not None:
                 idxs[p] = self.spark.read.schema(_POSTINGS_SCHEMA).parquet(path)
                 with open(os.path.join(path, "_num_docs.json")) as f:
                     stats[p] = json.load(f)["num_docs"]
@@ -1754,11 +1762,11 @@ class Collection:
         """Version-keyed serving-engine cache — the analogue of the
         reference's shard decode cache (shard/cache/manager.go:39-303: a
         decoded shard is opened once and reused across requests until a
-        write invalidates it). Opening an engine lists every index dir and
-        re-derives every serving plan; serving hundreds of requests must
-        not pay that per call. DML bumps the snapshot version (natural key
-        rotation); index builds write into the current version's idx dirs,
-        so they invalidate explicitly via :meth:`_invalidate_engine`."""
+        write invalidates it). Opening an engine resolves the data and every
+        index artifact from ONE manifest and re-derives every serving plan;
+        serving hundreds of requests must not pay that per call. Every
+        commit — DML, build or refresh — bumps the version, so the key
+        rotates by itself."""
         from .plans.compiler import SearchEngine
 
         if self.spark is None:
@@ -1767,34 +1775,27 @@ class Collection:
                 "(search/DML/index builds) unavailable; use search_local / "
                 "the point-read tiers"
             )
-        v = self._current_version()
+        snap = self._snapshot()
         cached = getattr(self, "_engine_cache", None)
-        if cached is not None and cached[0] == v:
+        if cached is not None and cached[0] == snap["version"]:
             return cached[1]
         if cached is not None:
             # natural rotation (DML bumped the version): release the old
             # engine's persisted frames before building the replacement
             cached[1].close()
         schema_dict = {p: {"type": vv.type, vv.type: vv.params} for p, vv in self.schema.items()}
-        idxs, stats = self._text_indexes()
+        idxs, stats = self._text_indexes(snap)
         eng = SearchEngine(
-            self.df(),
+            self._read_buckets(snap=snap),
             schema_dict,
             text_indexes=idxs,
             text_index_stats=stats,
-            vector_indexes=self._vector_indexes(),
-            quantized_indexes=self._quantized_indexes(),
-            graph_indexes=self._graph_indexes(),
+            vector_indexes=self._vector_indexes(snap),
+            quantized_indexes=self._quantized_indexes(snap),
+            graph_indexes=self._graph_indexes(snap),
         )
-        self._engine_cache = (v, eng)
+        self._engine_cache = (snap["version"], eng)
         return eng
-
-    def _invalidate_engine(self) -> None:
-        cached = getattr(self, "_engine_cache", None)
-        if cached is not None:
-            cached[1].close()
-        self._engine_cache = None
-        self._local_engine_cache = None
 
     def search(self, request: dict, route: str = "spark"):
         """Run a JSON query-tree search request against the collection
@@ -1857,7 +1858,7 @@ class Collection:
             self._local_engine_cache = (
                 key,
                 LocalSearchEngine(self, vector_mode,
-                                  graph_nprobe=graph_nprobe),
+                                  graph_nprobe=graph_nprobe, version=key[0]),
             )
         return self._local_engine_cache[1].search(request)
 
@@ -1872,9 +1873,11 @@ class Collection:
         of :meth:`search_local` over its own resident snapshot state —
         the reference's concurrent-search deployment for the composed
         query tree (shard/shard.go:329-472). Workers open the collection
-        filesystem-only (no JVM) and pin the snapshot at spawn; rotate
-        the pool after DML. Results identical to :meth:`search_local`
-        (parity-tested). Use as a context manager.
+        filesystem-only (no JVM) and every one of them serves the snapshot
+        that was current when the pool opened, whenever it starts; reopen
+        the pool to serve a later commit (DML, build or refresh). Results
+        identical to :meth:`search_local` at that snapshot (parity-tested).
+        Use as a context manager.
 
         ``preload=True`` decodes every graph artifact ONCE in the parent
         into POSIX shared memory; workers attach zero-copy views — steady

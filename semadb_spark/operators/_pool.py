@@ -9,96 +9,66 @@ one-goroutine-per-request serving over shared shard state
 (shard/shard.go:329-472). Each pool keeps only its validation, its worker
 init/serve functions and its public signatures; executor construction, the
 start-method policy, dispatch, batching and shutdown live here so the pools
-cannot drift. So do the listing fingerprint and its cache, which both
-driver-local tiers key their handle caches on.
+cannot drift. So does the bounded per-path cache that both driver-local
+tiers keep their open handles and decoded state in: an artifact path is
+immutable, so the path alone is the cache key.
 """
 
 from __future__ import annotations
 
 import threading
-import time
+from collections import OrderedDict
 
-_FP_LOCK = threading.Lock()
-_FP_REFRESHING: set[str] = set()
-
-
-def artifact_fingerprint(path: str) -> int:
-    """Digest of an artifact's file listing (relative name, size, mtime_ns
-    per file). Every driver-local cache keys on (path, fingerprint): ANY
-    mutation — an in-process write.mode("overwrite") rebuild, a file
-    added or replaced inside one partition directory, or a rewrite landing
-    within the filesystem's mtime granularity for _SUCCESS — changes the
-    digest, so the next point-read re-opens the new files instead of
-    serving stale state off pinned handles or decoded shards."""
-    import os
-    import zlib
-
-    h = 0
-    try:
-        for root, dirs, files in os.walk(path):
-            dirs.sort()
-            for fn in sorted(files):
-                try:
-                    st = os.stat(os.path.join(root, fn))
-                except OSError:
-                    continue
-                rel = os.path.relpath(os.path.join(root, fn), path)
-                h = zlib.crc32(
-                    f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode(), h
-                )
-    except OSError:
-        return 0
-    return h
+MAX_CACHED_ARTIFACTS = 4
+"""Artifact paths each driver-local serve cache holds at once. Every build,
+refresh and DML snapshot names a new path, so a long-lived server would
+otherwise keep one entry per artifact generation it ever served."""
 
 
-def cached_fingerprint(cache: dict, path: str, ttl: float,
-                       walk=artifact_fingerprint) -> int:
-    """Stale-while-revalidate artifact fingerprint. ``cache`` maps
-    ``path -> (monotonic time, fingerprint)`` and ``walk(path)`` computes a
-    fresh one (a listing walk, ~5 ms on a 64-bucket text index, ~100 ms on a
-    3000-file packed vector artifact).
+class ArtifactLru:
+    """``path -> value`` for at most ``size`` artifact paths, the least
+    recently used dropped first and handed to ``close``. Paths are
+    immutable (an artifact directory is never rewritten once a snapshot
+    names it), so a hit never needs re-validating. Safe to share across
+    threads."""
 
-    The first call for a path walks synchronously. Within ``ttl`` the
-    cached value is returned as is; once it lapses the caller still gets the
-    last value at once and one daemon thread re-walks the listing, so the
-    walk never lands in a busy path's latency (at a 1 s TTL it was the p99
-    tail). The check-and-start runs under a lock, so concurrent callers on a
-    lapsed entry start exactly one refresh; a thread that fails to start
-    leaves the path free for the next caller to retry.
+    def __init__(self, close=None, size: int = MAX_CACHED_ARTIFACTS):
+        self._items: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+        self._close = close
+        self.size = int(size)
 
-    An entry older than ``10 * ttl`` is not served stale: the caller walks
-    synchronously. So after an idle gap the first read sees the current
-    artifact, and no answer is older than ``10 * ttl`` plus one walk
-    whatever the traffic."""
-    hit = cache.get(path)
-    age = None if hit is None else time.monotonic() - hit[0]
-    if age is None or age >= 10.0 * ttl:
-        fp = walk(path)
-        cache[path] = (time.monotonic(), fp)
-        return fp
-    if age < ttl:
-        return hit[1]
-    with _FP_LOCK:
-        if path in _FP_REFRESHING:
-            return hit[1]
-        _FP_REFRESHING.add(path)
+    def __getitem__(self, path):
+        with self._lock:
+            self._items.move_to_end(path)  # KeyError when absent
+            return self._items[path]
 
-    def _refresh() -> None:
+    def get(self, path, default=None):
         try:
-            cache[path] = (time.monotonic(), walk(path))
-        finally:
-            with _FP_LOCK:
-                _FP_REFRESHING.discard(path)
+            return self[path]
+        except KeyError:
+            return default
 
-    try:
-        threading.Thread(
-            target=_refresh, daemon=True, name=f"fp-refresh:{path}"
-        ).start()
-    except BaseException:
-        with _FP_LOCK:
-            _FP_REFRESHING.discard(path)
-        raise
-    return hit[1]
+    def __setitem__(self, path, value) -> None:
+        with self._lock:
+            self._items[path] = value
+            self._items.move_to_end(path)
+            dropped = []
+            while len(self._items) > self.size:
+                dropped.append(self._items.popitem(last=False)[1])
+        if self._close is not None:
+            for value in dropped:
+                self._close(value)
+
+    def pop(self, path, default=None):
+        with self._lock:
+            return self._items.pop(path, default)
+
+    def __contains__(self, path) -> bool:
+        return path in self._items
+
+    def __len__(self) -> int:
+        return len(self._items)
 
 
 def choose_start_method() -> str:

@@ -31,11 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from semadb_spark.functions.analyzer import analyze_query, tokenize
-from semadb_spark.operators._pool import (
-    ServePool,
-    artifact_fingerprint,
-    cached_fingerprint,
-)
+from semadb_spark.operators._pool import ArtifactLru, ServePool
 
 # Partition count for the persisted index's term-hash layout: queries prune
 # to <= |query terms| directories out of TERM_BUCKETS (Collection
@@ -288,18 +284,23 @@ def text_serve(
     )
 
 
-_LOCAL_DATASET_CACHE: dict[str, tuple[int, object]] = {}
-# per-thread {path: (fingerprint, row-group index)}; a thread's handle sets
-# close when the thread exits
+# path -> pyarrow dataset, shared by every thread
+_LOCAL_DATASET_CACHE = ArtifactLru()
+# per-thread ``by_path``: path -> row-group index; a thread's handle sets
+# close when the thread exits or when its cache drops their path
 _LOCAL_RG_INDEX_CACHE = threading.local()
-_FP_AT: dict[str, tuple[float, int]] = {}
-_FP_TTL_SEC = 1.0
 
 
-def _local_rowgroup_index(index_path: str, fp: int | None = None):
+def _close_rowgroup_index(idx) -> None:
+    for files in (idx or {}).values():
+        for pf, _stats in files:
+            pf.close()
+
+
+def _local_rowgroup_index(index_path: str):
     """bucket -> [(ParquetFile, [(term_min, term_max) per row group])] for
     a term-bucket partitioned posting artifact, built once per (path,
-    fingerprint, THREAD) from parquet footers only (no data pages read).
+    THREAD) from parquet footers only (no data pages read).
     Row groups whose term statistics are absent get (None, None) and are
     treated as MUST-READ by the caller (a mixed-stats artifact — e.g. one
     file from a different writer — must not silently drop those groups'
@@ -313,17 +314,17 @@ def _local_rowgroup_index(index_path: str, fp: int | None = None):
     handle set per client thread — each thread an independent engine
     handle on the immutable artifact, exactly like the process pool. The
     sets live in thread-local storage, so a thread's handles close when
-    the thread exits, and a new fingerprint replaces the path's entry.
-    Cost: one footer-only re-open per (thread, file); the decoded data
-    pages are never cached here."""
-    if fp is None:
-        fp = artifact_fingerprint(index_path)
+    the thread exits; each thread keeps the sets of its
+    ``MAX_CACHED_ARTIFACTS`` most recently served paths and closes the
+    handles of a path it drops. Cost: one footer-only re-open per (thread,
+    file); the decoded data pages are never cached here."""
     by_path = getattr(_LOCAL_RG_INDEX_CACHE, "by_path", None)
     if by_path is None:
-        by_path = _LOCAL_RG_INDEX_CACHE.by_path = {}
-    hit = by_path.get(index_path)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
+        by_path = _LOCAL_RG_INDEX_CACHE.by_path = ArtifactLru(
+            close=_close_rowgroup_index
+        )
+    if index_path in by_path:
+        return by_path[index_path]
     import glob
     import os
     import re
@@ -355,7 +356,7 @@ def _local_rowgroup_index(index_path: str, fp: int | None = None):
                     stats.append((None, None))
             idx.setdefault(b, []).append((pf, stats))
     result = idx if usable else None
-    by_path[index_path] = (fp, result)
+    by_path[index_path] = result
     return result
 
 
@@ -367,7 +368,6 @@ def text_serve_local(
     weight: float = 1.0,
     num_docs: int | None = None,
     candidate_ids=None,
-    fp_ttl_sec: float | None = None,
 ):
     """Driver-local single-query serving: score one bounded text query
     straight off the persisted posting artifact with pyarrow — NO Spark
@@ -399,6 +399,11 @@ def text_serve_local(
     Returns a pandas DataFrame (id, _score, _hybridScore) — deliberately
     not a Spark frame; wrapping it back would re-pay the py4j cost this
     path removes.
+
+    Contract: ``index_path`` is immutable. The open dataset and row-group
+    handles are cached by path alone, so an artifact rewritten in place is
+    not re-read; a rebuild must land at a new path, as every
+    :class:`~semadb_spark.collection.Collection` build and refresh does.
     """
     import math
 
@@ -419,20 +424,10 @@ def text_serve_local(
 
     from semadb_spark.functions.hashing import md5_hash64_py
 
-    # TTL-cached: a rebuild is picked up within ~ttl on a busy path and
-    # within 10x ttl after an idle gap, far inside any artifact-rotation
-    # window, while the listing walk (paid by both the dataset and the
-    # row-group caches) amortizes across point-reads
-    fp = cached_fingerprint(
-        _FP_AT, index_path,
-        _FP_TTL_SEC if fp_ttl_sec is None else fp_ttl_sec,
-    )
-    hit = _LOCAL_DATASET_CACHE.get(index_path)
-    if hit is not None and hit[0] == fp:
-        dset = hit[1]
-    else:
+    dset = _LOCAL_DATASET_CACHE.get(index_path)
+    if dset is None:
         dset = pads.dataset(index_path, partitioning="hive")
-        _LOCAL_DATASET_CACHE[index_path] = (fp, dset)
+        _LOCAL_DATASET_CACHE[index_path] = dset
     bucketed = "term_bucket" in dset.schema.names
     tbl = None
     if bucketed:
@@ -445,7 +440,7 @@ def text_serve_local(
         # via the dataset path vs ~20 ms via direct row-group reads).
         # Falls back to the dataset scan if stats are missing (unsorted
         # legacy artifact).
-        idx = _local_rowgroup_index(index_path, fp=fp)
+        idx = _local_rowgroup_index(index_path)
         if idx is not None:
             import pyarrow as pa
 
@@ -696,10 +691,6 @@ def _pool_serve(requests: list[tuple[str, str, int, float]]):
         text_serve_local(
             _POOL_INDEX_PATH, query, operator, limit=limit, weight=weight,
             num_docs=_POOL_NUM_DOCS,
-            # pool contract: artifact immutable while open — amortize the
-            # mutation-detecting listing walk over minutes (same trade as
-            # VectorServePool's workers)
-            fp_ttl_sec=300.0,
         )
         for query, operator, limit, weight in requests
     ]
@@ -725,11 +716,11 @@ class TextServePool(ServePool):
     the pool runs the :class:`~semadb_spark.operators._pool.ServePool`
     core with one shared executor.
 
-    Contract: the artifact must be immutable while the pool is open.
-    Mutations are still DETECTED (each worker's caches key on the artifact
-    fingerprint, so a rebuilt index is re-opened, not served stale), but
-    the pool gives no ordering guarantee for queries in flight across a
-    swap — rotate pools on reindex like Collection rotates snapshots.
+    Contract: ``index_path`` is immutable. Each worker caches its handles
+    by path alone, so an artifact rewritten in place is not re-read. A
+    collection never rewrites one: every build and refresh lands at a new
+    path named by a new snapshot, so reopen the pool (with the new path)
+    to serve a rebuilt index.
 
     Results are byte-identical to :func:`text_serve_local`
     (parity-tested), which is itself pinned to the SQL path

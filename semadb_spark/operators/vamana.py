@@ -32,11 +32,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from semadb_spark.operators._pool import (
-    ServePool,
-    artifact_fingerprint,
-    cached_fingerprint,
-)
+from semadb_spark.operators._pool import ArtifactLru, ServePool
 
 __all__ = [
     "VamanaIndex",
@@ -2232,9 +2228,8 @@ def vamana_serve_packed(
 
 # -- driver-local point-read serving (no Spark job) -------------------------
 
-_LOCAL_PACKED_CACHE: dict[str, tuple[tuple, dict]] = {}
-_LOCAL_PACKED_FP_AT: dict[str, tuple[float, int]] = {}
-_FP_TTL_SEC = 1.0
+# path -> (compute dtype, {cent: decoded shards}); paths are immutable
+_LOCAL_PACKED_CACHE = ArtifactLru()
 
 
 MAX_CACHED_CENTS = 256
@@ -2245,34 +2240,24 @@ decoded; below it, spawn-time preload under-fills (ADVICE r12)."""
 
 
 def _local_decoded_cents(path: str, cents_needed: list[int], np_dtype,
-                         c_dtype, max_cached_cents: int = MAX_CACHED_CENTS,
-                         fp_ttl_sec: float | None = None) -> dict[int, list]:
+                         c_dtype, max_cached_cents: int = MAX_CACHED_CENTS
+                         ) -> dict[int, list]:
     """Decode (and cache) the packed shard blobs of the requested cent
     partitions via pyarrow — no Spark session involved. Vectors are cast
     to the COMPUTE dtype at decode time (per-query float16->float32 casts
-    cost ~ms each otherwise). Cache keys on the artifact fingerprint;
-    FIFO-evicts whole cent entries past ``max_cached_cents`` (a hot
-    serving node keeps its working set decoded, exactly like the
-    reference's shard decode cache, cache/manager.go:39-303)."""
+    cost ~ms each otherwise). The cache keys on the artifact path, which
+    is immutable, and holds the ``MAX_CACHED_ARTIFACTS`` most recently
+    served paths; within a path it FIFO-evicts whole cent entries past
+    ``max_cached_cents`` (a hot serving node keeps its working set
+    decoded, exactly like the reference's shard decode cache,
+    cache/manager.go:39-303)."""
     import pyarrow.dataset as pads
 
-    # fingerprint with a short TTL: the listing walk costs ~100 ms on a
-    # 3000-file 10M artifact — paying it per POINT-READ was 73% of the
-    # query latency (r9 profile). A rebuild is still picked up within
-    # the TTL on a busy path and within 10x the TTL after an idle gap,
-    # far inside any artifact-rotation window. Callers holding the
-    # immutable-artifact contract (VectorServePool workers) pass a LONG
-    # fp_ttl_sec: at the 1 s default a pool worker re-walked the listing
-    # every ~55 queries — measured ~10% of mp16 throughput.
-    fp = cached_fingerprint(
-        _LOCAL_PACKED_FP_AT, path,
-        _FP_TTL_SEC if fp_ttl_sec is None else fp_ttl_sec,
-    )
-    key = (fp, str(c_dtype))
     hit = _LOCAL_PACKED_CACHE.get(path)
-    if hit is None or hit[0] != key:
-        _LOCAL_PACKED_CACHE[path] = (key, {})
-    cache = _LOCAL_PACKED_CACHE[path][1]
+    if hit is None or hit[0] != str(c_dtype):
+        hit = (str(c_dtype), {})
+        _LOCAL_PACKED_CACHE[path] = hit
+    cache = hit[1]
     missing = [c for c in cents_needed if c not in cache]
     if missing:
         dset = pads.dataset(path, partitioning="hive")
@@ -2344,7 +2329,6 @@ def _local_decoded_cents(path: str, cents_needed: list[int], np_dtype,
 
 def preload_packed_local(path: str, *, dtype: str = "float32",
                          compute_dtype: str = "float32",
-                         fp_ttl_sec: float | None = None,
                          max_cents: int | None = None) -> int:
     """Eagerly decode a packed artifact's cent partitions into the local
     serve cache (:func:`_local_decoded_cents`) — returns how many cents
@@ -2381,8 +2365,7 @@ def preload_packed_local(path: str, *, dtype: str = "float32",
     cap = MAX_CACHED_CENTS if max_cents is None else int(max_cents)
     cents = cents[:cap]
     got = _local_decoded_cents(
-        path, cents, np.dtype(dtype), np.dtype(compute_dtype),
-        fp_ttl_sec=fp_ttl_sec,
+        path, cents, np.dtype(dtype), np.dtype(compute_dtype)
     )
     return sum(1 for c in cents if got.get(c))
 
@@ -2409,7 +2392,6 @@ def _shm_align(off: int, align: int = 64) -> int:
 
 def export_packed_shared(path: str, *, dtype: str = "float32",
                          compute_dtype: str = "float32",
-                         fp_ttl_sec: float | None = None,
                          max_cents: int | None = None):
     """Decode a packed artifact ONCE into a POSIX shared-memory segment and
     return ``(shm_name, manifest)`` for pool workers to attach zero-copy
@@ -2446,10 +2428,7 @@ def export_packed_shared(path: str, *, dtype: str = "float32",
     cap = MAX_CACHED_CENTS if max_cents is None else int(max_cents)
     if len(cents) > cap:
         return None  # oversized artifacts stay lazy by construction
-    decoded = _local_decoded_cents(
-        path, cents, np_dtype, c_dtype, fp_ttl_sec=fp_ttl_sec
-    )
-    fp = _LOCAL_PACKED_FP_AT[path][1]
+    decoded = _local_decoded_cents(path, cents, np_dtype, c_dtype)
 
     # pass 1: layout. ids become fixed-width '<U' arrays (UTF-32) so they
     # share too; empty shards record width 0 and attach as empty arrays.
@@ -2494,7 +2473,6 @@ def export_packed_shared(path: str, *, dtype: str = "float32",
         np.ndarray(shape, dtype=np.dtype(dt), buffer=shm.buf,
                    offset=off)[...] = arr
     manifest = {
-        "fp": fp,
         "c_dtype": str(c_dtype),
         "cents": layout,
     }
@@ -2562,11 +2540,7 @@ def attach_packed_shared(path: str, shm_name: str, manifest: dict) -> int:
                 _view(a["id_order"]), code_state,
             ))
         cache[int(cent)] = shards
-    key = (manifest["fp"], manifest["c_dtype"])
-    _LOCAL_PACKED_CACHE[path] = (key, cache)
-    import time as _time
-
-    _LOCAL_PACKED_FP_AT[path] = (_time.monotonic(), manifest["fp"])
+    _LOCAL_PACKED_CACHE[path] = (manifest["c_dtype"], cache)
     return len(cache)
 
 
@@ -2598,7 +2572,6 @@ def vamana_serve_local(
     dtype: str = "float32",
     compute_dtype: str = "float32",
     n_seeds: int = 0,
-    fp_ttl_sec: float | None = None,
     thresholds: np.ndarray | None = None,
     books=None,
     beam_on: str = "auto",
@@ -2614,7 +2587,8 @@ def vamana_serve_local(
     ``nprobe`` routed cent partitions — with the artifact written
     ``partitionBy("cent")`` that is a handful of directories — so a
     serving node reads those blobs directly, decodes once into a
-    fingerprint-keyed cache, and beams in NumPy. Scores/ordering are
+    path-keyed cache, and beams in NumPy (``packed_path`` is immutable: an
+    artifact rewritten in place is not re-read). Scores/ordering are
     pinned identical to :func:`vamana_serve_packed` (same kernel, same
     rounded-distance merge; parity-tested).
 
@@ -2655,9 +2629,7 @@ def vamana_serve_local(
         + (cents * cents).sum(axis=1)
     )
     routed = [int(c) for c in np.argsort(d, kind="stable")[: max(1, nprobe)]]
-    shards = _local_decoded_cents(
-        packed_path, routed, np_dtype, c_dtype, fp_ttl_sec=fp_ttl_sec
-    )
+    shards = _local_decoded_cents(packed_path, routed, np_dtype, c_dtype)
     Qc = q[None, :].astype(c_dtype)
     # per-query beam tables (global facts, cheap at nq=1)
     q_lut = None
@@ -2825,12 +2797,10 @@ _VPOOL_KW: dict | None = None
 
 def _vpool_init(packed_path: str, kw: dict) -> None:
     """Worker-process initializer: pin the artifact coordinates + serve
-    params and pre-warm the listing fingerprint so the first real query
-    pays no directory-walk latency."""
+    params."""
     global _VPOOL_PATH, _VPOOL_KW
     _VPOOL_PATH = packed_path
     _VPOOL_KW = kw
-    artifact_fingerprint(packed_path)
 
 
 def _vpool_serve(requests: list[tuple[list, int]]):
@@ -2870,12 +2840,12 @@ class VectorServePool(ServePool):
     single-process executor per worker, a batch shipped as one task per
     owner.
 
-    Contract: the artifact must be immutable while the pool is open —
-    mutations are still DETECTED per worker (the decoded cache keys on the
-    artifact fingerprint), but rotate pools on reindex like Collection
-    rotates snapshots. Results are identical to :func:`vamana_serve_local`
-    (same function, parity-tested), which is itself pinned to
-    :func:`vamana_serve_packed`.
+    Contract: ``packed_path`` is immutable. Each worker's decoded cache
+    keys on the path alone, so an artifact rewritten in place is not
+    re-read; a collection's builds and refreshes land at new paths, so
+    reopen the pool on reindex. Results are identical to
+    :func:`vamana_serve_local` (same function, parity-tested), which is
+    itself pinned to :func:`vamana_serve_packed`.
 
     Usage::
 
@@ -2911,11 +2881,6 @@ class VectorServePool(ServePool):
             thresholds=None if thresholds is None else np.asarray(thresholds),
             books=books,
             beam_on=beam_on,
-            # pool contract: the artifact is immutable while open, so the
-            # mutation-detecting listing walk amortizes over minutes, not
-            # seconds (at the 1 s default a worker re-walks every ~55
-            # queries — measured ~10% of mp16 throughput)
-            fp_ttl_sec=300.0,
         )
         super().__init__(workers, _vpool_init, (packed_path, kw),
                          _vpool_serve, owner=lambda req: self._owner(req[0]))

@@ -156,11 +156,14 @@ def _dists(X: np.ndarray, n2: np.ndarray, q: np.ndarray, metric: str) -> np.ndar
 
 class LocalSearchEngine:
     """Compiles SemaDB search requests against one Collection snapshot,
-    entirely driver-local. Version-pinned: build one per snapshot (the
-    Collection caches it exactly like its Spark engine cache)."""
+    entirely driver-local. Version-pinned: the data files and every index
+    artifact resolve from ONE manifest (``version``, default the current
+    one), so a commit during the open cannot mix versions. Build one per
+    snapshot (the Collection caches it exactly like its Spark engine
+    cache)."""
 
     def __init__(self, collection, vector_mode: str = "auto",
-                 graph_nprobe: int | None = None):
+                 graph_nprobe: int | None = None, version: int | None = None):
         if vector_mode not in ("auto", "graph"):
             raise ValueError(f"unknown vector_mode {vector_mode}")
         self.schema = collection.schema
@@ -174,14 +177,13 @@ class LocalSearchEngine:
         # point_read). None keeps the compiler formula. The ENGINE-parity
         # quantized-graph route ignores this (parity pins its params).
         self.graph_nprobe = None if graph_nprobe is None else int(graph_nprobe)
-        self.base = collection.path
         # pin the snapshot ONCE: manifest -> concrete parquet file list
         import glob
 
-        self.version = collection._current_version()
-        manifest = collection._manifest(self.version)
+        snap = collection._snapshot(version)
+        self.version = snap["version"]
         self.files: list[str] = []
-        for rel in manifest.values():
+        for rel in snap["buckets"].values():
             self.files.extend(
                 sorted(glob.glob(os.path.join(collection.path, rel, "*.parquet")))
             )
@@ -210,32 +212,29 @@ class LocalSearchEngine:
         self._graph_artifacts: set[str] = set()
         for p, v in self.schema.items():
             if v.type == "text":
-                path = collection._index_path(p, self.version)
-                nd = os.path.join(path, "_num_docs.json")
-                if os.path.exists(nd):
-                    with open(nd) as f:
+                path = collection._index_path(p, snap)
+                if path is not None:
+                    with open(os.path.join(path, "_num_docs.json")) as f:
                         self.text[p] = (path, int(json.load(f)["num_docs"]))
             if v.type in ("vectorFlat", "vectorVamana"):
-                # same existence checks the Spark engine uses to pick its
+                # same liveness checks the Spark engine uses to pick its
                 # route (collection._quantized_indexes/_vector_indexes):
                 # if the engine would serve codes or probe IVF, local exact
                 # results would silently differ — refuse instead
-                qmeta_path = os.path.join(
-                    collection._qindex_path(p), "_quantizer.json"
-                )
-                if os.path.exists(qmeta_path):
-                    with open(qmeta_path) as f:
+                qpath = collection._qindex_path(p, snap)
+                vpath = collection._vindex_path(p, snap)
+                if qpath is not None:
+                    with open(os.path.join(qpath, "_quantizer.json")) as f:
                         qm = json.load(f)
-                    # a CURRENT-version IVF artifact whose schema carries
-                    # the matching code column flips the ENGINE to the
+                    # a live IVF artifact whose schema carries the
+                    # matching code column flips the ENGINE to the
                     # fused oversample+rerank kernel (compiler
                     # fused_quantized) — that route stays engine-only;
                     # otherwise the engine's route is the flat code scan
                     # (quantized_topk), which serves locally from the
                     # resident codes (r12, same design as _ivf_topk)
                     fused = False
-                    vpath = collection._vindex_path(p)
-                    if os.path.exists(os.path.join(vpath, "_centroids.json")):
+                    if vpath is not None:
                         import pyarrow.dataset as pads
 
                         names = pads.dataset(
@@ -249,43 +248,30 @@ class LocalSearchEngine:
                             f"fused IVF-{qm['kind']} route"
                         )
                     else:
-                        self.qscan[p] = {
-                            "path": collection._qindex_path(p),
-                            "meta": qm,
-                        }
-                elif os.path.exists(
-                    os.path.join(collection._vindex_path(p), "_centroids.json")
-                ):
+                        self.qscan[p] = {"path": qpath, "meta": qm}
+                elif vpath is not None:
                     # ENGINE route = ivf_search over the persisted artifact
                     # (compiler.py float-ANN branch). Served locally with
                     # the SAME probe math + exact rerank (_ivf_topk); the
                     # artifact rows load lazily on first vector query.
-                    with open(os.path.join(
-                        collection._vindex_path(p), "_centroids.json"
-                    )) as f:
+                    with open(os.path.join(vpath, "_centroids.json")) as f:
                         self.ivf[p] = {
-                            "path": collection._vindex_path(p),
+                            "path": vpath,
                             "centroids": np.asarray(
                                 json.load(f), dtype=np.float64
                             ),
                         }
             if v.type == "vectorVamana":
-                idx = os.path.join(
-                    self.base, f"v{self.version}_idx",
-                    f"vamana_{p.replace('.', '_')}",
-                )
-                meta_file = os.path.join(idx, "_graph.json")
+                try:
+                    idx, meta = collection._vamana_artifact(p, snap)
+                except ValueError:
+                    continue
+                # the ENGINE's graph_indexes key off _graph.json alone
+                # (packed optional) — its filtered-ANN routing does too, so
+                # the IVF route's refusal check must as well
+                self._graph_artifacts.add(p)
                 packed = os.path.join(idx, "packed")
-                if os.path.exists(meta_file):
-                    # the ENGINE's graph_indexes key off _graph.json alone
-                    # (packed optional) — its filtered-ANN routing does
-                    # too, so the IVF route's refusal check must as well
-                    self._graph_artifacts.add(p)
-                if os.path.exists(meta_file) and os.path.exists(
-                    os.path.join(packed, "_SUCCESS")
-                ):
-                    with open(meta_file) as f:
-                        meta = json.load(f)
+                if os.path.exists(os.path.join(packed, "_SUCCESS")):
                     self.graph[p] = {
                         "packed": packed,
                         "centroids": np.asarray(
@@ -312,15 +298,13 @@ class LocalSearchEngine:
                         q_ok = (
                             meta["metric"] in ("euclidean", "cosine", "dot")
                             and v.quantizer is not None
-                            and os.path.exists(os.path.join(
-                                collection._qindex_path(p), "_quantizer.json"
-                            ))
+                            and qpath is not None
                         )
                         if q_ok:
                             try:
                                 thr, books = (
                                     collection._resolve_packed_quantizer(
-                                        p, meta
+                                        p, meta, snap
                                     )
                                 )
                             except ValueError as e:
@@ -479,7 +463,7 @@ class LocalSearchEngine:
 
     def preload_graph_artifacts(self) -> int:
         """Eagerly decode every graph-served packed artifact into the
-        local serve cache (same dtypes/TTL the serve path uses) — returns
+        local serve cache (same dtypes the serve path uses) — returns
         the number of cent partitions made resident. A fresh serving
         process otherwise RAMPS to steady state while queries lazily
         fault + decode cents (measured 40 -> 93 QPS over five rounds on
@@ -493,8 +477,7 @@ class LocalSearchEngine:
         total = 0
         for g in self.graph.values():
             total += preload_packed_local(
-                g["packed"], dtype=g["pack_dtype"],
-                compute_dtype="float32", fp_ttl_sec=3600.0,
+                g["packed"], dtype=g["pack_dtype"], compute_dtype="float32"
             )
         return total
 
@@ -928,12 +911,6 @@ class LocalSearchEngine:
                 n_seeds=32,
                 thresholds=graph["thresholds"],
                 books=graph["books"],
-                # this engine instance is snapshot-pinned (the Collection
-                # rebuilds it on version change), so the packed artifact
-                # is immutable for its lifetime — skip the per-second
-                # fingerprint listing walk (the VectorServePool lesson:
-                # re-walking cost ~10% of pool throughput)
-                fp_ttl_sec=3600.0,
             )
             topk = pd.DataFrame(
                 {
@@ -1189,13 +1166,16 @@ class LocalSearchEngine:
 _HPOOL_ENGINE: "LocalSearchEngine | None" = None
 
 
-def _hpool_init(collection_path: str, vector_mode: str, warm_requests,
-                graph_nprobe=None, preload: bool = False,
+def _hpool_init(collection_path: str, version: int, vector_mode: str,
+                warm_requests, graph_nprobe=None, preload: bool = False,
                 shared_graphs=None) -> None:
     """Worker initializer: open the collection WITHOUT a SparkSession
-    (Collection.open_local), build this worker's LocalSearchEngine, and
-    optionally pre-run warm requests so the resident caches (columns,
-    vector matrix, posting row-group index) are hot before real traffic.
+    (Collection.open_local), build this worker's LocalSearchEngine at the
+    pool's ``version`` (resolved once by the parent: workers start on
+    demand, and each must serve the snapshot the pool opened on, not the
+    one current at its first task), and optionally pre-run warm requests
+    so the resident caches (columns, vector matrix, posting row-group
+    index) are hot before real traffic.
     ``shared_graphs`` (list of ``(artifact_path, shm_name, manifest)``)
     attaches this worker's packed-graph serve cache to the pool parent's
     ONE shared-memory decode — zero-copy, no per-worker ramp, no per-worker
@@ -1215,7 +1195,8 @@ def _hpool_init(collection_path: str, vector_mode: str, warm_requests,
             pass  # optimization, never a brick: worker falls back to lazy
     coll = Collection.open_local(collection_path)
     _HPOOL_ENGINE = LocalSearchEngine(coll, vector_mode=vector_mode,
-                                      graph_nprobe=graph_nprobe)
+                                      graph_nprobe=graph_nprobe,
+                                      version=version)
     if preload:
         try:
             _HPOOL_ENGINE.preload_graph_artifacts()
@@ -1252,9 +1233,11 @@ class HybridServePool(ServePool):
     way); size workers to snapshot-bytes x workers. With no per-partition
     cache affinity to exploit, the pool runs the
     :class:`~semadb_spark.operators._pool.ServePool` core with one shared
-    executor, so the shortest queue wins. Workers pin the snapshot version
-    at spawn: rotate the pool after DML, like the other pools rotate on
-    artifact rebuilds. Results are identical to search_local (same engine
+    executor, so the shortest queue wins. The pool resolves the current
+    snapshot version once, at open, and every worker serves exactly that
+    snapshot whenever it starts: reopen the pool to serve a later commit
+    (DML, build or refresh), like the other pools reopen on a new artifact.
+    Results are identical to search_local at that snapshot (same engine
     class; parity-tested).
 
     Usage::
@@ -1274,6 +1257,10 @@ class HybridServePool(ServePool):
         # checked before the shm export, which a bad value would leak
         if int(workers) < 1:
             raise ValueError("HybridServePool requires workers >= 1")
+        from semadb_spark.collection import Collection
+
+        coll = Collection.open_local(collection_path)
+        self.version = coll._current_version()
         # preload=True: the PARENT decodes each packed graph artifact once
         # into POSIX shared memory and every worker attaches zero-copy
         # views — one resident artifact copy for the whole pool, the
@@ -1285,38 +1272,35 @@ class HybridServePool(ServePool):
         if preload:
             try:
                 shared_graphs = self._export_shared_graphs(
-                    collection_path, vector_mode, graph_nprobe
+                    LocalSearchEngine(coll, vector_mode=vector_mode,
+                                      graph_nprobe=graph_nprobe,
+                                      version=self.version)
                 )
                 self._shm_names = [s[1] for s in shared_graphs]
             except Exception:
                 shared_graphs = []
         super().__init__(
             workers, _hpool_init,
-            (collection_path, vector_mode, list(warm_requests or []),
-             graph_nprobe, bool(preload) and not shared_graphs,
-             shared_graphs),
+            (collection_path, self.version, vector_mode,
+             list(warm_requests or []), graph_nprobe,
+             bool(preload) and not shared_graphs, shared_graphs),
             _hpool_serve,
         )
 
     @staticmethod
-    def _export_shared_graphs(collection_path: str, vector_mode: str,
-                              graph_nprobe):
-        """Parent-side: decode every graph-served packed artifact once into
-        shared memory; returns ``[(artifact_path, shm_name, manifest)]``
-        for the worker initializer to attach. Artifacts wider than the
-        serve-cache capacity export as None and are skipped (workers keep
-        the lazy working-set behavior for those)."""
-        from semadb_spark.collection import Collection
+    def _export_shared_graphs(probe: "LocalSearchEngine"):
+        """Parent-side: decode every packed artifact ``probe`` (an engine
+        at the pool's version) serves from, once, into shared memory;
+        returns ``[(artifact_path, shm_name, manifest)]`` for the worker
+        initializer to attach. Artifacts wider than the serve-cache
+        capacity export as None and are skipped (workers keep the lazy
+        working-set behavior for those)."""
         from semadb_spark.operators.vamana import export_packed_shared
 
-        coll = Collection.open_local(collection_path)
-        probe = LocalSearchEngine(coll, vector_mode=vector_mode,
-                                  graph_nprobe=graph_nprobe)
         out = []
         for g in probe.graph.values():
             exp = export_packed_shared(
-                g["packed"], dtype=g["pack_dtype"],
-                compute_dtype="float32", fp_ttl_sec=3600.0,
+                g["packed"], dtype=g["pack_dtype"], compute_dtype="float32"
             )
             if exp is not None:
                 out.append((g["packed"], exp[0], exp[1]))

@@ -460,6 +460,43 @@ def test_vacuum_keeps_referenced_versions(spark, tmp_path):
     assert Collection.open(spark, str(tmp_path / "vac")).count() == 100
 
 
+def test_vacuum_keeps_only_artifacts_a_kept_snapshot_serves(spark, tmp_path):
+    """vacuum keeps an index artifact while a retained manifest serves it
+    (names it and it indexes that manifest's data) and drops it otherwise:
+    a refresh after its last-built artifact was vacuumed asks for a build.
+    A crashed build's directory, which no manifest names, goes too."""
+    import os
+
+    schema = {"text": {"type": "text", "text": {"analyser": "standard"}}}
+    coll = Collection.create(spark, str(tmp_path / "vacidx"), schema, num_buckets=2)
+
+    def add(i):
+        coll.insert(spark.createDataFrame([Row(_id=f"d{i}", text=f"spark doc{i}")]))
+
+    add(0)
+    coll.build_text_index("text")
+    first = coll._index_path("text")
+    add(1)  # the index stops serving; the previous snapshot still serves it
+    coll.vacuum(keep_versions=2)
+    assert os.path.exists(first)
+    assert coll.refresh_text_index("text") > 0
+    second = coll._index_path("text")
+    coll.vacuum(keep_versions=1)
+    assert not os.path.exists(first) and os.path.exists(second)
+    req = {"query": {"property": "text", "text": {
+        "operator": "containsAny", "value": "spark", "limit": 5}}}
+    assert sorted(coll.search_local(req)["_id"]) == ["d0", "d1"]
+
+    stray = coll._artifact_dir("text_text")  # a build that never committed
+    os.makedirs(stray)
+    add(2)
+    coll.vacuum(keep_versions=1)
+    assert not os.path.exists(second) and not os.path.exists(stray)
+    with pytest.raises(ValueError, match="build first"):
+        coll.refresh_text_index("text")
+    assert coll.count() == 3
+
+
 def test_refresh_vector_index_incremental(spark, tmp_path):
     # W4: after DML, refresh_vector_index rolls the IVF artifact forward
     # with frozen centroids, re-assigning ONLY rows in dirty buckets.
@@ -493,6 +530,38 @@ def test_refresh_vector_index_incremental(spark, tmp_path):
     # clean bucket's assignments before/after
     n2 = coll.refresh_vector_index("v")
     assert n2 == 0  # already current -> no work
+
+
+def test_refresh_vector_index_rotates_open_engines(spark, tmp_path):
+    """A refresh commits a new snapshot, so the engines a Collection opened
+    before it rotate: after a delete (the IVF artifact stops serving), one
+    search on each route, then a refresh, the SAME Collection serves the
+    IVF artifact on both routes again, as a fresh open does."""
+    import numpy as np
+
+    schema = {"v": {"type": "vectorVamana", "vectorVamana": {
+        "vectorSize": 8, "distanceMetric": "euclidean"}}}
+    coll = Collection.create(spark, str(tmp_path / "ivfrot"), schema, num_buckets=4)
+    X = np.random.RandomState(8).normal(size=(120, 8))
+    coll.insert(spark.createDataFrame(
+        [Row(_id=f"a{i:03d}", v=[float(x) for x in X[i]]) for i in range(120)]
+    ))
+    coll.build_vector_index("v", nlist=4)
+    coll.delete(["a003"])
+    req = {"query": {"property": "v", "vectorVamana": {
+        "vector": [float(x) for x in X[0]], "limit": 5}}, "limit": 5}
+    coll.search(req).collect()
+    coll.search_local(req)
+    assert coll._open_engine().vector_indexes == {}
+    assert coll._local_engine_cache[1].ivf == {}
+
+    assert coll.refresh_vector_index("v") > 0
+    assert coll.search(req).first()["_id"] == "a000"
+    assert coll.search_local(req)["_id"].iloc[0] == "a000"
+    assert set(coll._open_engine().vector_indexes) == {"v"}
+    assert set(coll._local_engine_cache[1].ivf) == {"v"}
+    fresh = Collection.open(spark, coll.path)
+    assert set(fresh._open_engine().vector_indexes) == {"v"}
 
 
 def test_refresh_vector_index_quantized_artifact(spark, tmp_path):
@@ -627,14 +696,9 @@ def test_build_vamana_index_pack_dtype_float16(spark, tmp_path):
     # roll-forward refresh keeps float16 packing
     coll.insert(spark.createDataFrame([Row(_id="new00", v=[4.0] * 8)]))
     assert coll.refresh_vamana_index("v") > 0
-    # locate the refreshed _graph.json (highest-numbered version dir)
-    vdirs = sorted(
-        (d for d in os.listdir(str(tmp_path / "vam16")) if d.endswith("_idx")),
-        key=lambda d: int(d[1:].split("_")[0]),
-    )
-    gpath = os.path.join(str(tmp_path / "vam16"), vdirs[-1], "vamana_v")
-    with open(os.path.join(gpath, "_graph.json")) as f:
-        meta2 = json.load(f)
+    # the refreshed artifact, as the current manifest names it
+    gpath, meta2 = coll._vamana_artifact("v")
+    assert gpath != path
     assert meta2["pack_dtype"] == "float16"
     got2 = coll.vamana_search("v", [("qn", [4.0] * 8)], k=3)
     assert "new00" in {r._id for r in got2.collect()}
@@ -691,9 +755,8 @@ def test_quantizer_autofit_trigger(spark, tmp_path):
 def test_serving_engine_cache_reuse_and_invalidation(spark, tmp_path):
     """The version-keyed engine cache (shard/cache/manager.go analogue):
     repeated searches on an unchanged collection reuse one engine; DML
-    rotates it via the version bump; an index build invalidates it
-    explicitly (builds write into the CURRENT version's idx dir, so the
-    version alone wouldn't catch them)."""
+    rotates it via the version bump; so does an index build, which
+    commits a new snapshot naming the new artifact."""
     coll = Collection.create(spark, str(tmp_path / "ecoll"), SCHEMA, num_buckets=4)
     coll.insert(_points(spark, 10))
     req = {"query": {"property": "vec", "vectorFlat": {
@@ -711,8 +774,8 @@ def test_serving_engine_cache_reuse_and_invalidation(spark, tmp_path):
     assert coll._engine_cache is not eng
     assert r1[0] not in r2
 
-    # text-index build writes into the current version's idx dir; the cache
-    # must still rotate so the persisted index is picked up
+    # a text-index build commits a new version, so the cache rotates and
+    # the persisted index is picked up
     tcoll = Collection.create(
         spark, str(tmp_path / "tcoll"),
         {"text": {"type": "text", "text": {"analyser": "standard"}}},
@@ -724,8 +787,9 @@ def test_serving_engine_cache_reuse_and_invalidation(spark, tmp_path):
     tcoll.search({"query": {"property": "text", "text": {
         "operator": "containsAny", "value": "spark", "limit": 5}}}).collect()
     eng2 = tcoll._engine_cache
+    v_before = tcoll._current_version()
     tcoll.build_text_index("text")
-    assert tcoll._engine_cache is None, "index build must invalidate the engine"
+    assert tcoll._current_version() == v_before + 1
     res = tcoll.search({"query": {"property": "text", "text": {
         "operator": "containsAny", "value": "spark", "limit": 5}}})
     assert res.count() == 4
@@ -829,8 +893,10 @@ def test_refresh_text_index_incremental(spark, tmp_path):
     assert "d3" not in indexed and not (indexed & set(emptied))
     assert {"d1", "d5"} <= indexed
     coll.build_text_index("text")  # from-scratch rebuild of the same snapshot
-    assert refreshed == _postings(spark, path)
-    assert refreshed_stats == _doc_stats(path)
+    rebuilt = coll._index_path("text")
+    assert rebuilt != path
+    assert refreshed == _postings(spark, rebuilt)
+    assert refreshed_stats == _doc_stats(rebuilt)
     num_docs, bucket_docs = refreshed_stats
     assert num_docs == len(indexed) == sum(bucket_docs.values())
     assert bucket_docs[str(bucket_of["d0"])] == 0
@@ -900,8 +966,9 @@ def test_refresh_text_index_keeps_build_layout(spark, tmp_path):
     assert not set(built.values()) & set(coll._manifest().values())
     refreshed, refreshed_stats = _postings(spark, path), _doc_stats(path)
     coll.build_text_index("text")
-    assert refreshed == _postings(spark, path)
-    assert refreshed_stats == _doc_stats(path)
+    rebuilt = coll._index_path("text")
+    assert refreshed == _postings(spark, rebuilt)
+    assert refreshed_stats == _doc_stats(rebuilt)
 
 
 def test_refresh_text_index_without_bucket_docs_rebuilds(spark, tmp_path):
@@ -928,8 +995,9 @@ def test_refresh_text_index_without_bucket_docs_rebuilds(spark, tmp_path):
     refreshed, refreshed_stats = _postings(spark, path), _doc_stats(path)
     assert n_fresh == len(refreshed)  # every posting was re-tokenized
     coll.build_text_index("text")
-    assert refreshed == _postings(spark, path)
-    assert refreshed_stats == _doc_stats(path)
+    rebuilt = coll._index_path("text")
+    assert refreshed == _postings(spark, rebuilt)
+    assert refreshed_stats == _doc_stats(rebuilt)
     assert refreshed_stats[0] == 11 == sum(refreshed_stats[1].values())
 
 
@@ -1244,14 +1312,9 @@ def test_vamana_search_local_quantized_route(spark, tmp_path):
         [Row(_id=f"p{i:03d}", v=[float(x) for x in X[i]]) for i in range(160)]
     ))
     coll.build_vamana_index("v", num_shards=2, seed=3)
-    import json as _json
-    import os as _os
 
-    idx_path = _os.path.join(
-        coll.path, f"v{coll._current_version()}_idx", "vamana_v"
-    )
-    with open(_os.path.join(idx_path, "_graph.json")) as f:
-        assert _json.load(f)["packed_codes"] == "bq"  # codes really baked
+    _, meta = coll._vamana_artifact("v")
+    assert meta["packed_codes"] == "bq"  # codes really baked
     for qi in (9, 77, 130):
         qv = [float(x) for x in X[qi]]
         want = [
@@ -1315,10 +1378,7 @@ def test_refresh_vamana_auto_routes_bulk_to_rebuild(spark, tmp_path):
     assert n == n_bulk
 
     # post-state: fresh-build invariants on the rebuilt artifact
-    path = os.path.join(
-        coll.path, f"v{coll._current_version()}_idx", "vamana_v")
-    with open(os.path.join(path, "_graph.json")) as f:
-        meta = json.load(f)
+    path, meta = coll._vamana_artifact("v")
     assert meta.get("num_shards") == 2 and meta.get("build_seed") == 7
     edges = spark.read.parquet(os.path.join(path, "edges"))
     deg = edges.groupBy("src").count().agg(F.max("count")).collect()[0][0]

@@ -786,153 +786,46 @@ def test_text_serve_local_mixed_stats_rowgroups_must_read(products, tmp_path):
     assert len(text_serve_local(path, "gandalf", "containsAny", num_docs=n_docs + 1))
 
 
-def test_text_serve_local_cache_invalidated_on_rebuild(products, tmp_path):
-    """Rebuilding the artifact in-place (write.mode("overwrite") at the same
-    path — exactly what Collection.build_text_index does) must invalidate
-    the driver-local dataset + row-group caches: the next text_serve_local
-    serves the NEW postings instead of stale ones off pinned ParquetFile
-    handles (ADVICE r6)."""
-    import os
-    import time
+def test_text_serve_local_cache_invalidated_on_rebuild(spark, tmp_path):
+    """A rebuild through the collection lands at a NEW path named by a new
+    snapshot, so the driver-local dataset + row-group caches (keyed by path
+    alone) never serve stale postings: the next read resolves the new
+    artifact, while the old path keeps serving exactly what it held."""
+    from pyspark.sql import Row
 
-    from pyspark.sql import functions as F
+    from semadb_spark import Collection
+    from semadb_spark.operators.text_search import text_serve_local
 
-    from semadb_spark.functions.hashing import md5_hash64
-    from semadb_spark.operators.text_search import (
-        TERM_BUCKETS,
-        build_text_index,
-        text_serve_local,
-    )
+    schema = {"body": {"type": "text", "text": {"analyser": "standard"}}}
+    coll = Collection.create(spark, str(tmp_path / "rebuild"), schema,
+                             num_buckets=2)
+    docs = ["red wizard hat gandalf", "warm winter coat gandalf wizard",
+            "plain cap", "blue walking shoe"]
+    coll.insert(spark.createDataFrame(
+        [Row(_id=f"d{i}", body=t) for i, t in enumerate(docs)]
+    ))
+    coll.build_text_index("body")
+    old = coll._index_path("body")
+    req = {"query": {"property": "body", "text": {
+        "operator": "containsAny", "value": "gandalf", "limit": 10}}}
+    first = text_serve_local(old, "gandalf", "containsAny", num_docs=4)
+    assert sorted(first["id"]) == ["d0", "d1"]
+    assert sorted(coll.search_local(req)["_id"]) == ["d0", "d1"]
 
-    path = str(tmp_path / "postings_rebuild")
-
-    def write(df):
-        idx = build_text_index(df, "description")
-        (
-            idx.withColumn(
-                "term_bucket",
-                F.pmod(md5_hash64(F.col("term")), F.lit(TERM_BUCKETS)),
-            )
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(path)
-        )
-        return idx.select("id").distinct().count()
-
-    n1 = write(products)
-    first = text_serve_local(path, "gandalf", "containsAny", num_docs=n1)
-    assert len(first) > 0
-    # rebuild over a corpus where the term is gone
-    scrubbed = products.withColumn(
-        "description", F.regexp_replace("description", "(?i)gandalf", "nobody")
-    )
-    n2 = write(scrubbed)
-    # _SUCCESS mtime_ns is the cache fingerprint; force a bump in case the
-    # filesystem's mtime granularity makes both writes land on one tick
-    os.utime(os.path.join(path, "_SUCCESS"))
-    time.sleep(0.01)
-    # the fingerprint walk runs at most once per _FP_TTL_SEC (r10, the
-    # same trade the vector tier made in r9); a serve inside the TTL
-    # window may still see the old artifact — model the TTL elapsing
-    from semadb_spark.operators import text_search as ts
-
-    ts._FP_AT.pop(path, None)  # = TTL elapsed
-    second = text_serve_local(path, "gandalf", "containsAny", num_docs=n2)
-    assert len(second) == 0, "stale postings served after in-place rebuild"
-    assert len(text_serve_local(path, "nobody", "containsAny", num_docs=n2)) > 0
-
-
-def test_fingerprint_lapsed_ttl_starts_one_refresh(monkeypatch):
-    """16 threads reading one lapsed fingerprint start exactly one
-    background refresh, and every thread gets the last fingerprint back
-    without waiting for the walk. The refreshing set's membership test
-    yields the GIL after reading, which opens any check-then-add race to
-    every thread."""
-    import threading
-    import time
-
-    from semadb_spark.operators import _pool
-
-    class YieldingSet(set):
-        def __contains__(self, item):
-            found = super().__contains__(item)
-            time.sleep(0.005)
-            return found
-
-    monkeypatch.setattr(_pool, "_FP_REFRESHING", YieldingSet())
-    walks = []
-    release = threading.Event()
-
-    def walk(path):
-        walks.append(path)
-        release.wait(5)
-        return 2
-
-    # lapsed (age > ttl) but inside the 10x-ttl hard cap
-    cache = {"art": (time.monotonic() - 5.0, 1)}
-    barrier = threading.Barrier(16)
-    got = []
-
-    def client():
-        barrier.wait()
-        got.append(_pool.cached_fingerprint(cache, "art", 1.0, walk))
-
-    threads = [threading.Thread(target=client) for _ in range(16)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(10)
-    release.set()
-    deadline = time.monotonic() + 5
-    while "art" in _pool._FP_REFRESHING and time.monotonic() < deadline:
-        time.sleep(0.01)
-    assert got == [1] * 16
-    assert walks == ["art"]
-    assert cache["art"][1] == 2 and "art" not in _pool._FP_REFRESHING
-
-
-def test_fingerprint_refresh_thread_start_failure_frees_path(monkeypatch):
-    """A refresh thread that fails to start must not leave its path marked
-    as refreshing, or that artifact would never be re-walked again."""
-    import threading
-    import time
-
-    from semadb_spark.operators import _pool
-
-    def fail(self):
-        raise RuntimeError("can't start new thread")
-
-    # lapsed (age > ttl) but inside the 10x-ttl hard cap
-    cache = {"art": (time.monotonic() - 5.0, 1)}
-    monkeypatch.setattr(threading.Thread, "start", fail)
-    with pytest.raises(RuntimeError):
-        _pool.cached_fingerprint(cache, "art", 1.0, lambda p: 2)
-    monkeypatch.undo()
-    assert "art" not in _pool._FP_REFRESHING
-
-
-def test_fingerprint_past_age_cap_walks_synchronously(tmp_path):
-    """After an idle gap longer than 10x the TTL, the next call walks the
-    listing itself and returns the new fingerprint instead of serving the
-    stale one while a background refresh runs."""
-    import os
-    import time
-
-    from semadb_spark.operators import _pool
-
-    def walk(p):
-        return sorted(os.listdir(p))
-
-    art = tmp_path / "art"
-    art.mkdir()
-    (art / "part-0").write_bytes(b"x")
-    cache: dict = {}
-    ttl = 0.02
-    assert _pool.cached_fingerprint(cache, str(art), ttl, walk) == ["part-0"]
-    (art / "part-1").write_bytes(b"y")
-    time.sleep(10 * ttl + 0.05)
-    got = _pool.cached_fingerprint(cache, str(art), ttl, walk)
-    assert got == ["part-0", "part-1"]
+    # scrub the term, then rebuild through the collection
+    coll.update(spark.createDataFrame(
+        [Row(_id="d0", body="red wizard hat nobody"),
+         Row(_id="d1", body="warm winter coat nobody wizard")]
+    ))
+    coll.build_text_index("body")
+    new = coll._index_path("body")
+    assert new != old
+    assert len(text_serve_local(new, "gandalf", "containsAny", num_docs=4)) == 0
+    assert len(text_serve_local(new, "nobody", "containsAny", num_docs=4)) == 2
+    assert len(coll.search_local(req)) == 0, "stale postings served after rebuild"
+    # the old artifact was never rewritten
+    again = text_serve_local(old, "gandalf", "containsAny", num_docs=4)
+    assert again.equals(first)
 
 
 def test_text_search_batch_candidate_filter_parity(products):
@@ -1069,7 +962,6 @@ def test_quantizer_drift_errors_not_degrades(spark, tmp_path):
     resolving as the highest version), serving must ERROR, not silently
     score ADC against the wrong LUTs. Both engine surfaces check the
     fingerprint recorded at pack time."""
-    import glob
     import json
     import os
 
@@ -1099,16 +991,13 @@ def test_quantizer_drift_errors_not_degrades(spark, tmp_path):
     assert coll.search(query).count() > 0  # matching fit serves fine
 
     # tamper: the resolved frozen fit drifts away from the baked one
-    [qmeta_path] = glob.glob(
-        os.path.join(str(tmp_path / "drift"), "v*_idx", "quant_v",
-                     "_quantizer.json")
-    )
+    qmeta_path = os.path.join(coll._qindex_path("v"), "_quantizer.json")
     with open(qmeta_path) as f:
         qmeta = json.load(f)
     qmeta["thresholds"] = [t + 10.0 for t in qmeta["thresholds"]]
     with open(qmeta_path, "w") as f:
         json.dump(qmeta, f)
-    coll._invalidate_engine()
+    coll = Collection.open(spark, coll.path)
 
     with _pytest.raises(ValueError, match="quantizer drift"):
         coll.search(query).collect()

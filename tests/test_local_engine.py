@@ -680,7 +680,7 @@ def test_ivf_local_route_parity(spark, tmp_path, monkeypatch):
     # filtered BROAD (threshold shrunk on both tiers): engine probes with
     # candidate_ids, local probes ∩ candidates — same optimistic recall
     monkeypatch.setattr(logical_mod, "FILTERED_EXACT_FALLBACK_ROWS", 3)
-    coll._invalidate_engine()
+    coll = Collection.open(spark, coll.path)
     assert_parity(coll, {"query": {"property": "v", "vectorVamana": {
         "vector": qv, "limit": 6, "filter": {"property": "n", "integer": {
             "operator": "lessThan", "value": 10}}}}, "limit": 6})
@@ -707,7 +707,7 @@ def test_ivf_plus_graph_broad_filter_falls_back(spark, tmp_path, monkeypatch):
     coll.build_vamana_index("v", num_shards=2, seed=5)
     coll.build_vector_index("v", nlist=8)
     monkeypatch.setattr(logical_mod, "FILTERED_EXACT_FALLBACK_ROWS", 3)
-    coll._invalidate_engine()
+    coll = Collection.open(spark, coll.path)
     req = {"query": {"property": "v", "vectorVamana": {
         "vector": [float(x) for x in X[5]], "limit": 5,
         "filter": {"property": "n", "integer": {

@@ -73,7 +73,6 @@ def _write_fake_packed(path: str, *, cents: int = 1, n: int = 500,
 
 def _drop_local_state(path: str) -> None:
     V._LOCAL_PACKED_CACHE.pop(path, None)
-    V._LOCAL_PACKED_FP_AT.pop(path, None)
     shm = V._SHM_ATTACHED.pop(path, None)
     if shm is not None:
         try:
@@ -151,6 +150,25 @@ def test_export_oversized_stays_lazy(tmp_path):
     _write_fake_packed(path, cents=3, n=20, d=4)
     assert V.export_packed_shared(path, max_cents=2) is None
     _drop_local_state(path)
+
+
+def test_packed_cache_holds_at_most_cap_paths(tmp_path):
+    """Every build names a new packed path; serving more paths than the cap
+    in one process keeps only the most recently used ones decoded."""
+    from semadb_spark.operators._pool import MAX_CACHED_ARTIFACTS
+
+    paths = [str(tmp_path / f"packed_{k}")
+             for k in range(MAX_CACHED_ARTIFACTS + 2)]
+    for path in paths:
+        _write_fake_packed(path, cents=1, n=20, d=4)
+        got = V._local_decoded_cents(path, [0], np.dtype("float32"),
+                                     np.dtype("float32"))
+        assert len(got[0]) == 1
+    assert len(V._LOCAL_PACKED_CACHE) <= MAX_CACHED_ARTIFACTS
+    assert paths[-1] in V._LOCAL_PACKED_CACHE
+    assert paths[0] not in V._LOCAL_PACKED_CACHE
+    for path in paths:
+        _drop_local_state(path)
 
 
 def _child_measure(path, mode, shm_name, manifest, q):

@@ -867,7 +867,7 @@ def test_vamana_serve_local_matches_packed(spark, emb, tmp_path):
     """The driver-local point-read path (NO Spark job) reproduces
     vamana_serve_packed exactly — same ids, same distances, same
     tiebreaks — over the same persisted artifact, at several nprobe
-    settings; the decoded-shard cache invalidates on artifact rewrite."""
+    settings; a collection rebuild is served from its new path."""
     import os
 
     index = vm.vamana_build(
@@ -902,19 +902,34 @@ def test_vamana_serve_local_matches_packed(spark, emb, tmp_path):
                 )
             ]
             assert got == want, (nprobe, qi)
-    # artifact rewrite invalidates the decoded cache once the fingerprint
-    # TTL lapses (the listing walk runs at most once per _FP_TTL_SEC; a
-    # serve inside the TTL window may still see the old artifact — the
-    # documented trade for not paying a 3000-file walk per point-read)
-    assert d in vm._LOCAL_PACKED_CACHE
-    old_fp = vm._LOCAL_PACKED_CACHE[d][0]
-    vm.vamana_pack(index.shard_nodes, index.shard_edges, dtype="float32") \
-        .write.mode("overwrite").partitionBy("cent").parquet(d)
-    vm._LOCAL_PACKED_FP_AT.pop(d, None)  # = TTL elapsed
-    qv = [float(x) for x in rows[0]["v"]]
-    vm.vamana_serve_local(d, qv, 5, metric="euclidean", search_size=40,
-                          centroids=index.centroids, dtype="float32")
-    assert vm._LOCAL_PACKED_CACHE[d][0] != old_fp
+    # a rebuild through a collection lands at a NEW packed path, so the
+    # decoded cache (keyed by path alone) serves the new version
+    from pyspark.sql import Row
+
+    from semadb_spark import Collection
+
+    rng = np.random.RandomState(4)
+    X = rng.normal(size=(150, 8))
+    coll = Collection.create(spark, str(tmp_path / "rebuilt"), {"v": {
+        "type": "vectorVamana", "vectorVamana": {
+            "vectorSize": 8, "distanceMetric": "euclidean",
+            "searchSize": 40, "degreeBound": 32, "alpha": 1.2}}},
+        num_buckets=2)
+    coll.insert(spark.createDataFrame(
+        [Row(_id=f"p{i:03d}", v=[float(x) for x in X[i]]) for i in range(150)]
+    ))
+    coll.build_vamana_index("v", num_shards=2, seed=5)
+    old, _ = coll._vamana_artifact("v")
+    qv = [float(x) + 0.01 for x in X[7]]
+    assert coll.vamana_search_local("v", qv, 3, nprobe=2)[0][0] == "p007"
+    coll.insert(spark.createDataFrame([Row(_id="twin", v=qv)]))
+    coll.build_vamana_index("v", num_shards=2, seed=5)
+    new, _ = coll._vamana_artifact("v")
+    assert new != old
+    hits = coll.vamana_search_local("v", qv, 3, nprobe=2)
+    assert hits[0][0] == "twin" and hits[0][1] < 1e-9
+    assert all(os.path.join(p, "packed") in vm._LOCAL_PACKED_CACHE
+               for p in (old, new))
     with pytest.raises(ValueError, match="centroids"):
         vm.vamana_serve_local(d, qv, 5)
     index.edges.unpersist()
