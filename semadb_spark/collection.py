@@ -326,11 +326,30 @@ class Collection:
         v = self._current_version() if version is None else version
         with open(os.path.join(self._data_path(v), _MANIFEST_FILE)) as f:
             snap = json.load(f)
-        # a manifest written before the artifact map names no artifacts
         snap.setdefault("data", v)
-        snap.setdefault("artifacts", {})
+        if "artifacts" not in snap:
+            snap["artifacts"] = self._legacy_artifacts(v)
         snap["version"] = v
         return snap
+
+    def _legacy_artifacts(self, v: int) -> dict:
+        """Artifact map of a manifest written before the map existed. Such
+        a collection committed a version only for a data write, and built
+        each index in place under the version it indexed, so each index's
+        newest ``v{k}_idx/<tag>`` with ``k <= v`` is its last build and
+        indexes data ``k``. The next commit writes this map out."""
+        import re
+
+        found: dict[str, dict] = {}
+        for entry in os.listdir(self.path):
+            m = re.fullmatch(r"v(\d+)_idx", entry)
+            if not m or int(m.group(1)) > v:
+                continue
+            k = int(m.group(1))
+            for tag in os.listdir(os.path.join(self.path, entry)):
+                if found.get(tag, {"data": -1})["data"] < k:
+                    found[tag] = {"path": f"{entry}/{tag}", "data": k}
+        return found
 
     def _manifest(self, version: int | None = None) -> dict[str, str]:
         return self._snapshot(version)["buckets"]
@@ -456,29 +475,38 @@ class Collection:
     def vacuum(self, keep_versions: int = 1) -> list[int]:
         """S7 backup rotation: snapshot versions double as backups
         (utils/backup.go keeps N timestamped copies; here, versions), and
-        vacuum is the rotation. Retains the last ``keep_versions`` manifests
+        vacuum is the rotation. Retains every manifest of the last
+        ``keep_versions`` data generations (index builds and refreshes
+        commit versions too, but a backup is a generation of the data),
         plus every older version dir a retained manifest still references
-        (bucket pointers carry forward across DML, and a live artifact's
-        data generation), and every artifact dir a retained manifest names
-        as LIVE; deletes the rest. Index artifacts serve only the data they
-        index, so a last-built artifact that no retained manifest serves
-        goes too, and a later refresh asks for a build first. Returns the
-        version numbers whose dirs (data or artifact) were removed."""
+        (bucket pointers carry forward across DML), and every artifact dir
+        a retained manifest names as LIVE; deletes the rest. Index
+        artifacts serve only the data they index, so a last-built artifact
+        that no retained manifest serves goes too, and a later refresh asks
+        for a build first. Returns the version numbers whose dirs (data or
+        artifact) were removed."""
         import re
         import shutil
 
-        cur = self._current_version()
         keep_dirs: set[str] = set()
         live: set[str] = set()
-        for v in range(max(0, cur - int(keep_versions) + 1), cur + 1):
+        generations: set[int] = set()
+        v = self._current_version()
+        while v >= 0 and os.path.exists(
+            os.path.join(self._data_path(v), _MANIFEST_FILE)
+        ):
             snap = self._snapshot(v)
+            if snap["data"] not in generations:
+                if len(generations) >= int(keep_versions):
+                    break
+                generations.add(snap["data"])
             keep_dirs.add(f"v{v}")
-            keep_dirs.add(f"v{snap['data']}")
             keep_dirs.update(p.split("/", 1)[0] for p in snap["buckets"].values())
             live.update(
                 a["path"] for a in snap["artifacts"].values()
                 if a["data"] == snap["data"]
             )
+            v -= 1
         removed: set[int] = set()
         for entry in os.listdir(self.path):
             m = re.fullmatch(r"v(\d+)(_idx)?", entry)

@@ -22,24 +22,29 @@ from collections import OrderedDict
 MAX_CACHED_ARTIFACTS = 4
 """Artifact paths each driver-local serve cache holds at once. Every build,
 refresh and DML snapshot names a new path, so a long-lived server would
-otherwise keep one entry per artifact generation it ever served."""
+otherwise keep one entry per artifact generation it ever served. One
+engine therefore serves at most this many text (or packed graph) paths
+per cache without re-opening them; past it, a snapshot's paths evict one
+another. Pinned entries (:meth:`ArtifactLru.pin`) do not count."""
 
 
 class ArtifactLru:
-    """``path -> value`` for at most ``size`` artifact paths, the least
-    recently used dropped first and handed to ``close``. Paths are
-    immutable (an artifact directory is never rewritten once a snapshot
-    names it), so a hit never needs re-validating. Safe to share across
-    threads."""
+    """``path -> value`` for at most ``MAX_CACHED_ARTIFACTS`` artifact
+    paths, the least recently used dropped first and handed to ``close``,
+    plus any pinned entries, which are never dropped. Paths are immutable
+    (an artifact directory is never rewritten once a snapshot names it), so
+    a hit never needs re-validating. Safe to share across threads."""
 
-    def __init__(self, close=None, size: int = MAX_CACHED_ARTIFACTS):
+    def __init__(self, close=None):
         self._items: OrderedDict = OrderedDict()
+        self._pinned: dict = {}
         self._lock = threading.Lock()
         self._close = close
-        self.size = int(size)
 
     def __getitem__(self, path):
         with self._lock:
+            if path in self._pinned:
+                return self._pinned[path]
             self._items.move_to_end(path)  # KeyError when absent
             return self._items[path]
 
@@ -51,24 +56,35 @@ class ArtifactLru:
 
     def __setitem__(self, path, value) -> None:
         with self._lock:
+            self._pinned.pop(path, None)
             self._items[path] = value
             self._items.move_to_end(path)
             dropped = []
-            while len(self._items) > self.size:
+            while len(self._items) > MAX_CACHED_ARTIFACTS:
                 dropped.append(self._items.popitem(last=False)[1])
         if self._close is not None:
             for value in dropped:
                 self._close(value)
 
+    def pin(self, path, value) -> None:
+        """Hold ``value`` for ``path`` until :meth:`pop`, outside the LRU
+        bound: for state whose lifetime the owner bounds, such as a pool
+        worker's views into a shared-memory segment of its pinned
+        snapshot, which eviction would replace by a private re-decode."""
+        with self._lock:
+            self._items.pop(path, None)
+            self._pinned[path] = value
+
     def pop(self, path, default=None):
         with self._lock:
-            return self._items.pop(path, default)
+            pinned = self._pinned.pop(path, default)
+            return self._items.pop(path, pinned)
 
     def __contains__(self, path) -> bool:
-        return path in self._items
+        return path in self._items or path in self._pinned
 
     def __len__(self) -> int:
-        return len(self._items)
+        return len(self._items) + len(self._pinned)
 
 
 def choose_start_method() -> str:

@@ -2247,10 +2247,10 @@ def _local_decoded_cents(path: str, cents_needed: list[int], np_dtype,
     to the COMPUTE dtype at decode time (per-query float16->float32 casts
     cost ~ms each otherwise). The cache keys on the artifact path, which
     is immutable, and holds the ``MAX_CACHED_ARTIFACTS`` most recently
-    served paths; within a path it FIFO-evicts whole cent entries past
-    ``max_cached_cents`` (a hot serving node keeps its working set
-    decoded, exactly like the reference's shard decode cache,
-    cache/manager.go:39-303)."""
+    served paths besides those attached to shared memory; within a path
+    it FIFO-evicts whole cent entries past ``max_cached_cents`` (a hot
+    serving node keeps its working set decoded, exactly like the
+    reference's shard decode cache, cache/manager.go:39-303)."""
     import pyarrow.dataset as pads
 
     hit = _LOCAL_PACKED_CACHE.get(path)
@@ -2540,7 +2540,9 @@ def attach_packed_shared(path: str, shm_name: str, manifest: dict) -> int:
                 _view(a["id_order"]), code_state,
             ))
         cache[int(cent)] = shards
-    _LOCAL_PACKED_CACHE[path] = (manifest["c_dtype"], cache)
+    # pinned: the worker serves this path for its life, and an eviction
+    # would turn the shared views into a private re-decode
+    _LOCAL_PACKED_CACHE.pin(path, (manifest["c_dtype"], cache))
     return len(cache)
 
 

@@ -497,6 +497,66 @@ def test_vacuum_keeps_only_artifacts_a_kept_snapshot_serves(spark, tmp_path):
     assert coll.count() == 3
 
 
+def test_vacuum_keep_versions_counts_data_generations(spark, tmp_path):
+    """keep_versions counts generations of the data, not commits: an index
+    build or refresh commits a version but keeps the data, so it must not
+    push an older data generation, or the artifact serving it, out."""
+    import os
+
+    schema = {"text": {"type": "text", "text": {"analyser": "standard"}}}
+    coll = Collection.create(spark, str(tmp_path / "vacgen"), schema, num_buckets=2)
+    coll.insert(spark.createDataFrame([Row(_id="d0", text="spark doc0")]))
+    coll.build_text_index("text")
+    first_snap = coll._snapshot()
+    first = coll._index_path("text")
+    coll.insert(spark.createDataFrame([Row(_id="d1", text="spark doc1")]))
+    coll.refresh_text_index("text")
+    assert coll.vacuum(keep_versions=2) == [0]
+    assert os.path.exists(first)
+    assert coll._index_path("text", coll._snapshot(first_snap["version"])) == first
+    assert first_snap["version"] in coll.vacuum(keep_versions=1)
+    assert not os.path.exists(first)
+    assert coll.count() == 2
+
+
+def test_manifest_without_artifact_map_adopts_built_indexes(spark, tmp_path):
+    """A collection written before manifests named artifacts built each
+    index in place under the version it indexed. Its indexes keep serving,
+    and the next DML plus refresh rolls them forward instead of asking for
+    a build."""
+    import json
+    import os
+    import shutil
+
+    path = str(tmp_path / "legacy")
+    schema = {"text": {"type": "text", "text": {"analyser": "standard"}}}
+    coll = Collection.create(spark, path, schema, num_buckets=2)
+    coll.insert(spark.createDataFrame([Row(_id="d0", text="spark doc0")]))
+    v = coll._current_version()
+    coll.build_text_index("text")
+    # rewrite into the old layout: the index under v{v}_idx, no build
+    # commit, and a manifest holding only its bucket map
+    os.rename(os.path.join(path, f"v{v + 1}_idx"), os.path.join(path, f"v{v}_idx"))
+    shutil.rmtree(os.path.join(path, f"v{v + 1}"))
+    with open(os.path.join(path, "_current"), "w") as f:
+        f.write(str(v))
+    manifest = os.path.join(path, f"v{v}", "_manifest.json")
+    with open(manifest) as f:
+        buckets = json.load(f)["buckets"]
+    with open(manifest, "w") as f:
+        json.dump({"buckets": buckets}, f)
+
+    legacy = Collection.open(spark, path)
+    assert legacy._index_path("text") == os.path.join(path, f"v{v}_idx", "text_text")
+    req = {"query": {"property": "text", "text": {
+        "operator": "containsAny", "value": "spark", "limit": 5}}}
+    assert sorted(legacy.search_local(req)["_id"]) == ["d0"]
+    legacy.insert(spark.createDataFrame([Row(_id="d1", text="spark doc1")]))
+    assert legacy._index_path("text") is None
+    assert legacy.refresh_text_index("text") > 0
+    assert sorted(legacy.search_local(req)["_id"]) == ["d0", "d1"]
+
+
 def test_refresh_vector_index_incremental(spark, tmp_path):
     # W4: after DML, refresh_vector_index rolls the IVF artifact forward
     # with frozen centroids, re-assigning ONLY rows in dirty buckets.

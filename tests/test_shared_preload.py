@@ -171,6 +171,32 @@ def test_packed_cache_holds_at_most_cap_paths(tmp_path):
         _drop_local_state(path)
 
 
+def test_attached_path_outlives_cap_evictions(tmp_path):
+    """A path attached to a shared segment stays served from the shared
+    views however many other paths pass through the bounded cache: an
+    eviction would turn it into a private re-decode."""
+    from semadb_spark.operators._pool import MAX_CACHED_ARTIFACTS
+
+    shared = str(tmp_path / "packed_shared")
+    _write_fake_packed(shared, cents=1, n=50, d=4)
+    shm_name, manifest = V.export_packed_shared(shared)
+    V.attach_packed_shared(shared, shm_name, manifest)
+    others = [str(tmp_path / f"packed_{k}")
+              for k in range(MAX_CACHED_ARTIFACTS + 1)]
+    for path in others:
+        _write_fake_packed(path, cents=1, n=20, d=4)
+        V._local_decoded_cents(path, [0], np.dtype("float32"),
+                               np.dtype("float32"))
+    assert others[0] not in V._LOCAL_PACKED_CACHE
+    assert len(V._LOCAL_PACKED_CACHE) == MAX_CACHED_ARTIFACTS + 1
+    got = V._local_decoded_cents(shared, [0], np.dtype("float32"),
+                                 np.dtype("float32"))
+    assert not got[0][0][1].flags.writeable  # still the shared views
+    for path in others + [shared]:
+        _drop_local_state(path)
+    V.release_packed_shared(shm_name)
+
+
 def _child_measure(path, mode, shm_name, manifest, q):
     """Fork child: measure USS growth of making the artifact resident via
     `mode` ('attach' = shared views, 'private' = per-worker decode)."""

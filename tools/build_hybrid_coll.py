@@ -25,7 +25,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_HYBRID_ROWS", 200_000))
 DIM = 64
-VERSION = 6  # v6: clustered vectors (v5's uniform hash-vectors were an
+VERSION = 7  # v7: the snapshot manifest names the index artifacts; a
+# v6 collection's manifests predate the map, so it is rebuilt rather than
+# served through the adopted-legacy path.
+# v6: clustered vectors (v5's uniform hash-vectors were an
 # adversarial IVF workload — no cluster structure, so cent routing was
 # near-random: beam recall 0.27 @ nprobe 1 / 0.57 @ nprobe 5 vs the
 # full-probe beam. The serving rows exist to measure the TIERS, not an
